@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Table readers + shared helpers for all queries.
@@ -60,42 +64,136 @@ object Tables {
     }
   }
 
+  // ─────────────── pinned-state ownership ───────────────
+  //
+  // Every checkpoint the engine pins belongs to exactly one owner, and
+  // owners are released explicitly. The contract: a thread that
+  // re-invokes query X has finished with its previous X result; other
+  // threads' results are released only by [[clearCaches]].
+
+  /** The checkpoint RDDs pinned on behalf of one owner, released
+    * together. Ids, not RDD references: the context tracks persisted
+    * RDDs weakly, and an owner must not keep a dead lineage reachable. */
+  private final class Owner(sc: SparkContext) {
+    private val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    def add(id: Int): Unit = ids.add(id)
+    def release(blocking: Boolean): Unit = {
+      val live = sc.getPersistentRDDs
+      ids.asScala.foreach(id => live.get(id).foreach(rdd =>
+        try rdd.unpersist(blocking)
+        catch { case scala.util.control.NonFatal(_) => () }))
+      ids.clear()
+    }
+  }
+
+  /** The owner of this thread's pins; null means the session owner. */
+  private val currentOwner = new ThreadLocal[Owner]
+
+  /** Pins that outlive invocations: memo builds and direct calls that
+    * bypass [[SparkEntry.queries]], one owner per application. */
+  private val sessionOwners =
+    new java.util.concurrent.ConcurrentHashMap[String, Owner]()
+
+  /** Per-invocation owners keyed by (applicationId, query id, thread). */
+  private val invocationOwners =
+    new java.util.concurrent.ConcurrentHashMap[
+      (String, String, Thread), Owner]()
+
+  private def withOwner[T](owner: Owner)(body: => T): T = {
+    val prev = currentOwner.get
+    currentOwner.set(owner)
+    try body finally currentOwner.set(prev)
+  }
+
+  /** The engine's only `Dataset.localCheckpoint` call: checkpoints `ds`
+    * and records the returned plan's checkpoint RDD in the current
+    * owner — the running invocation, or the session owner inside a memo
+    * build or outside any invocation. Persisted memo buffers are never
+    * recorded: [[clearCaches]] releases them through their DataFrames. */
+  def localCheckpoint[T](ds: Dataset[T], eager: Boolean = true): Dataset[T] = {
+    val out = ds.localCheckpoint(eager)
+    val sc = ds.sparkSession.sparkContext
+    val owner = Option(currentOwner.get).getOrElse(sessionOwners
+      .computeIfAbsent(sc.applicationId, _ => new Owner(sc)))
+    out.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd.id }
+      .foreach(owner.add)
+    out
+  }
+
+  /** Runs one [[SparkEntry.queries]] invocation under a fresh owner.
+    * First releases the previous owner of the same (application, query,
+    * thread), plus any owner of the same query whose thread has exited:
+    * a single-threaded caller keeps at most one live copy per query, and
+    * concurrent callers never free each other's blocks. No lock is held
+    * around the build. */
+  private[graft] def invocation[T](spark: SparkSession, query: String)(
+      body: => T): T = {
+    val sc = spark.sparkContext
+    val me = Thread.currentThread
+    invocationOwners.keySet.asScala.foreach { case k @ (app, q, t) =>
+      if (app == sc.applicationId && q == query && (t == me || !t.isAlive))
+        Option(invocationOwners.remove(k)).foreach(_.release(blocking = false))
+    }
+    val owner = new Owner(sc)
+    invocationOwners.put((sc.applicationId, query, me), owner)
+    withOwner(owner)(body)
+  }
+
+  /** Starts `body` on a new named daemon thread under the calling
+    * thread's owner (captured here: a thread-local does not reach other
+    * threads). The returned function joins the thread and returns its
+    * result, rethrowing its exception. */
+  private[graft] def fork[T](name: String)(body: => T): () => T = {
+    val owner = currentOwner.get
+    var out: Either[Throwable, T] = null
+    val t = new Thread(() => {
+      out = try Right(withOwner(owner)(body))
+        catch { case e: Throwable => Left(e) }
+    }, name)
+    t.setDaemon(true)
+    t.start()
+    () => { t.join(); out.fold(e => throw e, identity) }
+  }
+
+  private val confLock = new Object
+
+  /** Runs `body` with each `key -> value` set on the session conf, then
+    * restores every key, or unsets it if it was unset before. The
+    * session conf is shared by every thread, so all engine toggles take
+    * this one lock: two save/restore pairs on the same key must not
+    * interleave (A saves true, B saves false, A restores true, B
+    * restores false, and the setting stays off). Threads that take no
+    * toggle still see the toggled values while a body runs. No memo
+    * build takes the conf lock, so the lock order is always conf →
+    * memo. */
+  private[graft] def withConf[T](spark: SparkSession, kvs: (String, String)*)(
+      body: => T): T = confLock.synchronized {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  // ─────────────── memo caches ───────────────
+
   /** Atomic memoize-for-persist. `concurrent.Map.getOrElseUpdate` may
     * evaluate the by-name default MORE THAN ONCE under contention — only
     * one value wins the putIfAbsent, and a losing value that was already
     * `.persist()`ed leaks in storage memory with no handle to unpersist
-    * it. Two concurrent first-callers are a real schedule here: ScalaTest
-    * suites share the forked test JVM. Serializing the build closes the
-    * race; the lock is uncontended after first materialization.
+    * it. Serializing the build per cache closes the race; the lock is
+    * uncontended after first materialization. The build pins into the
+    * session owner: a memoized relation outlives the invocation that
+    * built it, so its checkpoints are released only by [[clearCaches]]
+    * (a re-invoking thread has finished with its previous result, not
+    * with the memo).
     */
   private[graft] def memo[T](
       cache: scala.collection.concurrent.TrieMap[String, T],
       key: String)(build: => T): T =
-    cache.synchronized { cache.getOrElseUpdate(key, captureMemoPins(build)) }
-
-  /** RDD ids pinned while building a MEMOIZED relation (the persist
-    * itself plus any loop-internal localCheckpoint living inside the
-    * memoized lineage, e.g. connectedComponents' rounds). These must
-    * survive the per-query slot release in [[trackPins]]: a memoized
-    * DataFrame outlives the invocation that built it, and unpersisting
-    * a localCheckpoint RDD its lineage still references would break it
-    * permanently (checkpoint blocks cannot be recomputed). */
-  private val memoPins =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  private def captureMemoPins[T](build: => T): T =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-      case Some(s) =>
-        val sc = s.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        val out = build
-        sc.getPersistentRDDs.keySet.diff(before).foreach(id =>
-          memoPins.add(id))
-        out
-      case None => build
-    }
-
-  // ─────────────── memo-cache lifecycle (round 11) ───────────────
+    cache.synchronized { cache.getOrElseUpdate(key, withOwner(null)(build)) }
 
   /** Every memoized-DataFrame cache in the engine registers here at
     * object-init, giving [[clearCaches]] a handle on all of them. The
@@ -129,91 +227,16 @@ object Tables {
     c
   }
 
-  // ─────────────── engine-pinned RDD tracking (round 12) ───────────────
-
-  /** RDD ids pinned by ENGINE code — memo persists plus the
-    * loop-internal `localCheckpoint`s inside query builds. The
-    * [[clearCaches]] RDD sweep is scoped to THESE ids only (round-11
-    * advice): the previous blanket `getPersistentRDDs` sweep evicted a
-    * host application's own cached relations, and permanently broke any
-    * host-owned localCheckpointed RDD (checkpoint blocks cannot be
-    * recomputed). Tracking is delta-capture around every engine entry
-    * point — [[SparkEntry.queries]] wraps each query function in
-    * [[trackPins]] — which is sufficient because RDD persistence
-    * registers in `sc.persistentRdds` at the `persist()`/
-    * `localCheckpoint()` CALL (plan construction), not at
-    * materialization, so even lazy checkpoints land inside the window.
-    * Best-effort in a host that persists concurrently INSIDE an engine
-    * call window (such an RDD would be claimed); exact under the
-    * driver's one-shot protocol and any engine-dedicated session. */
-  private val pinnedRddIds = scala.collection.mutable.Set.empty[Int]
-
-  /** Pins recorded per (applicationId, query-slot) by the LAST
-    * invocation — see the release note on [[trackPins]]. */
-  private val slotPins =
-    scala.collection.mutable.HashMap.empty[String, Set[Int]]
-
-  /** Delta-capture the RDDs a query build pins; when `slot` names the
-    * query (SparkEntry passes its id), ALSO release the pins the
-    * PREVIOUS invocation of the same query recorded (minus memo-build
-    * pins, which outlive invocations — see [[memoPins]]). Without the
-    * release, a bench session (3 runs × 418 queries) accumulates one
-    * dead copy of every per-invocation localCheckpoint per run —
-    * round 12 measured the resulting storage/GC churn as multi-second
-    * inflation on otherwise sub-second rows, and round-11 ADVICE
-    * flagged the q_dedup_minhash_w instance of the same leak. */
-  private[graft] def trackPins[T](spark: SparkSession, slot: String = "")(
-      body: => T): T =
-    pinnedRddIds.synchronized {
-      val sc = spark.sparkContext
-      if (slot.nonEmpty) {
-        val key = s"${sc.applicationId}:$slot"
-        // Release ONLY locally-checkpointed RDDs: a memoized relation
-        // whose cache buffer happens to MATERIALIZE inside a query's
-        // construction window (loop queries run actions while building)
-        // registers here without being a memo-build pin, and
-        // unpersisting it would silently demote the shared cache to
-        // recompute-per-use (round 12: q_graph_pagerank 2.9 → 7.3 s
-        // when the first slot-release draft swept minhashPairs' buffer).
-        // Per-invocation localCheckpoints are the only thing a dead
-        // invocation can leak storage through, and a cache buffer is
-        // never checkpointed. (isCheckpointed is also false for a lazy
-        // checkpoint that never materialized — which holds no blocks,
-        // so leaving it pinned costs nothing.)
-        val stale = slotPins.getOrElse(key, Set.empty)
-          .filterNot(memoPins.contains)
-          .filter(id => sc.getPersistentRDDs.get(id)
-            .exists(_.isCheckpointed))
-        stale.foreach { id =>
-          sc.getPersistentRDDs.get(id).foreach { rdd =>
-            try rdd.unpersist(blocking = false)
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
-        pinnedRddIds --= stale
-      }
-      val before = sc.getPersistentRDDs.keySet
-      val out = body
-      val fresh = sc.getPersistentRDDs.keySet.diff(before)
-      pinnedRddIds ++= fresh
-      if (slot.nonEmpty)
-        slotPins(s"${sc.applicationId}:$slot") = fresh.toSet
-      out
-    }
-
-  /** Release every relation the engine has pinned this session: every
-    * registered memo entry is unpersisted and dropped, then any
-    * ENGINE-pinned RDD still cached on the context (the loop-internal
-    * `localCheckpoint`s living inside memoized lineages, which
-    * DataFrame.unpersist cannot reach — identified via [[trackPins]])
-    * is unpersisted too. Host-owned persisted/checkpointed RDDs and
-    * cached relations are NOT touched (round-11 advice: a blanket
-    * sweep permanently broke host localCheckpoints). Call between SF
-    * sweeps in a long-lived session; after the call, previously
-    * returned memoized DataFrames are INVALID (their checkpoint blocks
-    * are gone) — consumers must re-request, which rebuilds from the
-    * parquet sources. The one-shot drivers (Verify/Bench/Smoke) never
-    * need this. */
+  /** Release everything the engine has pinned: every registered memo
+    * entry is unpersisted and dropped, then the session owners and every
+    * invocation owner release their checkpoints. Only engine-owned pins
+    * are touched; a host application's own persisted or checkpointed
+    * RDDs survive. Per the ownership contract this is the only release
+    * of other threads' results and of memoized relations: after the
+    * call, previously returned results are INVALID (their checkpoint
+    * blocks are gone) and consumers must re-request, which rebuilds
+    * from the parquet sources. Call between SF sweeps in a long-lived
+    * session; the one-shot drivers (Verify/Bench/Smoke) never need it. */
   def clearCaches(spark: SparkSession): Unit = dfCaches.synchronized {
     dfCaches.foreach { c =>
       c.values.foreach(df =>
@@ -222,16 +245,10 @@ object Tables {
       c.clear()
     }
     auxCaches.synchronized { auxCaches.foreach(_.clear()) }
-    pinnedRddIds.synchronized {
-      spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (pinnedRddIds(id))
-          try rdd.unpersist(true)
-          catch { case scala.util.control.NonFatal(_) => () }
-      }
-      pinnedRddIds.clear()
-      slotPins.clear()
-    }
-    memoPins.clear()
+    (sessionOwners.values.asScala ++ invocationOwners.values.asScala)
+      .foreach(_.release(blocking = true))
+    sessionOwners.clear()
+    invocationOwners.clear()
   }
 
   // Tokenized documents are reused by the whole §2.9 search family plus

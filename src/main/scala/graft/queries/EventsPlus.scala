@@ -2153,9 +2153,8 @@ object EventsPlus {
     // ≤16 rows, but its lineage is the full sessionization pass over
     // events; v is consumed twice (v0/v1 broadcasts), so without the
     // checkpoint that corpus pass ran twice per invocation (round 12)
-    val m = sessions.groupBy("mask")
-      .agg(count(lit(1)).as("nu"), sum("conv").as("nc"))
-      .localCheckpoint(false)
+    val m = Tables.localCheckpoint(sessions.groupBy("mask")
+      .agg(count(lit(1)).as("nu"), sum("conv").as("nc")), eager = false)
     val v = spark.range(16).select(col("id").as("s"))
       .join(broadcast(m), expr("(mask & s) = mask"))
       .groupBy("s")

@@ -472,16 +472,15 @@ object PipelineExtra {
     // prefix build + both final margins) and the prefix relation feeds
     // BOTH self-join sides — unchecked, each consumer re-ran the
     // groupBy / rank-window chain over the cached sample terms
-    val sizes = terms.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      .localCheckpoint(false)
-    val prefix = terms
+    val sizes = Tables.localCheckpoint(
+      terms.groupBy("doc_id").agg(count(lit(1)).as("sz")), eager = false)
+    val prefix = Tables.localCheckpoint(terms
       .join(broadcast(ranked), "term")
       .join(sizes, "doc_id")
       .withColumn("pos",
         row_number().over(Window.partitionBy("doc_id").orderBy("trank")))
       .filter(col("pos") <= col("sz") - expr("(3 * sz + 4) DIV 5") + 1)
-      .select("doc_id", "term")
-      .localCheckpoint(false)
+      .select("doc_id", "term"), eager = false)
     val cand = prefix.toDF("d1", "term")
       .join(prefix.toDF("d2", "term"), "term")
       .filter(col("d1") < col("d2"))

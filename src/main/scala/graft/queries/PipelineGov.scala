@@ -245,9 +245,8 @@ object PipelineGov {
     // over the memoized relation instead of a second corpus explode —
     // checkpointed (round 12) because THREE consumers (sizes + both
     // self-join sides) each re-ran that distinct shuffle per invocation.
-    val sh = Tables.shingles(spark, sfDir)
-      .select("source", "sh").distinct()
-      .localCheckpoint(false)
+    val sh = Tables.localCheckpoint(Tables.shingles(spark, sfDir)
+      .select("source", "sh").distinct(), eager = false)
     val sizes = sh.groupBy("source").agg(count(lit(1)).as("n_sh"))
     val a = sh.select(col("source").as("s1"), col("sh"))
     val b = sh.select(col("source").as("s2"), col("sh"))
@@ -556,10 +555,9 @@ object PipelineGov {
     // The checkpoint is |docs|×3 longs; both terciles now come out of
     // one conditional aggregation over the bounded grid (n rides along
     // as a window sum instead of a fourth corpus pass).
-    val perDoc = scored.groupBy("doc_id")
+    val perDoc = Tables.localCheckpoint(scored.groupBy("doc_id")
       .agg(expr("sum(s_e6) div count(*)").as("mean_e6"))
-      .withColumn("g4", expr("mean_e6 div 10000"))
-      .localCheckpoint(false)
+      .withColumn("g4", expr("mean_e6 div 10000")), eager = false)
     val grid = perDoc.groupBy("g4").agg(count(lit(1)).as("gn"))
     val wg = Window.orderBy("g4")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

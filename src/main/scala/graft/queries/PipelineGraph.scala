@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
 /** Graph-shaped pipeline operators (SURVEY.md §2.10e): duplicate
   * clustering — the step that turns a near-dup candidate PAIR stream into
@@ -51,12 +52,11 @@ object PipelineGraph {
     // fixed-iteration siblings below, where every checkpoint job
     // collapses into the single output job (pagerank 2.71 → 1.97 s,
     // triangles 1.44 → 1.09 s, 3-run sf0.1 medians).
-    val sym = edges
-      .union(edges.select(col("d2").as("d1"), col("d1").as("d2")))
-      .localCheckpoint(false)
-    var labels = nodes
-      .select(col("doc_id"), col("doc_id").as("cluster"))
-      .localCheckpoint(false)
+    val sym = Tables.localCheckpoint(
+      edges.union(edges.select(col("d2").as("d1"), col("d1").as("d2"))),
+      eager = false)
+    var labels = Tables.localCheckpoint(nodes
+      .select(col("doc_id"), col("doc_id").as("cluster")), eager = false)
     var prevSum: java.math.BigDecimal = null
     var converged = false
     while (!converged) {
@@ -82,7 +82,7 @@ object PipelineGraph {
             least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
               .as("cluster"))
       }
-      val next = twoHop.localCheckpoint(false)
+      val next = Tables.localCheckpoint(twoHop, eager = false)
       // decimal sum: overflow-proof at any corpus size — and the action
       // that materializes this round's lazy checkpoint (see above)
       val s = next.agg(sum(col("cluster").cast("decimal(38,0)")))
@@ -159,20 +159,17 @@ object PipelineGraph {
       .union(edges.select(col("d2").as("d1"), col("d1").as("d2")))
     val deg = sym.groupBy(col("d1").as("dd"))
       .agg(count(lit(1)).as("deg"))
-    val symDeg0 = sym.join(deg, sym("d1") === col("dd"))
-      .select(col("d1"), col("d2"), col("deg"))
-      .localCheckpoint()
+    val symDeg0 = Tables.localCheckpoint(sym.join(deg, sym("d1") === col("dd"))
+      .select(col("d1"), col("d2"), col("deg")))
     val nPart = math.max(1L, symDeg0.count() / 2000000L).toInt
     // layout checkpoint under AQE-off so the LogicalRDD keeps
-    // hashpartitioning(d1, nPart) — see [[withAqeOff]]
-    val symDeg = withAqeOff(spark) {
-      symDeg0.repartition(nPart, col("d1"))
-        .sortWithinPartitions("d1")
-        .localCheckpoint()
+    // hashpartitioning(d1, nPart) — see [[AqeOff]]
+    val symDeg = Tables.withConf(spark, AqeOff) {
+      Tables.localCheckpoint(symDeg0.repartition(nPart, col("d1"))
+        .sortWithinPartitions("d1"))
     }
-    val nodes = PipelinePlus.sampleTerms(spark, sfDir)
-      .select("doc_id").distinct()
-      .localCheckpoint()
+    val nodes = Tables.localCheckpoint(PipelinePlus.sampleTerms(spark, sfDir)
+      .select("doc_id").distinct())
     val n = nodes.count().toDouble
     var pr = nodes.withColumn("pr", lit(1.0 / n))
     for (_ <- 1 to 3) {
@@ -180,12 +177,11 @@ object PipelineGraph {
         .join(pr, col("d1") === pr("doc_id"))
         .select(col("d2").as("doc_id"), (col("pr") / col("deg")).as("c"))
         .groupBy("doc_id").agg(sum("c").as("in_pr"))
-      pr = nodes
+      pr = Tables.localCheckpoint(nodes
         .join(contrib, Seq("doc_id"), "left")
         .select(col("doc_id"),
           (lit((1 - d) / n) + lit(d) * coalesce(col("in_pr"), lit(0.0)))
-            .as("pr"))
-        .localCheckpoint(false)
+            .as("pr")), eager = false)
     }
     pr.select(col("doc_id"), round(col("pr"), 6).as("pr"))
       .orderBy("doc_id")
@@ -324,13 +320,12 @@ object PipelineGraph {
     * endpoint) — same plan shape, different orientation key.
     */
   def qTriangleCount(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = PipelinePlus.minhashPairs(spark, sfDir)
+    // EAGER (round 13): e feeds all three triangle-join positions;
+    // the output job's concurrent stages each re-derived a lazy copy
+    // from the candidate relation before any of them had cached it
+    val e = Tables.localCheckpoint(PipelinePlus.minhashPairs(spark, sfDir)
       .filter(col("est_jaccard") >= EdgeThreshold)
-      .select(col("d1").as("a"), col("d2").as("b"))
-      // EAGER (round 13): e feeds all three triangle-join positions;
-      // the output job's concurrent stages each re-derived a lazy copy
-      // from the candidate relation before any of them had cached it
-      .localCheckpoint()
+      .select(col("d1").as("a"), col("d2").as("b")))
     val tri = e
       .join(e.toDF("b", "c"), "b")
       .join(e.toDF("a", "c"), Seq("a", "c"), "left_semi")
@@ -385,13 +380,12 @@ object PipelineGraph {
     val edges = PipelinePlus.minhashPairs(spark, sfDir)
       .filter(col("est_jaccard") >= EdgeThreshold)
       .select(col("d1"), col("d2"))
-    val sym = edges
-      .union(edges.select(col("d2").as("d1"), col("d1").as("d2")))
-      // EAGER (round 13): one reference per pull round — the rounds all
-      // collapse into the output job, whose concurrent stages raced the
-      // lazy copy and re-derived it up to 3×
-      .localCheckpoint()
-    var dist = bfsSeedDist(spark, sfDir).localCheckpoint(false)
+    // EAGER (round 13): one reference per pull round — the rounds all
+    // collapse into the output job, whose concurrent stages raced the
+    // lazy copy and re-derived it up to 3×
+    val sym = Tables.localCheckpoint(edges
+      .union(edges.select(col("d2").as("d1"), col("d1").as("d2"))))
+    var dist = Tables.localCheckpoint(bfsSeedDist(spark, sfDir), eager = false)
     for (_ <- 1 to 3) {
       val reached = dist.filter(col("hop").isNotNull)
         .select(col("doc_id").as("rid"), col("hop").as("rhop"))
@@ -399,11 +393,10 @@ object PipelineGraph {
         .join(reached, sym("d1") === col("rid"))
         .groupBy(sym("d2").as("nid"))
         .agg(min(col("rhop") + 1L).as("prop"))
-      dist = dist
+      dist = Tables.localCheckpoint(dist
         .join(pulled, dist("doc_id") === pulled("nid"), "left")
         .select(dist("doc_id"),
-          least(col("hop"), col("prop")).as("hop"))
-        .localCheckpoint(false)
+          least(col("hop"), col("prop")).as("hop")), eager = false)
     }
     dist.filter(col("hop").isNotNull)
       .select(col("doc_id"), col("hop"))
@@ -550,30 +543,26 @@ object PipelineGraph {
     // hop's sort-merge join reads it exchange-free and sort-free, and
     // concurrent AQE stages cannot re-derive a lazy copy), and nodes is
     // checkpointed (count action + seed).
-    val symDeg0 = sym.join(deg, sym("d1") === col("dd"))
-      .select(col("d1"), col("d2"), col("deg"))
-      .localCheckpoint()
+    val symDeg0 = Tables.localCheckpoint(sym.join(deg, sym("d1") === col("dd"))
+      .select(col("d1"), col("d2"), col("deg")))
     // scale-adaptive loop parallelism (the copurchaseLayouts sizing):
     // ~2M edge rows per partition, never below 1 — a session-constant
     // 32-way split made every hop a 32-task stage of task-launch
     // overhead at sf0.1 while staying corpus-proportional at cluster SFs
     val nPart = math.max(1L, symDeg0.count() / 2000000L).toInt
     // layout checkpoint under AQE-off so the LogicalRDD keeps
-    // hashpartitioning(d1, nPart) — see [[withAqeOff]]
-    val symDeg = withAqeOff(spark) {
-      symDeg0.repartition(nPart, col("d1"))
-        .sortWithinPartitions("d1")
-        .localCheckpoint()
+    // hashpartitioning(d1, nPart) — see [[AqeOff]]
+    val symDeg = Tables.withConf(spark, AqeOff) {
+      Tables.localCheckpoint(symDeg0.repartition(nPart, col("d1"))
+        .sortWithinPartitions("d1"))
     }
-    val nodes = PipelinePlus.sampleTerms(spark, sfDir)
-      .select("doc_id").distinct()
-      .localCheckpoint()
+    val nodes = Tables.localCheckpoint(PipelinePlus.sampleTerms(spark, sfDir)
+      .select("doc_id").distinct())
     val nNodes = nodes.count()
     val t0 = 500000000L / nNodes // (1−d)·10⁹ div n, exact long division
     val floor0 = math.max(1L, t0 / PrDrainShift)
-    var state = nodes
-      .select(col("doc_id"), lit(t0).as("t"), lit(t0).as("pr"))
-      .localCheckpoint(false)
+    var state = Tables.localCheckpoint(nodes
+      .select(col("doc_id"), lit(t0).as("t"), lit(t0).as("pr")), eager = false)
     def hop(st: DataFrame): DataFrame = {
       val contrib = symDeg
         .join(st.select(col("doc_id").as("sid"), col("t")),
@@ -604,23 +593,14 @@ object PipelineGraph {
     // loop shuffles (contribution groupBy, state-side exchange) use the
     // same scale-derived width as the edge layout — with AQE off the
     // session constant would fan every hop back out to 32 micro-tasks
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.get(aqeKey)
-    val prevPart = spark.conf.get(partKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(partKey, nPart.toString)
-    try {
+    Tables.withConf(spark, AqeOff, loopWidth(nPart)) {
       while (maxT > 0 && iter < PrHalfHops) {
-        val mid = hop(state).localCheckpoint()
-        val next = hop(mid).localCheckpoint(false)
+        val mid = Tables.localCheckpoint(hop(state))
+        val next = Tables.localCheckpoint(hop(mid), eager = false)
         maxT = next.agg(max("t")).head().getLong(0)
         state = next
         iter += 2
       }
-    } finally {
-      spark.conf.set(aqeKey, prevAqe)
-      spark.conf.set(partKey, prevPart)
     }
     (state.select(col("doc_id"), col("pr").as("pr_e9")).orderBy("doc_id"),
       iter)
@@ -682,12 +662,11 @@ object PipelineGraph {
     * every half-round; without materialization the lineitem⋈orders join
     * and distinct re-run per reference (the qGraphPagerank discipline). */
   private def copurchaseEdges(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Tables.t(spark, sfDir, "lineitem")
+    Tables.localCheckpoint(graft.Tables.t(spark, sfDir, "lineitem")
       .join(graft.Tables.t(spark, sfDir, "orders"),
         col("l_orderkey") === col("o_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
 
   /** [[copurchaseEdges]] checkpointed TWICE more: once hash-partitioned
     * by customer and once by part — the [[qHitsConverge]] loop layout.
@@ -700,20 +679,19 @@ object PipelineGraph {
     * one exchange). Worth it only for the 8-round loop: [[qGraphHits]]'
     * fixed 2 iterations measured FASTER on the plain checkpoint (4
     * saved exchanges don't pay for 2 extra checkpoint builds). */
-  /** Runs body with AQE disabled, restoring the session conf after.
-    * Needed around LAYOUT CHECKPOINT CREATION as well as the loops:
-    * Dataset.localCheckpoint captures the physical plan's output
-    * partitioning into the LogicalRDD, but under AQE the adaptive plan
-    * wrapper reports UnknownPartitioning (measured on 4.1.2: AQE-on
-    * checkpoint → UnknownPartitioning(0); AQE-off →
-    * hashpartitioning(key, n)) — so a pre-partitioned checkpoint built
-    * under AQE silently re-exchanges at every consumer. */
-  private def withAqeOff[T](spark: SparkSession)(body: => T): T = {
-    val k = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.get(k)
-    spark.conf.set(k, "false")
-    try body finally spark.conf.set(k, prev)
-  }
+  /** AQE disabled, for [[Tables.withConf]]. Needed around LAYOUT
+    * CHECKPOINT CREATION as well as the loops: Dataset.localCheckpoint
+    * captures the physical plan's output partitioning into the
+    * LogicalRDD, but under AQE the adaptive plan wrapper reports
+    * UnknownPartitioning (measured on 4.1.2: AQE-on checkpoint →
+    * UnknownPartitioning(0); AQE-off → hashpartitioning(key, n)) — so a
+    * pre-partitioned checkpoint built under AQE silently re-exchanges at
+    * every consumer. */
+  private val AqeOff = "spark.sql.adaptive.enabled" -> "false"
+
+  /** Shuffle width of a loop's own exchanges: with AQE off the session
+    * constant would fan every round back out to many micro-tasks. */
+  private def loopWidth(n: Int) = "spark.sql.shuffle.partitions" -> n.toString
 
   private def copurchaseLayouts(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) = {
@@ -740,19 +718,14 @@ object PipelineGraph {
     // (c, p) + a third stored copy of the edge list) disappears. The
     // two layouts are independent single-action builds over the same
     // scan, so they run CONCURRENTLY (guide §2.6 — overlap independent
-    // jobs; the second build back-fills the first one's stragglers).
-    withAqeOff(spark) {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      def layout(key: String) = Future {
-        base.repartition(n, col(key))
-          .dropDuplicates("c", "p")
-          .localCheckpoint()
-      }
+    // jobs; the second build back-fills the first one's stragglers):
+    // by-part on a thread started for this call, by-customer here.
+    Tables.withConf(spark, AqeOff) {
+      def layout(key: String) = Tables.localCheckpoint(
+        base.repartition(n, col(key)).dropDuplicates("c", "p"))
+      val byP = Tables.fork("graft-hits-layout")(layout("p"))
       val byC = layout("c")
-      val byP = layout("p")
-      (Await.result(byC, scala.concurrent.duration.Duration.Inf),
-        Await.result(byP, scala.concurrent.duration.Duration.Inf))
+      (byC, byP())
     }
   }
 
@@ -822,27 +795,22 @@ object PipelineGraph {
     // keyed exchange (the a₀ distinct) runs at the layout width, not
     // the session constant.
     val (byC, byP) = copurchaseLayouts(spark, sfDir)
-    withAqeOff(spark) {
-      val partKey = "spark.sql.shuffle.partitions"
-      val prevPart = spark.conf.get(partKey)
-      spark.conf.set(partKey, byP.rdd.getNumPartitions.toString)
-      try {
-        var a = byP.select(col("p")).distinct()
-          .select(col("p"), lit(1000000L).as("a"))
-          .localCheckpoint(false)
-        var iter = 0
-        var fixed = false
-        while (!fixed && iter < HitsCap) {
-          val next = hitsRound(byC, byP, a).localCheckpoint(false)
-          fixed = iter >= HitsCap - 3 && next.toDF("p", "na")
-            .join(broadcast(a), "p")
-            .filter(col("na") =!= col("a"))
-            .isEmpty
-          a = next
-          iter += 1
-        }
-        (hitsTop10(a), iter, fixed)
-      } finally spark.conf.set(partKey, prevPart)
+    Tables.withConf(spark, AqeOff, loopWidth(byP.rdd.getNumPartitions)) {
+      var a = Tables.localCheckpoint(byP.select(col("p")).distinct()
+        .select(col("p"), lit(1000000L).as("a")), eager = false)
+      var iter = 0
+      var fixed = false
+      while (!fixed && iter < HitsCap) {
+        val next =
+          Tables.localCheckpoint(hitsRound(byC, byP, a), eager = false)
+        fixed = iter >= HitsCap - 3 && next.toDF("p", "na")
+          .join(broadcast(a), "p")
+          .filter(col("na") =!= col("a"))
+          .isEmpty
+        a = next
+        iter += 1
+      }
+      (hitsTop10(a), iter, fixed)
     }
   }
 
@@ -906,61 +874,50 @@ object PipelineGraph {
     // concurrent consumer stages), then laid out by the per-round join
     // key d1 at scale-derived width; the loop itself runs with AQE off
     // and its shuffles at that same width.
-    val sym0 = edges
-      .union(edges.select(col("d2").as("d1"), col("d1").as("d2")))
-      .localCheckpoint()
+    val sym0 = Tables.localCheckpoint(edges
+      .union(edges.select(col("d2").as("d1"), col("d1").as("d2"))))
     val nPart = math.max(1L, sym0.count() / 2000000L).toInt
     // layout checkpoint under AQE-off so the LogicalRDD keeps
-    // hashpartitioning(d1, nPart) — see [[withAqeOff]]
-    val sym = withAqeOff(spark) {
-      sym0.repartition(nPart, col("d1"))
-        .sortWithinPartitions("d1")
-        .localCheckpoint()
+    // hashpartitioning(d1, nPart) — see [[AqeOff]]
+    val sym = Tables.withConf(spark, AqeOff) {
+      Tables.localCheckpoint(sym0.repartition(nPart, col("d1"))
+        .sortWithinPartitions("d1"))
     }
-    var labels = PipelinePlus.sampleTerms(spark, sfDir)
+    var labels = Tables.localCheckpoint(PipelinePlus.sampleTerms(spark, sfDir)
       .select("doc_id").distinct()
-      .withColumn("label", col("doc_id") % 16)
-      .localCheckpoint()
+      .withColumn("label", col("doc_id") % 16))
     var iter = 0
     var fixed = false
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    val prevAqe = spark.conf.get(aqeKey)
-    val prevPart = spark.conf.get(partKey)
-    spark.conf.set(aqeKey, "false")
-    spark.conf.set(partKey, nPart.toString)
-    try while (!fixed && iter < LpaCap) {
-      val votes = sym
-        .join(labels.select(col("doc_id").as("src"), col("label")),
-          sym("d1") === col("src"))
-        .select(col("d2").as("nid"), col("label"))
-        .unionAll(labels.select(col("doc_id").as("nid"), col("label")))
-      // fixpoint probe FUSED into the round (round 13, guide §1/§2.4):
-      // the new label rides with a changed-vs-previous flag (left join —
-      // a nid absent from the previous vector contributes 0, exactly
-      // the old inner-join probe's semantics), so ONE aggregate action
-      // both materializes the round's lazy checkpoint and answers the
-      // convergence test — the separate join+isEmpty job per round is
-      // gone.
-      val next = votes.groupBy("nid", "label")
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy("nid")
-        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("label")))
-          .getField("label").as("label"))
-        .select(col("nid").as("doc_id"), col("label"))
-        .join(labels.select(col("doc_id"), col("label").as("prev")),
-          Seq("doc_id"), "left")
-        .select(col("doc_id"), col("label"),
-          when(col("prev").isNull, 0L)
-            .otherwise((col("label") =!= col("prev")).cast("long"))
-            .as("chg"))
-        .localCheckpoint(false)
-      fixed = next.agg(sum("chg")).head().getLong(0) == 0L
-      labels = next
-      iter += 1
-    } finally {
-      spark.conf.set(aqeKey, prevAqe)
-      spark.conf.set(partKey, prevPart)
+    Tables.withConf(spark, AqeOff, loopWidth(nPart)) {
+      while (!fixed && iter < LpaCap) {
+        val votes = sym
+          .join(labels.select(col("doc_id").as("src"), col("label")),
+            sym("d1") === col("src"))
+          .select(col("d2").as("nid"), col("label"))
+          .unionAll(labels.select(col("doc_id").as("nid"), col("label")))
+        // fixpoint probe FUSED into the round (round 13, guide §1/§2.4):
+        // the new label rides with a changed-vs-previous flag (left join —
+        // a nid absent from the previous vector contributes 0, exactly
+        // the old inner-join probe's semantics), so ONE aggregate action
+        // both materializes the round's lazy checkpoint and answers the
+        // convergence test — the separate join+isEmpty job per round is
+        // gone.
+        val next = Tables.localCheckpoint(votes.groupBy("nid", "label")
+          .agg(count(lit(1)).as("cnt"))
+          .groupBy("nid")
+          .agg(min(struct((-col("cnt")).as("nc"), col("label").as("label")))
+            .getField("label").as("label"))
+          .select(col("nid").as("doc_id"), col("label"))
+          .join(labels.select(col("doc_id"), col("label").as("prev")),
+            Seq("doc_id"), "left")
+          .select(col("doc_id"), col("label"),
+            when(col("prev").isNull, 0L)
+              .otherwise((col("label") =!= col("prev")).cast("long"))
+              .as("chg")), eager = false)
+        fixed = next.agg(sum("chg")).head().getLong(0) == 0L
+        labels = next
+        iter += 1
+      }
     }
     val sizes = labels.groupBy("label").agg(count(lit(1)).as("csize"))
     (labels.join(sizes, "label")

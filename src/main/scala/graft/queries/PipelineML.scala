@@ -97,7 +97,8 @@ object PipelineML {
     // locally and the pair stage dominates), but at corpus scale
     // assign IS a full scan, and O(n)×(d+2) spills under MEMORY_AND_DISK
     // rather than re-scanning — the doc-vector-index trade.
-    val asg = semdedupAssign(spark, sfDir).localCheckpoint(false)
+    val asg =
+      Tables.localCheckpoint(semdedupAssign(spark, sfDir), eager = false)
     val a = asg.select(col("cluster"), col("vec_id").as("keep_id"),
       col("v").as("va"))
     val b = asg.select(col("cluster"), col("vec_id").as("drop_id"),
@@ -802,7 +803,7 @@ object PipelineML {
     // reference set and the per-d lists derive from the same `top`
     // relation, and Spark's attribute dedup otherwise mis-resolves the
     // equi-keys (0-row semi-join observed at sf0.001)
-    val topM = top.localCheckpoint(false)
+    val topM = Tables.localCheckpoint(top, eager = false)
     val full = topM.filter(col("d") === 64).select("qid", "cid")
     topM.join(full, Seq("qid", "cid"), "left_semi")
       .groupBy(col("qid"), col("d").cast("long").as("d"))
@@ -853,10 +854,9 @@ object PipelineML {
     val emb = Tables.t(spark, sfDir, "embeddings")
     // quantized matrix has FOUR consumers (seed slice + one cross-join
     // per probe round) — eager checkpoint, one scan+transform not four
-    val q = emb.select(col("vec_id"),
+    val q = Tables.localCheckpoint(emb.select(col("vec_id"),
       expr("transform(embedding, x -> cast(round(cast(x as double) * 1000000) as bigint))")
-        .as("qv"))
-      .localCheckpoint()
+        .as("qv")))
     val k = emb.count() / 256 max 3
     val c0 = q.filter(col("vec_id") < k)
       .select(col("vec_id").as("cluster"), col("qv").as("cv"))
@@ -876,14 +876,13 @@ object PipelineML {
         .select(col("vec_id"), col("b.cluster").as("cluster"),
           col("b.qv").as("qv"))
     def update(assigned: DataFrame): DataFrame =
-      assigned
+      Tables.localCheckpoint(assigned
         .select(col("cluster"), posexplode(col("qv")).as(Seq("pos", "x")))
         .groupBy("cluster", "pos")
         .agg(expr("sum(x) div count(1)").as("c"))
         .groupBy("cluster")
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
-          s => s.getField("c")).as("cv"))
-        .localCheckpoint(false)
+          s => s.getField("c")).as("cv")), eager = false)
     val c1 = update(assign(c0))
     val c2 = update(assign(c1))
     // the third assignment feeds TWO branches (cluster sizes + the
@@ -891,7 +890,7 @@ object PipelineML {
     // consumer stages each re-ran the n·k cross-join fan-out — the
     // query's single most expensive stage (round 13; guide §2.4). Eager
     // so concurrent stages cannot race a lazy copy.
-    val a3 = assign(c2).localCheckpoint()
+    val a3 = Tables.localCheckpoint(assign(c2))
     val sizes = a3.groupBy("cluster").agg(count(lit(1)).as("n"))
     val c3 = update(a3)
     sizes.join(c3, "cluster")

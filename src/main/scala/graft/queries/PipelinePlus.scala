@@ -127,7 +127,7 @@ object PipelinePlus {
     // the scan→distinct→min-agg pipeline runs once per copy. Checkpoint
     // eagerly: sig is one row per sampled doc at ANY corpus size, so the
     // one-time materialization is the cheap side of the trade everywhere.
-    val sig = minhashSig(spark, sfDir).localCheckpoint()
+    val sig = Tables.localCheckpoint(minhashSig(spark, sfDir))
     // band signature = ordered concat of the band's minhashes, unpacked
     // from the signature array IN-ROW (no per-k shuffle)
     val bands = sig.select(col("doc_id"), explode(expr(
@@ -930,19 +930,21 @@ object PipelinePlus {
 
   def qDedupMinhashW(spark: SparkSession, sfDir: String): DataFrame = {
     // sample-bounded (doc, term, tf) — checkpointed (round 12) because
-    // THREE consumers re-ran the groupBy shuffle per invocation (the
-    // sig memo build once, then sz + both inter sides every run)
-    val tf = Tables.tokens(spark, sfDir)
+    // sz and both inter sides re-ran the groupBy shuffle per invocation.
+    // The sig memo builds from the un-checkpointed relation: a memo
+    // outlives this invocation, so its lineage must not read a
+    // checkpoint the invocation owns.
+    val tfRel = Tables.tokens(spark, sfDir)
       .filter(col("doc_id") % 10 === 0)
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
-    // integer-weight expansion + K min-hashes in one groupBy (the
-    // minhashSig shape over the expanded elements)
-    val el = tf.select(col("doc_id"), col("term"),
-      explode(sequence(lit(1L), col("tf"))).as("j"))
+    val tf = Tables.localCheckpoint(tfRel, eager = false)
     val sig = Tables.memo(wSigCache,
       s"${spark.sparkContext.applicationId}:$sfDir") {
-      el.groupBy("doc_id")
+      // integer-weight expansion + K min-hashes in one groupBy (the
+      // minhashSig shape over the expanded elements)
+      tfRel.select(col("doc_id"), col("term"),
+        explode(sequence(lit(1L), col("tf"))).as("j"))
+        .groupBy("doc_id")
         .agg(array((0 until K).map { k =>
           min(Tables.md5Bucket(concat(col("term"), lit("#"), col("j"),
             lit(":"), lit(k.toLong))))
@@ -966,8 +968,8 @@ object PipelinePlus {
     // 200 rows, but its lineage is the banded-pair + signature-compare
     // chain — two consumers (inter + the final join) re-ran it all
     // without the checkpoint (round 12)
-    val cand = est.orderBy(desc("est"), asc("d1"), asc("d2")).limit(200)
-      .localCheckpoint(false)
+    val cand = Tables.localCheckpoint(
+      est.orderBy(desc("est"), asc("d1"), asc("d2")).limit(200), eager = false)
     val sz = tf.groupBy("doc_id").agg(sum("tf").as("sz"))
     val inter = cand
       .join(tf.toDF("d1", "term", "tf1"), Seq("d1"))

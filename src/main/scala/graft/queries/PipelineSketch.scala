@@ -802,11 +802,11 @@ object PipelineSketch {
     // that feeds cappedShingles TWICE (df aggregate + join) and the
     // capped result feeds BOTH self-join sides — unchecked, the corpus
     // pass ran 4× per invocation (16 parquet scans in the plan).
-    val sel = winnowSel(spark, sfDir)
-      .select(col("doc_id"), col("fh").as("sh")).distinct()
-      .localCheckpoint(false)
-    val fps = PipelineExtra.cappedShingles(sel, PipelineExtra.ShingleDfCap)
-      .localCheckpoint(false)
+    val sel = Tables.localCheckpoint(winnowSel(spark, sfDir)
+      .select(col("doc_id"), col("fh").as("sh")).distinct(), eager = false)
+    val fps = Tables.localCheckpoint(
+      PipelineExtra.cappedShingles(sel, PipelineExtra.ShingleDfCap),
+      eager = false)
     val a = fps.toDF("d1", "sh")
     val b = fps.toDF("d2", "sh")
     a.join(b, Seq("sh")).filter(col("d1") < col("d2"))

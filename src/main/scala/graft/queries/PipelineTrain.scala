@@ -247,18 +247,17 @@ object PipelineTrain {
   def qLogregGd3(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.t(spark, sfDir, "embeddings")
     val n = emb.count()
-    val x = emb
+    // EAGER (round 13): x feeds two subtrees per step (the logit join
+    // and the gradient join) × 3 steps; a lazy checkpoint let the
+    // first step's two concurrent consumer stages each re-run the
+    // |emb|×64 posexplode before either cached it
+    val x = Tables.localCheckpoint(emb
       .select(col("vec_id"),
         when(col("label") >= 5, 1000000L).otherwise(0L).as("y"),
         posexplode(col("embedding")).as(Seq("p", "xv")))
       .select(col("vec_id"), col("y"),
         (col("p") + 1).cast("long").as("dim"),
-        round(col("xv").cast("double") * 1e6).cast("long").as("q"))
-      // EAGER (round 13): x feeds two subtrees per step (the logit join
-      // and the gradient join) × 3 steps; a lazy checkpoint let the
-      // first step's two concurrent consumer stages each re-run the
-      // |emb|×64 posexplode before either cached it
-      .localCheckpoint()
+        round(col("xv").cast("double") * 1e6).cast("long").as("q")))
     def step(w: DataFrame): DataFrame = {
       val z = x.join(broadcast(w), "dim")
         .groupBy("vec_id", "y")
@@ -269,11 +268,11 @@ object PipelineTrain {
       val g = x.join(p.drop("y"), "vec_id")
         .groupBy("dim")
         .agg(sum((col("p") - col("y")) * col("q")).as("g"))
-      w.join(g, "dim")
+      Tables.localCheckpoint(w.join(g, "dim")
         .select(col("dim"),
           (col("w") -
-            round(col("g").cast("double") / (n * 1e6)).cast("long")).as("w"))
-        .localCheckpoint(false)
+            round(col("g").cast("double") / (n * 1e6)).cast("long")).as("w")),
+        eager = false)
     }
     val w0 = x.select("dim").distinct().withColumn("w", lit(0L))
     val w3 = step(step(step(w0)))
@@ -574,13 +573,13 @@ object PipelineTrain {
     // — without materialization the whole scan → posexplode → two-window
     // chain runs twice (round-13 plan dump: 2 parquet scans, the corpus
     // re-exploded per branch; guide §2.4). A lazy localCheckpoint cuts
-    // the duplicate; the pinned copy is released by Tables.trackPins on
-    // the next invocation. (A window-over-tok rewrite would also
-    // single-pass it but buffers hot-token partitions at scale — the
-    // aggregate+join form keeps partial aggregation and AQE skew
-    // handling, so it stays.)
-    val withLen = seg.withColumn("plen", count(lit(1)).over(wPhrase))
-      .localCheckpoint(false)
+    // the duplicate; the pinned copy belongs to the invocation and is
+    // released when the same thread re-invokes the query. (A
+    // window-over-tok rewrite would also single-pass it but buffers
+    // hot-token partitions at scale — the aggregate+join form keeps
+    // partial aggregation and AQE skew handling, so it stays.)
+    val withLen = Tables.localCheckpoint(
+      seg.withColumn("plen", count(lit(1)).over(wPhrase)), eager = false)
     val words = withLen.groupBy("tok")
       .agg(count(lit(1)).as("freq"), sum("plen").as("deg"))
       .select(col("tok"),

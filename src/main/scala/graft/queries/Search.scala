@@ -34,10 +34,9 @@ object Search {
 
   private def df(spark: SparkSession, sfDir: String): DataFrame =
     Tables.memo(dfCache, s"${spark.sparkContext.applicationId}:$sfDir") {
-      Tables.docTerms(spark, sfDir)
+      Tables.localCheckpoint(Tables.docTerms(spark, sfDir)
         .groupBy("term")
-        .agg(count(lit(1)).as("df"))
-        .localCheckpoint()
+        .agg(count(lit(1)).as("df")))
     }
 
   /** Per-doc token length — the other bounded index statistic (one row
@@ -48,9 +47,8 @@ object Search {
 
   private[queries] def dl(spark: SparkSession, sfDir: String): DataFrame =
     Tables.memo(dlCache, s"${spark.sparkContext.applicationId}:$sfDir") {
-      Tables.tokens(spark, sfDir)
-        .groupBy("doc_id").agg(count(lit(1)).as("dl"))
-        .localCheckpoint()
+      Tables.localCheckpoint(Tables.tokens(spark, sfDir)
+        .groupBy("doc_id").agg(count(lit(1)).as("dl")))
     }
 
   /** Single-row corpus size, cross-joined (broadcast) where needed. */
@@ -292,12 +290,11 @@ object Search {
   private[queries] def lexScores(spark: SparkSession, sfDir: String): DataFrame =
     Tables.memo(lexScoresCache,
       s"${spark.sparkContext.applicationId}:$sfDir") {
-      bm25Scored(spark, sfDir, Seq("spark", "join"))
+      Tables.localCheckpoint(bm25Scored(spark, sfDir, Seq("spark", "join"))
         .groupBy("doc_id")
         .agg(countDistinct("term").as("nt"), round(sum("s"), 4).as("score"))
         .filter(col("nt") === 2)
-        .select("doc_id", "score")
-        .localCheckpoint()
+        .select("doc_id", "score"))
     }
 
   /** BM25-ranked conjunctive-ish query (k1=1.2, b=0.75) over the same
@@ -405,13 +402,12 @@ object Search {
   private def docVectors(spark: SparkSession, sfDir: String): DataFrame =
     Tables.memo(docVecCache,
       s"${spark.sparkContext.applicationId}:$sfDir") {
-      tfidfRaw(spark, sfDir)
+      Tables.localCheckpoint(tfidfRaw(spark, sfDir)
         .filter(col("doc_id") % 10 === 0)
         .groupBy("doc_id")
         .agg(map_from_entries(collect_list(struct(col("term"), col("score"))))
           .as("m"),
-          sqrt(sum(col("score") * col("score"))).as("nrm"))
-        .localCheckpoint()
+          sqrt(sum(col("score") * col("score"))).as("nrm")))
     }
 
   def qDocSim(spark: SparkSession, sfDir: String): DataFrame = {

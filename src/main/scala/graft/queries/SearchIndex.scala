@@ -50,8 +50,8 @@ object SearchIndex {
     // Checkpoint eagerly: the relation is the query's term-filtered
     // postings — |postings(3 terms)| rows, the pruned-retrieval
     // working set, not the corpus.
-    val scored = Search.bm25Scored(spark, sfDir, WandTerms)
-      .localCheckpoint()
+    val scored =
+      Tables.localCheckpoint(Search.bm25Scored(spark, sfDir, WandTerms))
     val ub = scored.groupBy("term").agg(max("s").as("ub"))
     // k-th best single-term score on the top-ub term (3-row window input)
     val tstar = ub

@@ -71,7 +71,8 @@ object SearchPlus {
     // through the cache boundary for OTHER consumer classes — this
     // query projects no columns and pushes no filters, so it loses
     // nothing).
-    val dt = Tables.docTerms(spark, sfDir).localCheckpoint(false)
+    val dt =
+      Tables.localCheckpoint(Tables.docTerms(spark, sfDir), eager = false)
     val n = Tables.t(spark, sfDir, "documents")
       .agg(count(lit(1)).as("n_docs"))
     val df_ = dt.groupBy("term").agg(count(lit(1)).as("df"))
@@ -219,7 +220,7 @@ object SearchPlus {
   private def vsmScoredM(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.memo(vsmCache,
       s"${spark.sparkContext.applicationId}:$sfDir") {
-      vsmScored(spark, sfDir).localCheckpoint()
+      Tables.localCheckpoint(vsmScored(spark, sfDir))
     }
 
   private def vsmScored(spark: SparkSession, sfDir: String): DataFrame = {

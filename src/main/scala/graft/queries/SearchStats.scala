@@ -77,8 +77,8 @@ object SearchStats {
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
     // 4 consumers (c1t, c2t, nt, the scored join) — without the lazy
     // checkpoint each re-ran the corpus bigram explode+count (round 12)
-    val cnt = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-      .localCheckpoint(false)
+    val cnt = Tables.localCheckpoint(
+      bg.groupBy("w1", "w2").agg(count(lit(1)).as("c12")), eager = false)
     val c1t = cnt.groupBy("w1").agg(sum("c12").as("c1"))
     val c2t = cnt.groupBy("w2").agg(sum("c12").as("c2"))
     val nt = cnt.agg(sum("c12").as("n"))

@@ -45,12 +45,11 @@ object Sources {
     // ONLY the corrupt column (the quarantine count below); the
     // documented remedy is to materialize the parse first. The eager
     // checkpoint is the parsed feed itself — both branches scan it.
-    val all = spark.read
+    val all = Tables.localCheckpoint(spark.read
       .schema(ev.schema.add("_corrupt_record", "string"))
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(dir)
-      .localCheckpoint()
+      .json(dir))
     val good = all.filter(col("_corrupt_record").isNull)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total"))

@@ -67,11 +67,8 @@ object Streams {
     * partition's data is tiny). On a cluster this conf is a deploy-time
     * sizing decision; the harness value only has to keep the local
     * pipelines compute-bound. Restores the session conf afterwards. */
-  private def withStreamPartitions[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private def withStreamPartitions[T](spark: SparkSession)(body: => T): T =
+    Tables.withConf(spark, "spark.sql.shuffle.partitions" -> "2")(body)
 
   /** No-data micro-batches OFF for queries whose OUTPUT never depends
     * on them (round 13, generalizing the round-12 s_stream_outer_join
@@ -82,12 +79,9 @@ object Streams {
     * commit) saved. NOT applied to the windowed-aggregation family
     * (tumbling/sliding/session/late): there the no-data batch IS the
     * emitter of watermark-closed windows. Restores the session conf. */
-  private val NoDataConf = "spark.sql.streaming.noDataMicroBatches.enabled"
-  private def withNoDataBatchesOff[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.get(NoDataConf)
-    spark.conf.set(NoDataConf, "false")
-    try body finally spark.conf.set(NoDataConf, prev)
-  }
+  private def withNoDataBatchesOff[T](spark: SparkSession)(body: => T): T =
+    Tables.withConf(spark,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
 
   /** Tumbling 1h window + watermark, append mode. The sentinel advances
     * the watermark past every real window so append emits them all. */
@@ -524,11 +518,8 @@ object Streams {
     withStreamPartitions(spark) {
     import org.apache.spark.sql.streaming.{TimeMode, TTLConfig}
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    Tables.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val rows = eventRows(spark, sfDir).filter(_.user_id < 8)
       val (b1, b2) = rows.splitAt(rows.length / 2)
       val stream = newStream(spark)
@@ -564,11 +555,6 @@ object Streams {
         q.processAllAvailable()
       } finally q.stop()
       finalStatePerUser(spark, "s_stream_tws")
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set(providerKey, p)
-        case None => spark.conf.unset(providerKey)
-      }
     }
     }
 

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.storage.StorageLevel
 
+import graft.queries.SearchIndex
+
 /** Memo-cache lifecycle (round 11, verdict item #7; sweep SCOPED in
   * round 12 per the round-11 advice): the engine's memoized relations
   * key on (applicationId, sfDir) and persist() without unpersist —
@@ -9,7 +11,9 @@ import org.apache.spark.storage.StorageLevel
   * sweeping many sfDirs accumulates pinned relations.
   * [[Tables.clearCaches]] must release ALL of them, including the
   * loop-internal localCheckpoint RDDs that DataFrame.unpersist cannot
-  * reach — and must NOT touch anything the HOST application pinned
+  * reach — whichever owner holds them: the session owner (memo builds,
+  * direct calls that bypass SparkEntry) or an invocation owner on any
+  * thread — and must NOT touch anything the HOST application pinned
   * itself (a blanket sweep would permanently break a host-owned
   * localCheckpointed RDD: its blocks cannot be recomputed).
   */
@@ -34,6 +38,20 @@ class CacheLifecycleSpec extends SparkSpecBase {
     val expected = SparkEntry.queries("q_dedup_cluster")(spark, sfA).collect()
     SparkEntry.queries("q_dedup_cluster")(spark, sfB).collect()
     SparkEntry.queries("q_contamination")(spark, sfA).collect()
+    def pinsOf(body: => Unit): collection.Set[Int] = {
+      val before = sc.getPersistentRDDs.keySet
+      body
+      sc.getPersistentRDDs.keySet.diff(before)
+    }
+    // an invocation owner that is not the test thread's
+    val worker = java.util.concurrent.Executors.newSingleThreadExecutor()
+    val pmiPins = try pinsOf(on(worker)(
+      SparkEntry.queries("q_cooccur_pmi")(spark, sfA).collect()))
+    finally worker.shutdown()
+    // a direct call bypassing SparkEntry pins into the session owner
+    val wandPins = pinsOf(SearchIndex.qSearchWand(spark, sfA).collect())
+    assert(pmiPins.nonEmpty && wandPins.nonEmpty,
+      "the second-thread and direct calls should have pinned checkpoints")
     val enginePinned = sc.getPersistentRDDs.keySet.diff(preEngine)
     assert(enginePinned.nonEmpty, "the sweep should have pinned relations")
     Tables.clearCaches(spark)

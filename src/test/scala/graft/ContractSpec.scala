@@ -124,9 +124,9 @@ class ContractSpec extends SparkSpecBase {
       keys.groupBy(identity).collect { case (k, vs) if vs.size > 1 => k }
         .toSeq.sorted
     }
-    // the query map literal lives in rawQueries since the round-12
-    // trackPins wrapper; fall back to the old `def queries` name so the
-    // scan keeps working if the wrapper is ever inlined away
+    // the query map literal lives in rawQueries because `queries` wraps
+    // every entry in Tables.invocation; fall back to the `def queries`
+    // name so the scan keeps working if the wrapper is ever inlined away
     val qStart = math.max(text.indexOf("def rawQueries"),
       text.indexOf("def queries"))
     val oStart = text.indexOf("def oracleSql")
@@ -135,5 +135,39 @@ class ContractSpec extends SparkSpecBase {
       s"duplicate queries keys: ${dups(text.substring(qStart, oStart))}")
     assert(dups(text.substring(oStart)).isEmpty,
       s"duplicate oracleSql keys: ${dups(text.substring(oStart))}")
+  }
+
+  test("checkpoints and conf toggles go through Tables (source-level)") {
+    // Tables.localCheckpoint records each pin in its owner and
+    // Tables.withConf serializes session-conf toggles; a direct call in
+    // engine code would bypass both, so scan the source text
+    val main = new java.io.File(
+      sys.props.getOrElse("user.dir", "."), "src/main/scala/graft")
+    assume(main.isDirectory,
+      s"source tree not visible from ${sys.props.get("user.dir")}; " +
+        "skipping source-level checkpoint/conf scan")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.sortBy(_.getName).flatMap(f =>
+        if (f.isDirectory) files(f)
+        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    def hits(fs: Seq[java.io.File], re: scala.util.matching.Regex) =
+      fs.flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        val lines = try src.getLines().toList finally src.close()
+        lines.zipWithIndex.collect { case (l, i)
+          if re.findFirstIn(l).isDefined =>
+            s"${main.toPath.relativize(f.toPath)}:${i + 1}" }
+      }
+    val pins = hits(files(main),
+      """(?<!\bTables)\.localCheckpoint\(""".r)
+    assert(pins.size == 1 && pins.head.startsWith("Tables.scala:"),
+      s"localCheckpoint outside Tables.localCheckpoint: $pins")
+    val queryCode = Seq("queries", "streaming", "sources")
+      .map(new java.io.File(main, _))
+    assert(queryCode.forall(_.isDirectory))
+    val toggles = hits(queryCode.flatMap(files),
+      """\bconf\.(set|unset)\(""".r)
+    assert(toggles.isEmpty,
+      s"session conf toggled outside Tables.withConf: $toggles")
   }
 }

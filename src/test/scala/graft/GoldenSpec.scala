@@ -5,16 +5,7 @@ package graft
   * `sbt "runMain graft.GoldenGen"`.
   */
 class GoldenSpec extends SparkSpecBase {
-
-  private val golden: Map[String, String] = {
-    val src = scala.io.Source.fromInputStream(
-      getClass.getResourceAsStream("/golden_sf0001.json"), "UTF-8")
-    try {
-      val txt = src.mkString
-      """"([a-z_0-9]+)":\s*"([0-9a-f]{32})"""".r
-        .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2)).toMap
-    } finally src.close()
-  }
+  import GoldenSpec.golden
 
   GraftExtensions.install(spark)
 
@@ -28,5 +19,19 @@ class GoldenSpec extends SparkSpecBase {
       assert(got == golden(name),
         s"$name drifted from frozen sf0.001 result")
     }
+  }
+}
+
+object GoldenSpec {
+
+  /** The frozen sf0.001 hashes, query id → md5. */
+  lazy val golden: Map[String, String] = {
+    val src = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/golden_sf0001.json"), "UTF-8")
+    try {
+      val txt = src.mkString
+      """"([a-z_0-9]+)":\s*"([0-9a-f]{32})"""".r
+        .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2)).toMap
+    } finally src.close()
   }
 }

@@ -24,4 +24,9 @@ object TestSpark {
 abstract class SparkSpecBase extends AnyFunSuite {
   def spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** Runs `body` on `ex`'s thread and waits for it; a failure rethrows
+    * wrapped in an ExecutionException. */
+  def on[T](ex: java.util.concurrent.ExecutorService)(body: => T): T =
+    java.util.concurrent.CompletableFuture.supplyAsync(() => body, ex).get()
 }
