@@ -5,14 +5,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Table readers + shared helpers for all queries.
   *
   * Design notes (scale): every reader returns a plain parquet-backed
-  * DataFrame so Catalyst keeps pushdown/pruning; the only materialization
-  * is the tokenized `documents` projection, which ~9 search queries share
-  * (SURVEY.md §4.3).
+  * DataFrame so Catalyst keeps pushdown/pruning. The search family reads
+  * two session-wide materializations instead: the tokenized `documents`
+  * projection and the [[postings]] index built from it (SURVEY.md §4.3).
   */
 object Tables {
 
@@ -269,18 +270,67 @@ object Tables {
     }
   }
 
-  /** Distinct (doc_id, term) pairs — posting-list input. Deliberately
-    * NOT persisted in its own right (round-12 interleaved A/B): a
-    * docTerms cache was measured slower for EVERY consumer class —
-    * filtered consumers lose term/doc pushdown through the cache
-    * boundary (q_index_merge 0.25 vs 0.8 s, q_search_boolean 0.2 vs
-    * 0.6), and even the full-relation self-join consumer paid more for
-    * the string-heavy cache scans than the pipelined distinct from the
-    * already-cached token stream saves (q_cooccur_pmi 1.0–1.8 plain vs
-    * 1.4–2.1 cached warm). The memo belongs one level up, on the
-    * aggregated relations (Search.df/dl, minhashPairs). */
+  private val postingsCache =
+    registerCache()
+
+  /** The inverted index, built once per (session, sfDir): one row per
+    * (term, doc_id) posting with its term frequency `tf`, the term's
+    * document frequency `df` and the document's token length `dl` —
+    * the index-time statistics every ranking function reads, so no
+    * search query re-aggregates the token stream or joins a stat table.
+    *
+    * Layout: range-partitioned on `term` to the token cache's own
+    * partition count, then sorted by (term, doc_id) within each
+    * partition, and persisted. The sort gives every cached batch tight
+    * `term` bounds, so a `term IN (…)` or prefix filter skips batches
+    * at the in-memory scan; the range partitioning satisfies term-keyed
+    * aggregates and windows without an Exchange.
+    *
+    * Round 12 measured a persisted `tokens.distinct()` (a docTerms
+    * cache) slower for every consumer: it sat at the shuffle width, so
+    * it added tasks, and its unordered batches pruned nothing, so
+    * filtered consumers lost their term pushdown. This memo differs in
+    * three ways: its width is derived from the token cache, not a
+    * knob; it is term-clustered, so term filters prune batches; and it
+    * carries df/dl, which replaces the separate stat relations and the
+    * joins every ranking query made against them. */
+  def postings(spark: SparkSession, sfDir: String): DataFrame = {
+    val key = s"${spark.sparkContext.applicationId}:$sfDir"
+    memo(postingsCache, key) {
+      val toks = tokens(spark, sfDir)
+      toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
+        .withColumn("dl", sum("tf").over(Window.partitionBy("doc_id")))
+        .repartitionByRange(toks.rdd.getNumPartitions, col("term"))
+        .sortWithinPartitions("term", "doc_id")
+        .persist()
+    }
+  }
+
+  /** Distinct (doc_id, term) pairs — the postings without their stats. */
   def docTerms(spark: SparkSession, sfDir: String): DataFrame =
-    tokens(spark, sfDir).distinct()
+    postings(spark, sfDir).select("doc_id", "term")
+
+  /** Corpus-level scalars: document count, mean document length (as
+    * the double the ranking functions divide by) and token total. */
+  final case class CorpusStats(nDocs: Long, avgdl: Double, nTokens: Long)
+
+  private val corpusStatsCache = registerAuxCache[CorpusStats]()
+
+  /** [[CorpusStats]] once per (session, sfDir), for queries to inline as
+    * literals: a scalar subquery per query costs a job and a broadcast
+    * each time. `avgdl` is Spark's `avg` over the per-document lengths,
+    * the value the stat subqueries produced, so scores are unchanged. */
+  def corpusStats(spark: SparkSession, sfDir: String): CorpusStats = {
+    val key = s"${spark.sparkContext.applicationId}:$sfDir"
+    memo(corpusStatsCache, key) {
+      val r = postings(spark, sfDir).select("doc_id", "dl").distinct()
+        .agg(avg(col("dl").cast("double")), sum("dl"))
+        .head()
+      CorpusStats(t(spark, sfDir, "documents").count(), r.getDouble(0),
+        r.getLong(1))
+    }
+  }
 
   /** 3-token shingles of a corpus text column, shared by the fingerprint /
     * n-gram-dedup / contamination family. Docs with fewer than 3 tokens

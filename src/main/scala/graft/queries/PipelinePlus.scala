@@ -19,17 +19,14 @@ object PipelinePlus {
 
   private val K = 8 // minhash signature length; 4 bands × 2 rows
 
-  /** Distinct (doc_id, term) over the deterministic doc_id%10 sample the
-    * §2.10 near-dup family shares. */
-  /** Distinct (doc_id, term) pairs of the doc_id%10 sample. NOT derived
-    * from the memoized full-corpus [[Tables.docTerms]] (round 12): that
-    * cache pins the distinct over ALL docs, so the sample filter can no
-    * longer push below the distinct and every consumer scans the full
-    * cached relation — measured +2 s on q_graph_pagerank. Filtering the
-    * token stream FIRST keeps the distinct shuffle at 10% of the corpus
-    * (Catalyst produced the same plan from the old docTerms form by
-    * pushing the filter through the distinct — written explicitly now
-    * that docTerms is a cache boundary). Deliberately NOT persisted
+  /** Distinct (doc_id, term) pairs of the deterministic doc_id%10
+    * sample the §2.10 near-dup family shares. Read from the token
+    * stream, NOT from the [[Tables.postings]] memo: the postings are
+    * clustered and sorted on `term`, so a `doc_id` predicate prunes none
+    * of their batches and every consumer would scan the whole index for
+    * a 10% sample. Filtering the token stream FIRST keeps the distinct
+    * shuffle at 10% of the corpus (round 12 measured the full-corpus
+    * cache form +2 s on q_graph_pagerank). Deliberately NOT persisted
     * itself: an interleaved A/B (round 12) measured the memoized form
     * SLOWER for the heavy consumers (q_graph_pagerank 3.2–3.7 plain vs
     * 5.4–6.9 s memoized warm; q_minhash_err 0.4 vs 1.1) — the

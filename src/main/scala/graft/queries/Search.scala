@@ -1,67 +1,28 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Search-engine core — the reference's actual domain (SURVEY.md §2.9):
   * tokenize → tf/df → inverted index → tf-idf → ranked keyword queries.
   *
-  * Scale notes: the tokenized projection is persisted once per sfDir
-  * (Tables.tokens); tf/df/index are single-shuffle groupBys on the token
-  * stream; search queries reduce to semi-join + aggregate over postings —
-  * the Spark-native analog of the reference's posting-list intersection.
+  * Scale notes: the postings index (term, doc_id, tf, df, dl) is built
+  * once per sfDir (Tables.postings) with the corpus scalars beside it
+  * (Tables.corpusStats); search queries reduce to term-filtered scans +
+  * aggregates over postings — the Spark-native analog of the reference's
+  * posting-list intersection.
   */
 object Search {
 
-  /** tf per (doc_id, term). */
-  private def tf(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.tokens(spark, sfDir)
-      .groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf"))
-
-  /** df per term — a vocabulary-bounded, build-once index statistic
-    * (one row per term). Memoized + eagerly checkpointed per (session,
-    * sfDir) like Tables.tokens: the BM25/tf-idf family references it
-    * from MANY plan positions (q_search_wand alone held FIVE copies of
-    * its scored subtree → 25 document scans per execution before round
-    * 6), and Catalyst does not reuse aggregates across aliased copies.
-    * tf deliberately stays UN-materialized: term predicates must keep
-    * pushing below the tf aggregate into the scan (a full-tf artifact
-    * would be corpus-sized and defeat pruned per-query retrieval). */
-  private val dfCache =
-    graft.Tables.registerCache()
-
-  private def df(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memo(dfCache, s"${spark.sparkContext.applicationId}:$sfDir") {
-      Tables.localCheckpoint(Tables.docTerms(spark, sfDir)
-        .groupBy("term")
-        .agg(count(lit(1)).as("df")))
-    }
-
-  /** Per-doc token length — the other bounded index statistic (one row
-    * per doc), shared by every BM25 stage. Same memoization rationale
-    * as [[df]]. */
-  private val dlCache =
-    graft.Tables.registerCache()
-
-  private[queries] def dl(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memo(dlCache, s"${spark.sparkContext.applicationId}:$sfDir") {
-      Tables.localCheckpoint(Tables.tokens(spark, sfDir)
-        .groupBy("doc_id").agg(count(lit(1)).as("dl")))
-    }
-
-  /** Single-row corpus size, cross-joined (broadcast) where needed. */
-  private def nDocs(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.t(spark, sfDir, "documents").agg(count(lit(1)).as("n_docs"))
-
-  /** Raw (unrounded) tf-idf per (doc_id, term): tf * ln(N / df). */
-  private[queries] def tfidfRaw(spark: SparkSession, sfDir: String): DataFrame =
-    tf(spark, sfDir)
-      .join(broadcast(df(spark, sfDir)), "term")
-      .crossJoin(broadcast(nDocs(spark, sfDir)))
-      .withColumn("score",
-        col("tf") * log(col("n_docs").cast("double") / col("df")))
+  /** Raw (unrounded) tf-idf per posting: tf * ln(N / df), with N the
+    * memoized corpus size inlined as a literal. */
+  private[queries] def tfidfRaw(spark: SparkSession, sfDir: String): DataFrame = {
+    val nDocs = Tables.corpusStats(spark, sfDir).nDocs
+    Tables.postings(spark, sfDir)
+      .withColumn("score", col("tf") * log(lit(nDocs.toDouble) / col("df")))
+  }
 
   // Shared oracle CTEs (DuckDB side of the same pipeline).
   private val tokSql =
@@ -80,9 +41,9 @@ object Search {
        |           FROM tf JOIN df USING (term) CROSS JOIN n)""".stripMargin
 
   def qTokenize(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.tokens(spark, sfDir)
+    Tables.postings(spark, sfDir)
       .groupBy("term")
-      .agg(count(lit(1)).as("n"))
+      .agg(sum("tf").as("n"))
       .orderBy("term")
 
   val qTokenizeSql: String =
@@ -90,15 +51,16 @@ object Search {
        |GROUP BY term ORDER BY term""".stripMargin
 
   def qTermFreq(spark: SparkSession, sfDir: String): DataFrame =
-    tf(spark, sfDir).orderBy("doc_id", "term")
+    Tables.postings(spark, sfDir).select("doc_id", "term", "tf")
+      .orderBy("doc_id", "term")
 
   val qTermFreqSql: String =
     s"""SELECT doc_id, term, count(*) AS tf FROM ($tokSql)
        |GROUP BY doc_id, term ORDER BY doc_id, term""".stripMargin
 
   def qDocFreq(spark: SparkSession, sfDir: String): DataFrame =
-    df(spark, sfDir)
-      .crossJoin(broadcast(nDocs(spark, sfDir)))
+    Tables.postings(spark, sfDir).select("term", "df").distinct()
+      .withColumn("n_docs", lit(Tables.corpusStats(spark, sfDir).nDocs))
       .orderBy("term")
 
   val qDocFreqSql: String =
@@ -221,34 +183,29 @@ object Search {
   /** BM25-scored postings (doc_id, term, s) for the given query terms,
     * k1=1.2, b=0.75. Shared by q_search_bm25 and q_search_wand — the
     * candidate-pruning path must score with the EXACT same expression or
-    * its results drift from the unpruned oracle. All stat inputs (df,
-    * n_docs, avgdl) are broadcast-sized.
+    * its results drift from the unpruned oracle. df and dl ride on the
+    * postings; n_docs and avgdl are literals.
     */
   private[graft] def bm25Scored(spark: SparkSession, sfDir: String,
       terms: Seq[String]): DataFrame =
     bm25ScoredOn(spark, sfDir,
-      tf(spark, sfDir).filter(col("term").isin(terms: _*)))
+      Tables.postings(spark, sfDir).filter(col("term").isin(terms: _*)))
 
-  /** [[bm25Scored]] over an arbitrary pre-filtered tf relation — the PRF
-    * path filters by a RUNTIME term set (broadcast join) instead of a
-    * literal IN list. */
+  /** [[bm25Scored]] over an arbitrary pre-filtered postings relation —
+    * the PRF path filters by a RUNTIME term set (broadcast join) instead
+    * of a literal IN list. */
   private[graft] def bm25ScoredOn(spark: SparkSession, sfDir: String,
-      tfIn: DataFrame): DataFrame = {
-    val dls = dl(spark, sfDir)
-    val avgdl = dls.agg(avg(col("dl").cast("double")).as("avgdl"))
-    tfIn
-      .join(broadcast(df(spark, sfDir)), "term")
-      .crossJoin(broadcast(nDocs(spark, sfDir)))
-      .join(dls, "doc_id")
-      .crossJoin(broadcast(avgdl))
+      post: DataFrame): DataFrame = {
+    val cs = Tables.corpusStats(spark, sfDir)
+    post
       .withColumn("idf",
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+        log((lit(cs.nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .withColumn("s",
         // commutes literal factors to Column-first form; IEEE * and +
         // are commutative so this is bit-equal to the oracle's
         // `tf + 1.2 * (0.25 + 0.75 * dl / avgdl)` association
         col("idf") * ((col("tf") * 2.2) /
-          (col("tf") + (col("dl") * 0.75 / col("avgdl") + 0.25) * 1.2)))
+          (col("tf") + (col("dl") * 0.75 / lit(cs.avgdl) + 0.25) * 1.2)))
       .select("doc_id", "term", "s")
   }
 
@@ -277,7 +234,7 @@ object Search {
     * ONE lexical result list that q_search_bm25 and its whole evaluation
     * family rank from: RRF fusion, interleave, NDCG/MAP, RBO, the
     * diversity re-rank, and the PRF seed stage. A build-once index
-    * artifact exactly like [[df]]/[[dl]]: |docs matching both
+    * artifact like [[Tables.postings]]: |docs matching both
     * terms|-sized (posting-bounded, never corpus-sized), memoized +
     * eagerly checkpointed per (session, sfDir) because SEVEN consumers
     * each held their own aliased copy of the full scored subtree (tf
@@ -299,8 +256,9 @@ object Search {
 
   /** BM25-ranked conjunctive-ish query (k1=1.2, b=0.75) over the same
     * terms as q_search_and — the standard upgrade over raw TF-IDF: term
-    * saturation (k1) + doc-length normalization (b). All inputs are
-    * broadcast-sized stats; the per-doc score is one narrow expression.
+    * saturation (k1) + doc-length normalization (b). Every stat is a
+    * postings column or a literal; the per-doc score is one narrow
+    * expression.
     * Formula association mirrors the oracle SQL exactly so the doubles
     * agree at round(4).
     */
@@ -341,7 +299,7 @@ object Search {
       .select("term")
     val qterms = Seq("spark", "join").toDF("term").union(ex)
     bm25ScoredOn(spark, sfDir,
-        tf(spark, sfDir).join(broadcast(qterms), "term"))
+        Tables.postings(spark, sfDir).join(broadcast(qterms), "term"))
       .groupBy("doc_id")
       .agg(countDistinct("term").as("nt"), round(sum("s"), 4).as("score"))
       .orderBy(desc("score"), asc("doc_id"))
@@ -501,28 +459,22 @@ object Search {
     * query — the language-modeling alternative to [[qSearchBm25]]'s
     * probabilistic ranking: score(d) = Σ_t ln((tf + µ·ctf_t/|C|)/(dl +
     * µ)). The two per-term components are summed in FIXED left-to-right
-    * order (IEEE-identical in both engines); ctf (corpus term counts,
-    * scan-pushed to the two query terms) and |C| (= Σ dl over the
-    * memoized [[dl]] artifact — no extra corpus pass) broadcast as
-    * 1-row stats. Scale: two term-filtered posting joins + broadcast
-    * scalars, the [[bm25Scored]] shape.
+    * order (IEEE-identical in both engines); ctf (corpus term counts)
+    * is a term-keyed window sum over the two query terms' postings, and
+    * |C| is the memoized token total, inlined as a literal. Scale: two
+    * term-filtered posting scans joined on doc_id, the [[bm25Scored]]
+    * shape.
     */
   def qSearchQld(spark: SparkSession, sfDir: String): DataFrame = {
-    val tfq = tf(spark, sfDir)
-    val a = tfq.filter(col("term") === "spark")
-      .select(col("doc_id"), col("tf").as("tf_s"))
-    val b = tfq.filter(col("term") === "join")
-      .select(col("doc_id"), col("tf").as("tf_j"))
-    val ctf = Tables.tokens(spark, sfDir)
-      .filter(col("term").isin("spark", "join"))
-      .groupBy()
-      .agg(sum(when(col("term") === "spark", 1L).otherwise(0L)).as("ctf_s"),
-        sum(when(col("term") === "join", 1L).otherwise(0L)).as("ctf_j"))
-    val nc = dl(spark, sfDir).agg(sum("dl").as("nc"))
+    val post = Tables.postings(spark, sfDir)
+      .withColumn("ctf", sum("tf").over(Window.partitionBy("term")))
+    val a = post.filter(col("term") === "spark")
+      .select(col("doc_id"), col("dl"), col("tf").as("tf_s"),
+        col("ctf").as("ctf_s"))
+    val b = post.filter(col("term") === "join")
+      .select(col("doc_id"), col("tf").as("tf_j"), col("ctf").as("ctf_j"))
     a.join(b, "doc_id")
-      .join(dl(spark, sfDir), "doc_id")
-      .crossJoin(broadcast(ctf))
-      .crossJoin(broadcast(nc))
+      .withColumn("nc", lit(Tables.corpusStats(spark, sfDir).nTokens))
       .select(col("doc_id"),
         // µ spelled CAST(... AS DOUBLE) on BOTH sides: a bare 2000.0 is
         // DECIMAL in both parsers, but Spark stays in exact-decimal

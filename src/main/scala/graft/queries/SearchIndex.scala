@@ -158,8 +158,7 @@ object SearchIndex {
     * over the same vocab table, which is one more groupBy.
     */
   def qSearchFuzzy(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.docTerms(spark, sfDir)
-      .groupBy("term").agg(count(lit(1)).as("df"))
+    Tables.postings(spark, sfDir).select("term", "df").distinct()
       .withColumn("dist", levenshtein(col("term"), lit(FuzzyQ)))
       .filter(col("dist") <= 1)
       .select(col("term"), col("dist").cast("long").as("dist"), col("df"))
@@ -193,7 +192,7 @@ object SearchIndex {
     val merged = BpeMerges.foldLeft(chars) { case (c, (a, b)) =>
       regexp_replace(c, s"$a  $b", s"$a$b")
     }
-    Tables.docTerms(spark, sfDir)
+    Tables.postings(spark, sfDir)
       .select("term").distinct()
       .withColumn("pieces",
         regexp_replace(merged, "  ", " "))
@@ -225,10 +224,10 @@ object SearchIndex {
     * convention — the driver comparator hashes scalar cells). 1-char
     * terms have no 2-gram and drop from both engines identically.
     * Scale: built entirely on the DISTINCT vocabulary (≪ corpus —
-    * the q_tok_vocab argument); the token stream is read once.
+    * the q_tok_vocab argument), read off the term-clustered postings.
     */
   def qKgramIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.tokens(spark, sfDir)
+    Tables.postings(spark, sfDir)
       .select("term").distinct()
       .filter(length(col("term")) >= 2) // Spark sequence(1,0) DESCENDS
       .select(col("term"), explode(expr(
@@ -263,12 +262,12 @@ object SearchIndex {
     * all-vocab edit-distance scan at real vocabulary sizes), then
     * levenshtein ≤ 2 verifies, and candidates rank by (distance,
     * corpus frequency desc, term). Both engines implement levenshtein
-    * identically (unit-cost DP). Everything is vocabulary-bounded; the
-    * corpus is touched once for term frequencies.
+    * identically (unit-cost DP). Everything is vocabulary-bounded; term
+    * frequencies are the per-term sum of the postings' tf.
     */
   def qSpellCorrect(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.tokens(spark, sfDir)
-      .groupBy("term").agg(count(lit(1)).as("ctf"))
+    Tables.postings(spark, sfDir)
+      .groupBy("term").agg(sum("tf").as("ctf"))
       .filter(length(col("term")) >= 2)
       .withColumn("grams", expr(
         "transform(sequence(1, length(term) - 1)," +
@@ -326,8 +325,7 @@ object SearchIndex {
     * index must prove.
     */
   def qFuzzyDeletion(spark: SparkSession, sfDir: String): DataFrame = {
-    val vocab = Tables.docTerms(spark, sfDir)
-      .groupBy("term").agg(count(lit(1)).as("df"))
+    val vocab = Tables.postings(spark, sfDir).select("term", "df").distinct()
     // (delkey, term, df) index rows: the term itself + one row per
     // single-character deletion, built in-row (no join, no UDF)
     val dels = array_distinct(concat(

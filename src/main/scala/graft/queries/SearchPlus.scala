@@ -63,19 +63,13 @@ object SearchPlus {
     * signal. log2 of a ratio of exact integer counts; round(4) absorbs
     * libm last-ulp differences (q_fn_trig precedent). */
   def qCooccurPmi(spark: SparkSession, sfDir: String): DataFrame = {
-    // THREE consumers of the distinct (doc_id, term) relation (the df
-    // aggregate + both self-join sides) — each re-ran the scan →
-    // explode → distinct chain (round-13 plan dump: 7 parquet scans).
-    // Per-invocation checkpoint, the keyphrase/winnow discipline; the
-    // cross-query docTerms memo stays rejected (round 12: pushdown lost
-    // through the cache boundary for OTHER consumer classes — this
-    // query projects no columns and pushes no filters, so it loses
-    // nothing).
-    val dt =
-      Tables.localCheckpoint(Tables.docTerms(spark, sfDir), eager = false)
-    val n = Tables.t(spark, sfDir, "documents")
-      .agg(count(lit(1)).as("n_docs"))
-    val df_ = dt.groupBy("term").agg(count(lit(1)).as("df"))
+    // every input comes from the postings memo: both self-join sides
+    // read its (doc_id, term) pairs, df is its per-term column and
+    // n_docs a literal, so the three consumers share one persisted
+    // relation and nothing is distinct-ed or checkpointed per invocation
+    val post = Tables.postings(spark, sfDir)
+    val dt = post.select("doc_id", "term")
+    val df_ = post.select("term", "df").distinct()
     val pairs = dt.toDF("doc_id", "ta")
       .join(dt.toDF("doc_id", "tb"), Seq("doc_id"))
       .filter(col("ta") < col("tb"))
@@ -84,7 +78,7 @@ object SearchPlus {
     pairs
       .join(broadcast(df_.toDF("ta", "dfa")), Seq("ta"))
       .join(broadcast(df_.toDF("tb", "dfb")), Seq("tb"))
-      .crossJoin(broadcast(n))
+      .withColumn("n_docs", lit(Tables.corpusStats(spark, sfDir).nDocs))
       .select(col("ta"), col("tb"), col("nab"),
         round(log2(col("nab") * col("n_docs") /
           (col("dfa") * col("dfb"))), 4).as("pmi"))
@@ -318,9 +312,9 @@ object SearchPlus {
       .limit(10)
       .withColumn("r", row_number().over(
         Window.orderBy(desc("score"), asc("doc_id"))))
-    val rel = Tables.tokens(spark, sfDir)
+    val rel = Tables.postings(spark, sfDir)
       .filter(col("term") === "spark")
-      .groupBy("doc_id").agg(count(lit(1)).as("rel"))
+      .select(col("doc_id"), col("tf").as("rel"))
     ranked.join(rel, "doc_id")
       .withColumn("ir", row_number().over(
         Window.orderBy(desc("rel"), asc("doc_id"))))
@@ -400,10 +394,8 @@ object SearchPlus {
       .limit(10)
       .withColumn("r", row_number().over(
         Window.orderBy(desc("score"), asc("doc_id"))))
-    val rel = Tables.tokens(spark, sfDir)
-      .filter(col("term") === "spark")
-      .groupBy("doc_id").agg(count(lit(1)).as("tf"))
-      .filter(col("tf") >= 2)
+    val rel = Tables.postings(spark, sfDir)
+      .filter(col("term") === "spark" && col("tf") >= 2)
       .select("doc_id")
     val nrel = rel.agg(count(lit(1)).as("n_rel"))
     ranked.join(rel.withColumn("relv", lit(1L)), Seq("doc_id"), "left")
@@ -547,10 +539,8 @@ object SearchPlus {
       .select(col("term"), col("doc_id"), round(col("s"), 4).as("score"))
       .withColumn("r", row_number().over(byTerm))
       .filter(col("r") <= 10)
-    val rel = graft.Tables.tokens(spark, sfDir)
-      .filter(col("term").isin(MrrQueries: _*))
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-      .filter(col("tf") >= 2)
+    val rel = Tables.postings(spark, sfDir)
+      .filter(col("term").isin(MrrQueries: _*) && col("tf") >= 2)
       .select("term", "doc_id")
     val firstRel = ranked.join(rel, Seq("term", "doc_id"))
       .groupBy("term").agg(min("r").as("first_rel_rank"))
@@ -600,17 +590,17 @@ object SearchPlus {
     * ln((c_rest+1)/(n_rest−c_rest+1)), i.e. the term's in-source odds
     * against its odds everywhere else. Complements [[qKeywords]]' TF-IDF
     * (which favors rarity) with a contrastive statistic. Scale: ONE
-    * corpus pass builds the (source, term) count relation; everything
+    * postings pass builds the (source, term) count relation; everything
     * after — the marginal windows, the log-odds, the per-source rank —
     * runs over the |sources|×|vocab| bounded relation, never documents.
     * Determinism: every ln argument is a ratio of exact BIGINTs; ranks
     * compare the round(4) value with the term tiebreak.
     */
   def qTopicLodds(spark: SparkSession, sfDir: String): DataFrame = {
-    val st = graft.Tables.tokens(spark, sfDir)
-      .join(graft.Tables.t(spark, sfDir, "documents")
+    val st = Tables.postings(spark, sfDir)
+      .join(Tables.t(spark, sfDir, "documents")
         .select("doc_id", "source"), "doc_id")
-      .groupBy("source", "term").agg(count(lit(1)).as("cst"))
+      .groupBy("source", "term").agg(sum("tf").as("cst"))
     val wT = Window.partitionBy("term")
     val wS = Window.partitionBy("source")
     val scored = st

@@ -12,9 +12,9 @@ import graft.Tables
   * Scale design shared by all four: the per-term stages run inside
   * posting-list partitions (term-keyed windows — the index-build shape
   * every op in §2.9 already uses), query-time stages touch only
-  * term-filtered postings with broadcast corpus stats, and every rank
-  * key is either exact-integer or a fixed-association double landing on
-  * round(4).
+  * term-filtered postings (df/dl ride on each posting, the corpus
+  * scalars are literals), and every rank key is either exact-integer or
+  * a fixed-association double landing on round(4).
   */
 object SearchRank {
 
@@ -32,11 +32,11 @@ object SearchRank {
     * ceil(sqrt(int)) is correctly-rounded IEEE on both engines.
     */
   def qIdxSkiplist(spark: SparkSession, sfDir: String): DataFrame = {
-    val post = Tables.docTerms(spark, sfDir)
-    val top = post.groupBy("term").agg(count(lit(1)).as("df"))
+    val post = Tables.postings(spark, sfDir)
+    val top = post.select("term", "df").distinct()
       .orderBy(desc("df"), asc("term")).limit(10)
     val wT = Window.partitionBy("term").orderBy("doc_id")
-    post.join(broadcast(top), "term")
+    post.join(broadcast(top.select("term")), "term")
       .withColumn("pos", row_number().over(wT))
       .withColumn("skip_len",
         ceil(sqrt(col("df").cast("double"))).cast("long"))
@@ -75,9 +75,8 @@ object SearchRank {
     * are ≤8 rows; everything else is posting-bounded aggregation.
     */
   def qIdxImpact(spark: SparkSession, sfDir: String): DataFrame = {
-    val tf = Tables.tokens(spark, sfDir)
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val top = tf.groupBy("term").agg(count(lit(1)).as("df"))
+    val tf = Tables.postings(spark, sfDir)
+    val top = tf.select("term", "df").distinct()
       .orderBy(desc("df"), asc("term")).limit(5)
     val tiers = tf.join(broadcast(top.select("term")), "term")
       .withColumn("impact", least(col("tf"), lit(8L)))
@@ -119,10 +118,11 @@ object SearchRank {
     * conjunctive query: the weighted tf is the exact integer
     * 2·tf_title + tf_body, then the standard BM25 saturation
     * (k1 = 1.2, b = 0.75) over it, per-term scores summed in FIXED
-    * a + b order (2 addends — IEEE-commutative across engines). Stats
-    * (df, dl, avgdl, N) broadcast; the corpus is touched only through
-    * the two term-filtered posting joins. Constants spelled identically
-    * to [[Search.bm25ScoredOn]]'s association.
+    * a + b order (2 addends — IEEE-commutative across engines). df and
+    * dl come from the two query terms' postings, avgdl and N are
+    * literals; the corpus is read only for the positional field split.
+    * Constants spelled identically to [[Search.bm25ScoredOn]]'s
+    * association.
     */
   def qBm25f(spark: SparkSession, sfDir: String): DataFrame = {
     val toks = Tables.t(spark, sfDir, "documents")
@@ -132,25 +132,17 @@ object SearchRank {
     val wtf = toks
       .groupBy("doc_id", "term")
       .agg((sum(when(col("p0") < 5, 2L).otherwise(1L))).as("wtf"))
-    val dfr = Tables.docTerms(spark, sfDir)
+    val stats = Tables.postings(spark, sfDir)
       .filter(col("term").isin("spark", "join"))
-      .groupBy("term").agg(count(lit(1)).as("df"))
-    // the memoized per-doc length table (Search.dl) — this query
-    // previously re-ran the token-stream groupBy per consumer (round 12)
-    val dl = Search.dl(spark, sfDir)
-    val avgdl = dl.agg(avg(col("dl").cast("double")).as("avgdl"))
-    val nDocs = Tables.t(spark, sfDir, "documents")
-      .agg(count(lit(1)).as("n_docs"))
+      .select("term", "doc_id", "df", "dl")
+    val cs = Tables.corpusStats(spark, sfDir)
     val scored = wtf
-      .join(broadcast(dfr), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(avgdl))
-      .crossJoin(broadcast(nDocs))
+      .join(stats, Seq("term", "doc_id"))
       .withColumn("idf",
-        log((col("n_docs") - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
+        log((lit(cs.nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .withColumn("s",
         col("idf") * ((col("wtf") * 2.2) /
-          (col("wtf") + (col("dl") * 0.75 / col("avgdl") + 0.25) * 1.2)))
+          (col("wtf") + (col("dl") * 0.75 / lit(cs.avgdl) + 0.25) * 1.2)))
     // both-terms AND via one conditional aggregation (round 12): the
     // a⋈b self-join consumed `scored` twice, re-running the whole
     // score chain per side; (doc_id, term) is unique so the
@@ -206,23 +198,14 @@ object SearchRank {
     * agree; the 2 per-term scores sum in fixed a + b order.
     */
   def qSearchPl2(spark: SparkSession, sfDir: String): DataFrame = {
-    val tf = Tables.tokens(spark, sfDir)
+    // ctf is a window sum inside each query term's postings, and the
+    // corpus scalars are literals: the score chain has no join at all
+    val cs = Tables.corpusStats(spark, sfDir)
+    val scored = Tables.postings(spark, sfDir)
       .filter(col("term").isin("spark", "join"))
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val ctf = Tables.tokens(spark, sfDir)
-      .filter(col("term").isin("spark", "join"))
-      .groupBy("term").agg(count(lit(1)).as("ctf"))
-    // the memoized per-doc length table (Search.dl) — this query
-    // previously re-ran the token-stream groupBy per consumer (round 12)
-    val dl = Search.dl(spark, sfDir)
-    val avgdl = dl.agg(avg(col("dl").cast("double")).as("avgdl"))
-    val nDocs = Tables.t(spark, sfDir, "documents")
-      .agg(count(lit(1)).as("n_docs"))
-    val scored = tf
-      .join(broadcast(ctf), "term")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(avgdl))
-      .crossJoin(broadcast(nDocs))
+      .withColumn("ctf", sum("tf").over(Window.partitionBy("term")))
+      .withColumn("avgdl", lit(cs.avgdl))
+      .withColumn("n_docs", lit(cs.nDocs))
       .withColumn("tfn", expr("tf * log2(1 + avgdl / dl)"))
       .withColumn("lam", expr("ctf / CAST(n_docs AS DOUBLE)"))
       .withColumn("s", expr(

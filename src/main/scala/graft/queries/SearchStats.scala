@@ -142,8 +142,8 @@ object SearchStats {
     * mergeable co-moments (q_corr_stats precedent), round(4).
     */
   def qZipfFit(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.tokens(spark, sfDir)
-      .groupBy("term").agg(count(lit(1)).as("c"))
+    Tables.postings(spark, sfDir)
+      .groupBy("term").agg(sum("tf").as("c"))
       .withColumn("rank",
         row_number().over(Window.orderBy(desc("c"), asc("term"))))
       .agg(count(lit(1)).as("n_terms"),
@@ -174,19 +174,16 @@ object SearchStats {
 
   /** Index observability: per segment (even/odd doc split — the same
     * segmentation q_index_merge compacts), distinct terms, posting
-    * count, and token total. One aggregate pass; the triple-distinct
-    * Expand is fine on bounded segments — a warehouse-scale profile
-    * swaps in approx_count_distinct sketches (q_stats_profile
-    * precedent).
+    * count, and token total. One aggregate pass over the postings: a
+    * posting is one row and its tf is its token count, so only the
+    * term count needs a distinct.
     */
   def qSegmentStats(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.t(spark, sfDir, "documents")
-      .select((col("doc_id") % 2).as("segment"), col("doc_id"),
-        explode(split(col("text"), " ")).as("term"))
-      .groupBy("segment")
+    Tables.postings(spark, sfDir)
+      .groupBy((col("doc_id") % 2).as("segment"))
       .agg(countDistinct("term").as("n_terms"),
-        countDistinct("term", "doc_id").as("n_postings"),
-        count(lit(1)).as("n_tokens"))
+        count(lit(1)).as("n_postings"),
+        sum("tf").as("n_tokens"))
       .orderBy("segment")
 
   val qSegmentStatsSql: String =
@@ -208,8 +205,8 @@ object SearchStats {
   def qAutocomplete(spark: SparkSession, sfDir: String): DataFrame = {
     val byPrefix = Window.partitionBy("prefix")
       .orderBy(desc("tf"), asc("term"))
-    Tables.tokens(spark, sfDir)
-      .groupBy("term").agg(count(lit(1)).as("tf"))
+    Tables.postings(spark, sfDir)
+      .groupBy("term").agg(sum("tf").as("tf"))
       .filter(length(col("term")) >= 2)
       .withColumn("prefix", substring(col("term"), 1, 2))
       .withColumn("rank", row_number().over(byPrefix))
@@ -292,7 +289,7 @@ object SearchStats {
     * identical output/oracle/golden; the corpus-sized window is gone.
     */
   def qIdxPrefix(spark: SparkSession, sfDir: String): DataFrame = {
-    val v = Tables.tokens(spark, sfDir).select("term").distinct()
+    val v = Tables.postings(spark, sfDir).select("term").distinct()
       .withColumn("b", substring(col("term"), 1, 1))
     // per-bucket boundary: the max term of the PREVIOUS non-empty bucket
     // (bounded ≤|alphabet| rows, so its own window is trivially small)
@@ -343,13 +340,13 @@ object SearchStats {
   // ─────────────── faceted search ───────────────
 
   /** Faceted search: the (lang × source) facet counts a result page
-    * shows next to the 'spark' hit list. The hit set comes from the
-    * term-filtered postings (a pushable equi-filter), facets are one
-    * partial-aggregable groupBy on the bounded facet space.
+    * shows next to the 'spark' hit list. The hit set is the term's
+    * postings (one row per doc), facets are one partial-aggregable
+    * groupBy on the bounded facet space.
     */
   def qSearchFacets(spark: SparkSession, sfDir: String): DataFrame = {
     val hits = Tables.docTerms(spark, sfDir)
-      .filter(col("term") === "spark").select("doc_id").distinct()
+      .filter(col("term") === "spark").select("doc_id")
     Tables.t(spark, sfDir, "documents")
       .join(hits, "doc_id")
       .groupBy("lang", "source")
@@ -373,18 +370,12 @@ object SearchStats {
     * with df ≥ 70% of the corpus are dropped — the sizing decision an
     * index builder makes before materializing posting lists. Exact
     * integer arithmetic throughout (df·100 ≥ n_docs·70 avoids any
-    * float ratio); one vocab-bounded aggregate over the (term, doc)
-    * postings table.
+    * float ratio); one vocab-bounded aggregate over the per-term df of
+    * the postings, with the corpus size inlined as a literal.
     */
-  def qIdxStopword(spark: SparkSession, sfDir: String): DataFrame = {
-    // docTerms (distinct (term, doc) pairs) suffices: the pruning stats
-    // are document-frequency-only, and the collection-frequency column a
-    // previous version also computed was never read by any output.
-    val dfp = Tables.docTerms(spark, sfDir)
-      .groupBy("term").agg(count(lit(1)).as("df"))
-    val n = Tables.t(spark, sfDir, "documents")
-      .agg(count(lit(1)).as("n_docs"))
-    dfp.crossJoin(broadcast(n))
+  def qIdxStopword(spark: SparkSession, sfDir: String): DataFrame =
+    Tables.postings(spark, sfDir).select("term", "df").distinct()
+      .withColumn("n_docs", lit(Tables.corpusStats(spark, sfDir).nDocs))
       .agg(count(lit(1)).as("n_terms"),
         sum(when(col("df") * 100 >= col("n_docs") * 70, 1L).otherwise(0L))
           .as("n_stop"),
@@ -394,7 +385,6 @@ object SearchStats {
         expr("(sum(CASE WHEN df * 100 >= n_docs * 70 THEN df ELSE 0 END)" +
           " * 1000000) div sum(df)").as("pruned_ppm"))
       .orderBy("n_terms")
-  }
 
   val qIdxStopwordSql: String =
     """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
@@ -417,12 +407,11 @@ object SearchStats {
   /** Tier-1 champion lists: the top-3 docs per term by tf — the
     * precomputed high-score tier a tiered index serves before touching
     * the full posting list. Rank window partitions on term over the
-    * aggregated postings; each partition is one posting list.
+    * postings, which are already term-partitioned: no Exchange.
     */
   def qIdxChampion(spark: SparkSession, sfDir: String): DataFrame = {
     val byTerm = Window.partitionBy("term").orderBy(desc("tf"), asc("doc_id"))
-    Tables.tokens(spark, sfDir)
-      .groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+    Tables.postings(spark, sfDir)
       .withColumn("rank", row_number().over(byTerm))
       .filter(col("rank") <= 3)
       .select(col("term"), col("rank").cast("long").as("rank"),
@@ -488,13 +477,14 @@ object SearchStats {
     * order) — the diagnostic that sizes term dictionaries and predicts
     * OOV rates as a corpus grows, complementing [[qZipfFit]]'s
     * rank-frequency view. The curve needs only each term's FIRST doc_id
-    * (one token-stream aggregate): V(threshold) = |{terms: first_doc ≤
-    * threshold}|, evaluated against a broadcast 10-row decile grid via
-    * a bounded theta join — the vocabulary is never re-scanned per
-    * decile and the token stream is read once. All exact ints.
+    * (one term-keyed postings aggregate): V(threshold) = |{terms:
+    * first_doc ≤ threshold}|, evaluated against a broadcast 10-row
+    * decile grid via a bounded theta join — the vocabulary is never
+    * re-scanned per decile and the postings are read once. All exact
+    * ints.
     */
   def qHeapsLaw(spark: SparkSession, sfDir: String): DataFrame = {
-    val fm = Tables.tokens(spark, sfDir)
+    val fm = Tables.postings(spark, sfDir)
       .groupBy("term").agg(min("doc_id").as("fd"))
     val mx = Tables.t(spark, sfDir, "documents")
       .agg(max("doc_id").as("m"))

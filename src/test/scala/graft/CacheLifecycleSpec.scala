@@ -13,7 +13,8 @@ import graft.queries.SearchIndex
   * loop-internal localCheckpoint RDDs that DataFrame.unpersist cannot
   * reach — whichever owner holds them: the session owner (memo builds,
   * direct calls that bypass SparkEntry) or an invocation owner on any
-  * thread — and must NOT touch anything the HOST application pinned
+  * thread — plus the postings memo and the corpus-scalar aux cache,
+  * and must NOT touch anything the HOST application pinned
   * itself (a blanket sweep would permanently break a host-owned
   * localCheckpointed RDD: its blocks cannot be recomputed).
   */
@@ -45,13 +46,20 @@ class CacheLifecycleSpec extends SparkSpecBase {
     }
     // an invocation owner that is not the test thread's
     val worker = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val pmiPins = try pinsOf(on(worker)(
-      SparkEntry.queries("q_cooccur_pmi")(spark, sfA).collect()))
+    val workerPins = try pinsOf(on(worker)(
+      SparkEntry.queries("q_search_wand")(spark, sfA).collect()))
     finally worker.shutdown()
     // a direct call bypassing SparkEntry pins into the session owner
     val wandPins = pinsOf(SearchIndex.qSearchWand(spark, sfA).collect())
-    assert(pmiPins.nonEmpty && wandPins.nonEmpty,
+    assert(workerPins.nonEmpty && wandPins.nonEmpty,
       "the second-thread and direct calls should have pinned checkpoints")
+    // the postings memo and the corpus scalars, at both sfDirs
+    val postA = Tables.postings(spark, sfA)
+    val postRows = postA.orderBy("term", "doc_id").collect()
+    Tables.postings(spark, sfB).count()
+    val statsA = Tables.corpusStats(spark, sfA)
+    Tables.corpusStats(spark, sfB)
+    assert(postA.storageLevel != StorageLevel.NONE)
     val enginePinned = sc.getPersistentRDDs.keySet.diff(preEngine)
     assert(enginePinned.nonEmpty, "the sweep should have pinned relations")
     Tables.clearCaches(spark)
@@ -68,6 +76,16 @@ class CacheLifecycleSpec extends SparkSpecBase {
     assert(hostRdd.getStorageLevel != StorageLevel.NONE)
     assert(hostCkpt.count() == 50,
       "host localCheckpoint blocks were destroyed by the engine sweep")
+    // the postings buffers are released, and both memos rebuild equal
+    assert(postA.storageLevel == StorageLevel.NONE,
+      "clearCaches left the postings memo cached")
+    val postA2 = Tables.postings(spark, sfA)
+    assert(!(postA2 eq postA))
+    assert(postA2.orderBy("term", "doc_id").collect().toSeq == postRows.toSeq,
+      "post-clear postings rebuild diverged")
+    val statsA2 = Tables.corpusStats(spark, sfA)
+    assert(!(statsA2 eq statsA) && statsA2 == statsA,
+      "corpus scalars were not re-derived equal after clearCaches")
     // consumers rebuild from parquet after the reset — same answer
     val rebuilt = SparkEntry.queries("q_dedup_cluster")(spark, sfA).collect()
     assert(rebuilt.toSeq == expected.toSeq,

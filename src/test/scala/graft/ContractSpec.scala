@@ -170,4 +170,26 @@ class ContractSpec extends SparkSpecBase {
     assert(toggles.isEmpty,
       s"session conf toggled outside Tables.withConf: $toggles")
   }
+
+  test("search stats come from the corpus-scalar memo (source-level)") {
+    // n_docs and avgdl are memoized once per sfDir by
+    // Tables.corpusStats and inlined as literals; a query that derives
+    // them itself brings back a scalar job and broadcast per execution
+    val queries = new java.io.File(
+      sys.props.getOrElse("user.dir", "."), "src/main/scala/graft/queries")
+    assume(queries.isDirectory,
+      s"source tree not visible from ${sys.props.get("user.dir")}; " +
+        "skipping source-level corpus-scalar scan")
+    val scalarRe =
+      """"documents"\)\s*\.agg\(count\(lit\(1\)\)|avg\(col\("dl"\)""".r
+    val found = queries.listFiles.toSeq.sortBy(_.getName)
+      .filter(_.getName.endsWith(".scala")).flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        val text = try src.mkString finally src.close()
+        scalarRe.findAllMatchIn(text).map(m =>
+          s"${f.getName}:${text.take(m.start).count(_ == '\n') + 1}")
+      }
+    assert(found.isEmpty,
+      s"per-query corpus scalar outside Tables.corpusStats: $found")
+  }
 }

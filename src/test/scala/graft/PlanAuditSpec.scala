@@ -12,6 +12,23 @@ class PlanAuditSpec extends SparkSpecBase {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** [[plan]] without the plans that populated the cached relations it
+    * reads: an InMemoryRelation prints its build plan under the scan,
+    * but that plan ran once per session and is not this query's work.
+    * A line belongs to the build when it is indented deeper than the
+    * InMemoryRelation line above it (tree bars `:` and `|` aside). */
+  private def ownPlan(name: String): String = {
+    var cut = -1
+    plan(name).linesIterator.filter { l =>
+      val indent = l.indexWhere(c => c != ' ' && c != ':' && c != '|')
+      if (cut >= 0 && indent > cut) false
+      else {
+        cut = if (l.contains("InMemoryRelation")) indent else -1
+        true
+      }
+    }.mkString("\n")
+  }
+
   test("q_scan_filter pushes the shipdate predicate to the parquet scan") {
     val p = plan("q_scan_filter")
     assert(p.contains("PushedFilters") && p.contains("l_shipdate"),
@@ -441,7 +458,7 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("q_autocomplete ranks inside prefix partitions over the vocab") {
-    val p = plan("q_autocomplete")
+    val p = ownPlan("q_autocomplete")
     val winLines = p.linesIterator.filter(_.contains("Window")).toSeq
     assert(winLines.nonEmpty && winLines.forall(_.contains("prefix")),
       s"completion ranking lost its prefix partition spec:\n$p")
@@ -534,7 +551,7 @@ class PlanAuditSpec extends SparkSpecBase {
     val p = plan("q_search_qld")
     assert(p.contains("BroadcastHashJoin")
         || p.contains("BroadcastExchange"),
-      s"the 1-row ctf/nc stats are not broadcast:\n$p")
+      s"the two term-filtered posting sides are not broadcast-joined:\n$p")
     assert(!p.contains("SortMergeJoin"),
       s"term-filtered posting join regressed to sort-merge:\n$p")
   }
@@ -623,10 +640,25 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("q_idx_champion windows only posting-list partitions") {
-    val p = plan("q_idx_champion")
+    val p = ownPlan("q_idx_champion")
     val winLines = p.linesIterator.filter(_.contains("Window")).toSeq
     assert(winLines.nonEmpty && winLines.forall(_.contains("term")),
       s"champion ranking lost its term partition spec:\n$p")
+  }
+
+  test("the search family reads the postings memo: no parquet scan, no term re-shuffle") {
+    // postings carry tf/df/dl and the corpus scalars are literals, so
+    // these ops never reach the documents table or re-aggregate tokens
+    Seq("q_search_and", "q_search_or", "q_search_not", "q_search_prefix",
+      "q_vsm_cosine", "q_search_pl2", "q_search_qld", "q_idx_stopword",
+      "q_bm25_prf", "q_search_wand").foreach { q =>
+      val p = ownPlan(q)
+      assert(!p.contains("Scan parquet"), s"$q scans parquet:\n$p")
+    }
+    // the champion window runs on the term-partitioned postings as laid out
+    val p = ownPlan("q_idx_champion")
+    assert(!p.contains("Exchange hashpartitioning(term"),
+      s"q_idx_champion re-shuffles the postings on term:\n$p")
   }
 
   test("q_sample_weighted is one TakeOrdered pass — no Exchange, no global Sort") {
@@ -1106,12 +1138,20 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("q_bm25f and q_search_pl2 push term predicates to the scan; stats broadcast") {
-    Seq("q_bm25f", "q_search_pl2").foreach { q =>
-      val p = plan(q)
-      assert(p.contains("BroadcastHashJoin") ||
-        p.contains("BroadcastNestedLoopJoin"),
-        s"$q corpus stats are not broadcast:\n$p")
-      assert(!p.contains("CartesianProduct"), s"$q grew a cartesian:\n$p")
+    // the corpus stats are literals and df/dl ride on the postings, so
+    // there is no stat relation left to broadcast; what must hold is
+    // that the postings scan is term-pruned, that no stat subquery
+    // scans documents (q_bm25f keeps exactly its one positional scan),
+    // and that no join shuffles or degenerates to a cartesian
+    Seq("q_bm25f" -> 1, "q_search_pl2" -> 0).foreach { case (q, scans) =>
+      val p = ownPlan(q)
+      assert(p.linesIterator.exists(l => l.contains("InMemoryTableScan")
+          && l.contains("IN (spark,join)")),
+        s"$q postings scan lost its term predicate:\n$p")
+      assert(p.linesIterator.count(_.contains("Scan parquet")) == scans,
+        s"$q scans documents beyond its positional split:\n$p")
+      assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"),
+        s"$q grew a cartesian or a shuffled join:\n$p")
     }
   }
 
