@@ -6,8 +6,8 @@ fact tables replicated with remapped keys, dims kept fixed — and the
 engine is then probed on both dirs with fresh-JVM timing:
 
     python3 scripts/scale_probe.py                 # generate /tmp/sf1x
-    sbt -batch "runMain graft.Probe /root/testdata/sf0.1 --time <Qs>"
-    sbt -batch "runMain graft.Probe /tmp/sf1x      --time <Qs>"
+    sbt -batch "runMain graft.Dev time /root/testdata/sf0.1 <Qs>"
+    sbt -batch "runMain graft.Dev time /tmp/sf1x      <Qs>"
 
 Key remapping keeps referential integrity (l_orderkey offsets match
 o_orderkey offsets; o_custkey reuses the fixed customer dim — more

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 object Bench {
@@ -35,29 +34,13 @@ object Bench {
   // Locale.ROOT, NOT the f-interpolator: f"$v%.3f" uses the JVM default
   // locale, and a comma-decimal locale (de_DE, fr_FR) would turn the
   // driver-parsed stdout line into invalid JSON ("value":123,456) — the
-  // same class of box-dependence as the UTC pin below.
+  // same class of box-dependence as the UTC pin in Session.local.
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // size-based AQE coalescing: with parallelismFirst (the default)
-      // AQE keeps tiny partitions to maximize parallelism, which at small
-      // SFs turns every query into pure task-launch overhead; at cluster
-      // scale size-based is the recommended setting too.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // same UTC pin as Verify/Smoke/Golden: timings don't care, but a
-      // non-UTC box must not make the benched plans compute different
-      // values than the graded ones
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Session.local()
     // JVM/codegen warmup outside the timed loop (the first timed query
     // otherwise absorbs ~3 s of JIT + codegen compilation), PLUS one
     // footer-read + metadata count per table: cold parquet footers/IO

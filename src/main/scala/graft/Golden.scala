@@ -60,14 +60,7 @@ object Golden {
   * `sbt "runMain graft.GoldenGen"`, then review the diff. */
 object GoldenGen {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = Session.local()
     val sf = "/root/testdata/sf0.001"
     val entries = Golden.goldenKeys.map { name =>
       s"""  "$name": "${Golden.hash(SparkEntry.queries(name)(spark, sf))}""""

@@ -29,7 +29,7 @@ object OptimizeTokenCount extends Rule[LogicalPlan] {
   * native functions + optimizer rule, registered either via
   * `spark.sql.extensions=graft.GraftExtensions` (new sessions) or
   * [[GraftExtensions.install]] (an already-running session, which is what
-  * Verify/Bench/tests use).
+  * [[Session.local]] and the tests use).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(ext: SparkSessionExtensions): Unit = {

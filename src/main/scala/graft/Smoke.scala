@@ -7,6 +7,7 @@ import org.apache.spark.sql.SparkSession
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
+    // not Session.local: like the t1 gate, no GraftExtensions, so entry is checked without engine setup
     val spark = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")

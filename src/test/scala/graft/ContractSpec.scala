@@ -137,6 +137,22 @@ class ContractSpec extends SparkSpecBase {
       s"duplicate oracleSql keys: ${dups(text.substring(oStart))}")
   }
 
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    d.listFiles.toSeq.sortBy(_.getName).flatMap(f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+
+  /** `path:line` (relative to `root`) of every line in `fs` matching `re`. */
+  private def hits(root: java.io.File, fs: Seq[java.io.File],
+      re: scala.util.matching.Regex): Seq[String] =
+    fs.flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toList finally src.close()
+      lines.zipWithIndex.collect { case (l, i)
+        if re.findFirstIn(l).isDefined =>
+          s"${root.toPath.relativize(f.toPath)}:${i + 1}" }
+    }
+
   test("checkpoints and conf toggles go through Tables (source-level)") {
     // Tables.localCheckpoint records each pin in its owner and
     // Tables.withConf serializes session-conf toggles; a direct call in
@@ -146,29 +162,38 @@ class ContractSpec extends SparkSpecBase {
     assume(main.isDirectory,
       s"source tree not visible from ${sys.props.get("user.dir")}; " +
         "skipping source-level checkpoint/conf scan")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.sortBy(_.getName).flatMap(f =>
-        if (f.isDirectory) files(f)
-        else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    def hits(fs: Seq[java.io.File], re: scala.util.matching.Regex) =
-      fs.flatMap { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        val lines = try src.getLines().toList finally src.close()
-        lines.zipWithIndex.collect { case (l, i)
-          if re.findFirstIn(l).isDefined =>
-            s"${main.toPath.relativize(f.toPath)}:${i + 1}" }
-      }
-    val pins = hits(files(main),
+    val pins = hits(main, scalaFiles(main),
       """(?<!\bTables)\.localCheckpoint\(""".r)
     assert(pins.size == 1 && pins.head.startsWith("Tables.scala:"),
       s"localCheckpoint outside Tables.localCheckpoint: $pins")
     val queryCode = Seq("queries", "streaming", "sources")
       .map(new java.io.File(main, _))
     assert(queryCode.forall(_.isDirectory))
-    val toggles = hits(queryCode.flatMap(files),
+    val toggles = hits(main, queryCode.flatMap(scalaFiles),
       """\bconf\.(set|unset)\(""".r)
     assert(toggles.isEmpty,
       s"session conf toggled outside Tables.withConf: $toggles")
+  }
+
+  test("session setup lives in graft.Session (source-level)") {
+    // Session.local is the one benched session config; a hand-copied
+    // builder drifts from it (core count, coalescing, extensions). Smoke
+    // keeps its plain driver-shaped session; Shim builds sibling sessions.
+    val main = new java.io.File(
+      sys.props.getOrElse("user.dir", "."), "src/main/scala")
+    assume(main.isDirectory,
+      s"source tree not visible from ${sys.props.get("user.dir")}; " +
+        "skipping source-level session scan")
+    def outside(re: String, allowed: String*): Seq[String] =
+      hits(main, scalaFiles(main), re.r)
+        .filterNot(h => allowed.exists(a => h.startsWith(s"$a:")))
+    val builders = outside("""SparkSession\.builder""", "graft/Session.scala",
+      "graft/Smoke.scala", "org/apache/spark/sql/graft/Shim.scala")
+    assert(builders.isEmpty, s"session built outside Session.local: $builders")
+    for (needle <- Seq("""GraftExtensions\.install\(""", "SPARK_GRAFT_CPUS")) {
+      val found = outside(needle, "graft/Session.scala")
+      assert(found.isEmpty, s"$needle outside Session.local: $found")
+    }
   }
 
   test("search stats come from the corpus-scalar memo (source-level)") {
