@@ -156,17 +156,38 @@ object Tables {
     () => { t.join(); out.fold(e => throw e, identity) }
   }
 
+  /** Runs `body` against a clone of `spark` with each `key -> value` set
+    * on the clone only, so the caller's conf is never written and other
+    * threads never see the keys. `body` gets `in`, which rebinds a
+    * relation built on the caller's session into the clone; the
+    * relation `body` returns is rebound into the caller's session, which
+    * plans and runs it under its own conf. Memos and table reads stay on
+    * the caller's session: they key on the application, so a memo first
+    * built on a clone would stay bound to the clone's conf. A clone is
+    * its own artifact session to the executors, so its first job
+    * compiles its generated code again (about 90 ms more than the same
+    * job on the caller's session, sf0.01 on local[4]). */
+  private[graft] def scoped(spark: SparkSession, kvs: (String, String)*)(
+      body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
+    val child = org.apache.spark.sql.graft.Shim.cloneSession(spark)
+    kvs.foreach { case (k, v) => child.conf.set(k, v) }
+    val out = body(df =>
+      org.apache.spark.sql.graft.Shim.ofRows(child, df.queryExecution.logical))
+    org.apache.spark.sql.graft.Shim.ofRows(spark, out.queryExecution.logical)
+  }
+
   private val confLock = new Object
 
-  /** Runs `body` with each `key -> value` set on the session conf, then
-    * restores every key, or unsets it if it was unset before. The
-    * session conf is shared by every thread, so all engine toggles take
-    * this one lock: two save/restore pairs on the same key must not
-    * interleave (A saves true, B saves false, A restores true, B
-    * restores false, and the setting stays off). Threads that take no
-    * toggle still see the toggled values while a body runs. No memo
-    * build takes the conf lock, so the lock order is always conf →
-    * memo. */
+  /** Runs `body` with each `key -> value` set on the shared session conf,
+    * then restores every key, or unsets it if it was unset before. Held
+    * only across a stream `start()`, which copies the session conf into
+    * the stream's own session: streams must start on the caller's
+    * session, whose listeners see their progress. The lock keeps two
+    * toggled starts from interleaving their save/restore pairs (A saves
+    * true, B saves false, A restores true, B restores false, and the
+    * setting stays off). Graph code does not take it: its loops run on
+    * [[scoped]] clones. No memo build takes the conf lock, so the lock
+    * order is always conf → memo. */
   private[graft] def withConf[T](spark: SparkSession, kvs: (String, String)*)(
       body: => T): T = confLock.synchronized {
     val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }

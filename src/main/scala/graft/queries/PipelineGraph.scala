@@ -27,6 +27,30 @@ object PipelineGraph {
     * engine-portable with no rounding guard. */
   private val EdgeThreshold = 0.875
 
+  /** The verified near-dup graph's directed (d1, d2) edges: candidate
+    * pairs at ≥ [[EdgeThreshold]] signature agreement. */
+  private def nearDupEdges(spark: SparkSession, sfDir: String): DataFrame =
+    PipelinePlus.minhashPairs(spark, sfDir)
+      .filter(col("est_jaccard") >= EdgeThreshold)
+      .select(col("d1"), col("d2"))
+
+  /** Symmetric closure of a (d1, d2) edge list, so one propagation
+    * direction suffices. */
+  private def symmetric(edges: DataFrame): DataFrame =
+    edges.union(edges.select(col("d2").as("d1"), col("d1").as("d2")))
+
+  /** The graph's nodes: the §2.10 shared sample's distinct doc ids. */
+  private def sampleNodes(spark: SparkSession, sfDir: String): DataFrame =
+    PipelinePlus.sampleTerms(spark, sfDir).select("doc_id").distinct()
+
+  /** (d1, d2, deg) — each edge carries its source's out-degree, so a
+    * PageRank step is one join per iteration, not two. */
+  private def degreeFolded(sym: DataFrame): DataFrame = {
+    val deg = sym.groupBy(col("d1").as("dd")).agg(count(lit(1)).as("deg"))
+    sym.join(deg, sym("d1") === col("dd"))
+      .select(col("d1"), col("d2"), col("deg"))
+  }
+
   /** Near-dup clusters over the §2.10 shared sample: minhash-LSH candidate
     * pairs verified at ≥ [[EdgeThreshold]] become edges; connected
     * components (cluster = min doc_id reachable) decide keeps. One row per
@@ -41,7 +65,6 @@ object PipelineGraph {
     */
   private[graft] def connectedComponents(
       nodes: DataFrame, edges: DataFrame): DataFrame = {
-    // symmetric closure so one propagation direction suffices.
     // LAZY localCheckpoints throughout the loop (round 6): the plan is
     // cut to a LogicalRDD scan either way, but an eager checkpoint is a
     // dedicated materialization JOB per round; lazy folds it into the
@@ -52,9 +75,7 @@ object PipelineGraph {
     // fixed-iteration siblings below, where every checkpoint job
     // collapses into the single output job (pagerank 2.71 → 1.97 s,
     // triangles 1.44 → 1.09 s, 3-run sf0.1 medians).
-    val sym = Tables.localCheckpoint(
-      edges.union(edges.select(col("d2").as("d1"), col("d1").as("d2"))),
-      eager = false)
+    val sym = Tables.localCheckpoint(symmetric(edges), eager = false)
     var labels = Tables.localCheckpoint(nodes
       .select(col("doc_id"), col("doc_id").as("cluster")), eager = false)
     var prevSum: java.math.BigDecimal = null
@@ -107,12 +128,8 @@ object PipelineGraph {
       spark: SparkSession, sfDir: String): DataFrame = {
     val key = s"${spark.sparkContext.applicationId}:$sfDir"
     graft.Tables.memo(clusterCache, key) {
-      val edges = PipelinePlus.minhashPairs(spark, sfDir)
-        .filter(col("est_jaccard") >= EdgeThreshold)
-        .select(col("d1"), col("d2"))
-      val nodes = PipelinePlus.sampleTerms(spark, sfDir)
-        .select("doc_id").distinct()
-      connectedComponents(nodes, edges).persist()
+      connectedComponents(sampleNodes(spark, sfDir), nearDupEdges(spark, sfDir))
+        .persist()
     }
   }
 
@@ -137,39 +154,22 @@ object PipelineGraph {
     */
   def qGraphPagerank(spark: SparkSession, sfDir: String): DataFrame = {
     val d = 0.85
-    val edges = PipelinePlus.minhashPairs(spark, sfDir)
-      .filter(col("est_jaccard") >= EdgeThreshold)
-      .select(col("d1"), col("d2"))
     // Round 13 (JobProf: the warm run spent 4 concurrent ~0.7 s jobs
     // re-deriving the LAZY sym checkpoint — concurrent AQE stages each
     // recompute a not-yet-materialized localCheckpoint — plus a fresh
     // deg aggregation per iteration):
-    //   - degree is folded into the edge list ONCE (the
-    //     pagerankConverge discipline) — one join per iteration, not two;
-    //   - the folded list is hash-partitioned and sorted by the
-    //     per-iteration join key d1 and checkpointed EAGERLY, so every
-    //     iteration's sort-merge join reads it exchange-free AND
-    //     sort-free, and nothing can recompute it concurrently;
+    //   - degree is folded into the edge list ONCE and checkpointed
+    //     EAGERLY, so nothing can recompute it concurrently;
     //   - nodes is checkpointed: it fed the count action, the rank seed
     //     and all 3 left joins — 5 re-derivations of the sample distinct.
-    // Per-iteration shuffle is now just the contribution groupBy — the
-    // Pregel floor. pr checkpoints stay lazy: each is consumed once, in
-    // sequence, by the next iteration's chain.
-    val sym = edges
-      .union(edges.select(col("d2").as("d1"), col("d1").as("d2")))
-    val deg = sym.groupBy(col("d1").as("dd"))
-      .agg(count(lit(1)).as("deg"))
-    val symDeg0 = Tables.localCheckpoint(sym.join(deg, sym("d1") === col("dd"))
-      .select(col("d1"), col("d2"), col("deg")))
-    val nPart = math.max(1L, symDeg0.count() / 2000000L).toInt
-    // layout checkpoint under AQE-off so the LogicalRDD keeps
-    // hashpartitioning(d1, nPart) — see [[AqeOff]]
-    val symDeg = Tables.withConf(spark, AqeOff) {
-      Tables.localCheckpoint(symDeg0.repartition(nPart, col("d1"))
-        .sortWithinPartitions("d1"))
-    }
-    val nodes = Tables.localCheckpoint(PipelinePlus.sampleTerms(spark, sfDir)
-      .select("doc_id").distinct())
+    // No d1 layout: over 3 fixed iterations its count job and extra
+    // exchange cost more than the per-iteration exchanges it saved (the
+    // round-13 layout read 0.90 → 1.38 s on the 8-core driver pair).
+    // pr checkpoints stay lazy: each is consumed once, in sequence, by
+    // the next iteration's chain.
+    val symDeg = Tables.localCheckpoint(
+      degreeFolded(symmetric(nearDupEdges(spark, sfDir))))
+    val nodes = Tables.localCheckpoint(sampleNodes(spark, sfDir))
     val n = nodes.count().toDouble
     var pr = nodes.withColumn("pr", lit(1.0 / n))
     for (_ <- 1 to 3) {
@@ -323,9 +323,7 @@ object PipelineGraph {
     // EAGER (round 13): e feeds all three triangle-join positions;
     // the output job's concurrent stages each re-derived a lazy copy
     // from the candidate relation before any of them had cached it
-    val e = Tables.localCheckpoint(PipelinePlus.minhashPairs(spark, sfDir)
-      .filter(col("est_jaccard") >= EdgeThreshold)
-      .select(col("d1").as("a"), col("d2").as("b")))
+    val e = Tables.localCheckpoint(nearDupEdges(spark, sfDir).toDF("a", "b"))
     val tri = e
       .join(e.toDF("b", "c"), "b")
       .join(e.toDF("a", "c"), Seq("a", "c"), "left_semi")
@@ -368,8 +366,7 @@ object PipelineGraph {
     * outer-plan audit vacuous (the minhashSig lesson, ADVICE r5). */
   private[graft] def bfsSeedDist(
       spark: SparkSession, sfDir: String): DataFrame = {
-    val nodes = PipelinePlus.sampleTerms(spark, sfDir)
-      .select("doc_id").distinct()
+    val nodes = sampleNodes(spark, sfDir)
     val seed = nodes.agg(min("doc_id").as("seed"))
     nodes.crossJoin(broadcast(seed))
       .select(col("doc_id"),
@@ -377,14 +374,10 @@ object PipelineGraph {
   }
 
   def qGraphBfs(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = PipelinePlus.minhashPairs(spark, sfDir)
-      .filter(col("est_jaccard") >= EdgeThreshold)
-      .select(col("d1"), col("d2"))
     // EAGER (round 13): one reference per pull round — the rounds all
     // collapse into the output job, whose concurrent stages raced the
     // lazy copy and re-derived it up to 3×
-    val sym = Tables.localCheckpoint(edges
-      .union(edges.select(col("d2").as("d1"), col("d1").as("d2"))))
+    val sym = Tables.localCheckpoint(symmetric(nearDupEdges(spark, sfDir)))
     var dist = Tables.localCheckpoint(bfsSeedDist(spark, sfDir), eager = false)
     for (_ <- 1 to 3) {
       val reached = dist.filter(col("hop").isNotNull)
@@ -530,41 +523,21 @@ object PipelineGraph {
     * silently running to the bound. */
   private[graft] def pagerankConvergeWithHops(
       spark: SparkSession, sfDir: String): (DataFrame, Int) = {
-    val edges = PipelinePlus.minhashPairs(spark, sfDir)
-      .filter(col("est_jaccard") >= EdgeThreshold)
-      .select(col("d1"), col("d2"))
-    val sym = edges
-      .union(edges.select(col("d2").as("d1"), col("d1").as("d2")))
-    val deg = sym.groupBy(col("d1").as("dd"))
-      .agg(count(lit(1)).as("deg"))
-    // degree folded into the edge list ONCE — one join per hop, not
-    // two. Round 13: hash-partitioned + sorted by the per-hop join key
-    // d1 and checkpointed EAGERLY (the qGraphPagerank rationale — every
-    // hop's sort-merge join reads it exchange-free and sort-free, and
-    // concurrent AQE stages cannot re-derive a lazy copy), and nodes is
+    // degree folded into the edge list ONCE and checkpointed EAGERLY
+    // (concurrent AQE stages cannot re-derive a lazy copy), then laid
+    // out by the per-hop join key d1 (round 13), so every hop's
+    // sort-merge join reads it exchange-free and sort-free; nodes is
     // checkpointed (count action + seed).
-    val symDeg0 = Tables.localCheckpoint(sym.join(deg, sym("d1") === col("dd"))
-      .select(col("d1"), col("d2"), col("deg")))
-    // scale-adaptive loop parallelism (the copurchaseLayouts sizing):
-    // ~2M edge rows per partition, never below 1 — a session-constant
-    // 32-way split made every hop a 32-task stage of task-launch
-    // overhead at sf0.1 while staying corpus-proportional at cluster SFs
-    val nPart = math.max(1L, symDeg0.count() / 2000000L).toInt
-    // layout checkpoint under AQE-off so the LogicalRDD keeps
-    // hashpartitioning(d1, nPart) — see [[AqeOff]]
-    val symDeg = Tables.withConf(spark, AqeOff) {
-      Tables.localCheckpoint(symDeg0.repartition(nPart, col("d1"))
-        .sortWithinPartitions("d1"))
-    }
-    val nodes = Tables.localCheckpoint(PipelinePlus.sampleTerms(spark, sfDir)
-      .select("doc_id").distinct())
+    val (symDeg, nPart) = d1Layout(spark, Tables.localCheckpoint(
+      degreeFolded(symmetric(nearDupEdges(spark, sfDir)))))
+    val nodes = Tables.localCheckpoint(sampleNodes(spark, sfDir))
     val nNodes = nodes.count()
     val t0 = 500000000L / nNodes // (1−d)·10⁹ div n, exact long division
     val floor0 = math.max(1L, t0 / PrDrainShift)
-    var state = Tables.localCheckpoint(nodes
+    val state0 = Tables.localCheckpoint(nodes
       .select(col("doc_id"), lit(t0).as("t"), lit(t0).as("pr")), eager = false)
-    def hop(st: DataFrame): DataFrame = {
-      val contrib = symDeg
+    def hop(edges: DataFrame, st: DataFrame): DataFrame = {
+      val contrib = edges
         .join(st.select(col("doc_id").as("sid"), col("t")),
           col("d1") === col("sid"))
         .select(col("d2").as("nid"), expr("t div deg").as("c"))
@@ -593,14 +566,17 @@ object PipelineGraph {
     // loop shuffles (contribution groupBy, state-side exchange) use the
     // same scale-derived width as the edge layout — with AQE off the
     // session constant would fan every hop back out to 32 micro-tasks
-    Tables.withConf(spark, AqeOff, loopWidth(nPart)) {
+    val state = Tables.scoped(spark, AqeOff, loopWidth(nPart)) { in =>
+      val edges = in(symDeg)
+      var st = in(state0)
       while (maxT > 0 && iter < PrHalfHops) {
-        val mid = Tables.localCheckpoint(hop(state))
-        val next = Tables.localCheckpoint(hop(mid), eager = false)
+        val mid = Tables.localCheckpoint(hop(edges, st))
+        val next = Tables.localCheckpoint(hop(edges, mid), eager = false)
         maxT = next.agg(max("t")).head().getLong(0)
-        state = next
+        st = next
         iter += 2
       }
+      st
     }
     (state.select(col("doc_id"), col("pr").as("pr_e9")).orderBy("doc_id"),
       iter)
@@ -668,6 +644,36 @@ object PipelineGraph {
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
       .distinct())
 
+  /** AQE disabled on a [[Tables.scoped]] child, for LAYOUT CHECKPOINT
+    * CREATION as well as the loops: Dataset.localCheckpoint captures the
+    * physical plan's output partitioning into the LogicalRDD, but under
+    * AQE the adaptive plan wrapper reports UnknownPartitioning (measured
+    * on 4.1.2: AQE-on checkpoint → UnknownPartitioning(0); AQE-off →
+    * hashpartitioning(key, n)) — so a pre-partitioned checkpoint built
+    * under AQE silently re-exchanges at every consumer (ConcurrencySpec
+    * pins both readings). */
+  private val AqeOff = "spark.sql.adaptive.enabled" -> "false"
+
+  /** Shuffle width of a loop's own exchanges: with AQE off the session
+    * constant would fan every round back out to many micro-tasks. */
+  private def loopWidth(n: Int) = "spark.sql.shuffle.partitions" -> n.toString
+
+  /** `edges` laid out for a loop keyed on d1: hash-partitioned at a
+    * scale-adaptive width (~2M rows per partition, never below 1 — a
+    * session-constant 32-way split made every round a 32-task stage of
+    * task-launch overhead at sf0.1 while staying corpus-proportional at
+    * cluster SFs), sorted by d1, checkpointed EAGERLY under [[AqeOff]].
+    * Returns the layout and its width, which the loop's own shuffles
+    * use. `edges` should be checkpointed: it is counted, then read. */
+  private def d1Layout(spark: SparkSession,
+      edges: DataFrame): (DataFrame, Int) = {
+    val n = math.max(1L, edges.count() / 2000000L).toInt
+    (Tables.scoped(spark, AqeOff) { in =>
+      Tables.localCheckpoint(in(edges).repartition(n, col("d1"))
+        .sortWithinPartitions("d1"))
+    }, n)
+  }
+
   /** [[copurchaseEdges]] checkpointed TWICE more: once hash-partitioned
     * by customer and once by part — the [[qHitsConverge]] loop layout.
     * Every HITS half-round is `edges ⋈ broadcast(vec) → groupBy(c or
@@ -679,20 +685,6 @@ object PipelineGraph {
     * one exchange). Worth it only for the 8-round loop: [[qGraphHits]]'
     * fixed 2 iterations measured FASTER on the plain checkpoint (4
     * saved exchanges don't pay for 2 extra checkpoint builds). */
-  /** AQE disabled, for [[Tables.withConf]]. Needed around LAYOUT
-    * CHECKPOINT CREATION as well as the loops: Dataset.localCheckpoint
-    * captures the physical plan's output partitioning into the
-    * LogicalRDD, but under AQE the adaptive plan wrapper reports
-    * UnknownPartitioning (measured on 4.1.2: AQE-on checkpoint →
-    * UnknownPartitioning(0); AQE-off → hashpartitioning(key, n)) — so a
-    * pre-partitioned checkpoint built under AQE silently re-exchanges at
-    * every consumer. */
-  private val AqeOff = "spark.sql.adaptive.enabled" -> "false"
-
-  /** Shuffle width of a loop's own exchanges: with AQE off the session
-    * constant would fan every round back out to many micro-tasks. */
-  private def loopWidth(n: Int) = "spark.sql.shuffle.partitions" -> n.toString
-
   private def copurchaseLayouts(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) = {
     val base = graft.Tables.t(spark, sfDir, "lineitem")
@@ -720,13 +712,13 @@ object PipelineGraph {
     // scan, so they run CONCURRENTLY (guide §2.6 — overlap independent
     // jobs; the second build back-fills the first one's stragglers):
     // by-part on a thread started for this call, by-customer here.
-    Tables.withConf(spark, AqeOff) {
-      def layout(key: String) = Tables.localCheckpoint(
-        base.repartition(n, col(key)).dropDuplicates("c", "p"))
-      val byP = Tables.fork("graft-hits-layout")(layout("p"))
-      val byC = layout("c")
-      (byC, byP())
+    def layout(key: String) = Tables.scoped(spark, AqeOff) { in =>
+      Tables.localCheckpoint(
+        in(base).repartition(n, col(key)).dropDuplicates("c", "p"))
     }
+    val byP = Tables.fork("graft-hits-layout")(layout("p"))
+    val byC = layout("c")
+    (byC, byP())
   }
 
   /** One normalized HITS round: h(c) = Σ_{p∈c} a(p) renormalized to
@@ -785,21 +777,23 @@ object PipelineGraph {
     *     exactly the cap-unrolled DuckDB oracle). */
   private[graft] def hitsConvergeWithIters(
       spark: SparkSession, sfDir: String): (DataFrame, Int, Boolean) = {
-    // layouts build with AQE ON (the edge build is a real corpus-scaled
-    // join that wants runtime broadcast promotion + coalescing) — then
-    // AQE OFF for the loop's own actions: every loop stage is
+    // layouts build at the session width (AQE off only so the
+    // checkpoints keep their partitioning) — then the loop's own
+    // actions run with AQE OFF at the layout width: every loop stage is
     // dimension-bounded or pre-partitioned (no skew, nothing to
     // re-plan), and AQE's per-stage re-optimization added ~2 driver
     // round-trips per round (JobProf round 13: ~60 jobs vs 30, 9.5 s vs
     // 6.0 s warm — scheduling-bound, not data-bound). The loop's one
     // keyed exchange (the a₀ distinct) runs at the layout width, not
     // the session constant.
-    val (byC, byP) = copurchaseLayouts(spark, sfDir)
-    Tables.withConf(spark, AqeOff, loopWidth(byP.rdd.getNumPartitions)) {
+    val (byC0, byP0) = copurchaseLayouts(spark, sfDir)
+    var iter = 0
+    var fixed = false
+    val last = Tables.scoped(spark, AqeOff,
+        loopWidth(byP0.rdd.getNumPartitions)) { in =>
+      val (byC, byP) = (in(byC0), in(byP0))
       var a = Tables.localCheckpoint(byP.select(col("p")).distinct()
         .select(col("p"), lit(1000000L).as("a")), eager = false)
-      var iter = 0
-      var fixed = false
       while (!fixed && iter < HitsCap) {
         val next =
           Tables.localCheckpoint(hitsRound(byC, byP, a), eager = false)
@@ -810,8 +804,9 @@ object PipelineGraph {
         a = next
         iter += 1
       }
-      (hitsTop10(a), iter, fixed)
+      a
     }
+    (hitsTop10(last), iter, fixed)
   }
 
   /** h·10⁶ can overflow neither side: h ≤ |parts|·10⁶ ≤ ~10¹² at any
@@ -866,29 +861,20 @@ object PipelineGraph {
 
   private[graft] def communityLpaWithIters(
       spark: SparkSession, sfDir: String): (DataFrame, Int, Boolean) = {
-    val edges = PipelinePlus.minhashPairs(spark, sfDir)
-      .filter(col("est_jaccard") >= EdgeThreshold)
-      .select(col("d1"), col("d2"))
     // same loop discipline as pagerankConvergeWithHops (round 13): the
     // edge list is checkpointed EAGERLY (a lazy copy was re-derived by
     // concurrent consumer stages), then laid out by the per-round join
-    // key d1 at scale-derived width; the loop itself runs with AQE off
-    // and its shuffles at that same width.
-    val sym0 = Tables.localCheckpoint(edges
-      .union(edges.select(col("d2").as("d1"), col("d1").as("d2"))))
-    val nPart = math.max(1L, sym0.count() / 2000000L).toInt
-    // layout checkpoint under AQE-off so the LogicalRDD keeps
-    // hashpartitioning(d1, nPart) — see [[AqeOff]]
-    val sym = Tables.withConf(spark, AqeOff) {
-      Tables.localCheckpoint(sym0.repartition(nPart, col("d1"))
-        .sortWithinPartitions("d1"))
-    }
-    var labels = Tables.localCheckpoint(PipelinePlus.sampleTerms(spark, sfDir)
-      .select("doc_id").distinct()
+    // key d1; the loop itself runs with AQE off and its shuffles at the
+    // layout's width.
+    val (sym0, nPart) = d1Layout(spark,
+      Tables.localCheckpoint(symmetric(nearDupEdges(spark, sfDir))))
+    val labels0 = Tables.localCheckpoint(sampleNodes(spark, sfDir)
       .withColumn("label", col("doc_id") % 16))
     var iter = 0
     var fixed = false
-    Tables.withConf(spark, AqeOff, loopWidth(nPart)) {
+    val last = Tables.scoped(spark, AqeOff, loopWidth(nPart)) { in =>
+      val sym = in(sym0)
+      var labels = in(labels0)
       while (!fixed && iter < LpaCap) {
         val votes = sym
           .join(labels.select(col("doc_id").as("src"), col("label")),
@@ -918,9 +904,10 @@ object PipelineGraph {
         labels = next
         iter += 1
       }
+      labels
     }
-    val sizes = labels.groupBy("label").agg(count(lit(1)).as("csize"))
-    (labels.join(sizes, "label")
+    val sizes = last.groupBy("label").agg(count(lit(1)).as("csize"))
+    (last.join(sizes, "label")
       .select(col("doc_id"), col("label").as("community"), col("csize"))
       .orderBy("doc_id"), iter, fixed)
   }

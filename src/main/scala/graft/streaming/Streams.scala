@@ -2,10 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.Tables
 
 /** Structured Streaming rows (SURVEY.md §2.12 s_*): the same logical ops
@@ -26,28 +27,21 @@ object Streams {
 
   // The whole s_* family feeds from the same immutable sorted array;
   // without memoization every operator (×3 bench runs each) re-pays the
-  // parquet scan + driver collect + sort. Same per-(session, sfDir)
-  // cache discipline as Tables.memo, synchronized for the same reason
-  // (concurrent first callers must not both collect).
-  private val evCache =
-    scala.collection.concurrent.TrieMap.empty[String, Array[Ev]]
+  // parquet scan + driver collect + sort.
+  private val eventRowsCache = Tables.registerAuxCache[Array[Ev]]()
 
   // HARNESS-ONLY collect: MemoryStream is the driver contract's feed (the
   // streaming rows must flow through an in-memory source/sink), so the
   // test table is materialized on the driver BY DESIGN. A production
   // deployment swaps this scaffold for readStream on Kafka/files — the
   // query plans downstream are identical and never collect.
-  private def eventRows(spark: SparkSession, sfDir: String): Array[Ev] = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    evCache.synchronized {
-      evCache.getOrElseUpdate(key, {
-        import spark.implicits._
-        Tables.events(spark, sfDir)
-          .select("event_id", "ts", "user_id", "event_type", "value")
-          .as[Ev].collect().sortBy(_.event_id)
-      })
+  private def eventRows(spark: SparkSession, sfDir: String): Array[Ev] =
+    Tables.memo(eventRowsCache, s"${spark.sparkContext.applicationId}:$sfDir") {
+      import spark.implicits._
+      Tables.events(spark, sfDir)
+        .select("event_id", "ts", "user_id", "event_type", "value")
+        .as[Ev].collect().sortBy(_.event_id)
     }
-  }
 
   private def newStream(spark: SparkSession): MemoryStream[Ev] =
     MemoryStream[Ev](Encoders.product[Ev], spark)
@@ -66,9 +60,8 @@ object Streams {
     * launch dominates these single-box micro-batches, while each
     * partition's data is tiny). On a cluster this conf is a deploy-time
     * sizing decision; the harness value only has to keep the local
-    * pipelines compute-bound. Restores the session conf afterwards. */
-  private def withStreamPartitions[T](spark: SparkSession)(body: => T): T =
-    Tables.withConf(spark, "spark.sql.shuffle.partitions" -> "2")(body)
+    * pipelines compute-bound. Every query starts with it. */
+  private val StreamWidth = "spark.sql.shuffle.partitions" -> "2"
 
   /** No-data micro-batches OFF for queries whose OUTPUT never depends
     * on them (round 13, generalizing the round-12 s_stream_outer_join
@@ -78,15 +71,45 @@ object Streams {
     * one skipped is a whole micro-batch cycle (state-store setup + WAL
     * commit) saved. NOT applied to the windowed-aggregation family
     * (tumbling/sliding/session/late): there the no-data batch IS the
-    * emitter of watermark-closed windows. Restores the session conf. */
-  private def withNoDataBatchesOff[T](spark: SparkSession)(body: => T): T =
-    Tables.withConf(spark,
-      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")(body)
+    * emitter of watermark-closed windows. */
+  private val NoDataBatchesOff =
+    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false"
+
+  /** Starts `w` with a fresh checkpoint, [[StreamWidth]] and `kvs` set
+    * on the session conf across `start()` only: `start()` copies the
+    * conf into the query's own session, which keeps it for the whole
+    * run, so other threads never see the keys once it returns. Queries
+    * start on the caller's session, not a [[Tables.scoped]] clone: a
+    * listener on the caller's session hears no progress from a query
+    * started on a clone. Then runs `drain` and stops the query. */
+  private def run(spark: SparkSession, w: DataStreamWriter[Row],
+      kvs: (String, String)*)(drain: StreamingQuery => Unit): Unit = {
+    val q = Tables.withConf(spark, (StreamWidth +: kvs): _*) {
+      w.option("checkpointLocation", ckpt()).start()
+    }
+    try drain(q) finally q.stop()
+  }
+
+  /** Drains `q`, then adds each of `feeds` and drains again. */
+  private def feed(feeds: Seq[() => Any])(q: StreamingQuery): Unit = {
+    q.processAllAvailable()
+    feeds.foreach { f => f(); q.processAllAvailable() }
+  }
+
+  /** The memory-sink run: streams `df` into the memory table `name` in
+    * output `mode` through the data queued before the start and each of
+    * `feeds`, stops, and returns the table. */
+  private def toMemory(spark: SparkSession, name: String, mode: String,
+      kvs: (String, String)*)(df: DataFrame, feeds: (() => Any)*)
+      : DataFrame = {
+    run(spark, df.writeStream.format("memory").queryName(name)
+      .outputMode(mode), kvs: _*)(feed(feeds))
+    spark.table(name)
+  }
 
   /** Tumbling 1h window + watermark, append mode. The sentinel advances
     * the watermark past every real window so append emits them all. */
-  def sStreamTumbling(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamTumbling(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = newStream(spark)
     // data + sentinel in ONE batch: the watermark advances at batch
     // END, and the (enabled-by-default) no-data follow-up batch then
@@ -100,28 +123,22 @@ object Streams {
     // batches — queueing first pins exactly one.
     stream.addData(eventRows(spark, sfDir).toSeq :+
       Ev(-1L, sentinelTs, -1L, "sentinel", 0.0))
-    val q = stream.toDF()
+    toMemory(spark, "s_stream_tumbling", "append")(stream.toDF()
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total"))
       .select(col("window.start").as("win_start"), col("event_type"),
-        col("n"), col("total"))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_tumbling")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("s_stream_tumbling")
+        col("n"), col("total")))
       .filter(col("event_type") =!= "sentinel")
       .orderBy("win_start", "event_type")
-    }
+  }
 
   /** Streaming exact dedup on event_id: every event is fed twice; the
     * sink must contain each exactly once. dropDuplicatesWithinWatermark
     * (not plain dropDuplicates on a non-event-time key) so the state
     * store evicts keys older than the watermark instead of growing
     * unboundedly — the actual production-dedup contract. */
-  def sStreamDedup(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) { withNoDataBatchesOff(spark) {
+  def sStreamDedup(spark: SparkSession, sfDir: String): DataFrame = {
     // no-data batches off + first feed queued before start(): the
     // dedup's append rows all emit IN their data batch (first-seen rows
     // pass, duplicates are dropped against state), so the automatic
@@ -132,28 +149,20 @@ object Streams {
     val rows = eventRows(spark, sfDir)
     val stream = newStream(spark)
     stream.addData(rows.toSeq)
-    val q = stream.toDF()
-      .withWatermark("ts", "10 minutes")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_dedup")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
-      stream.addData(rows.toSeq) // exact duplicates, second delivery
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table("s_stream_dedup")
+    toMemory(spark, "s_stream_dedup", "append", NoDataBatchesOff)(
+      stream.toDF()
+        .withWatermark("ts", "10 minutes")
+        .dropDuplicatesWithinWatermark("event_id"),
+      () => stream.addData(rows.toSeq)) // exact duplicates, second delivery
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_unique"))
       .orderBy("event_type")
-    } }
+  }
 
   /** Late-data drop: batch 1 advances the watermark; batch 2 replays
     * events older than watermark − 10 min, which must be dropped from the
     * windowed aggregation. */
-  def sStreamLate(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamLate(spark: SparkSession, sfDir: String): DataFrame = {
     val rows = eventRows(spark, sfDir)
     val cutoff = rows.map(_.ts.getTime).max
     val (early, late) = rows.partition(_.ts.getTime >= cutoff - 3 * 3600 * 1000L)
@@ -161,16 +170,11 @@ object Streams {
     // Only the last 3 hours arrive first → watermark = max − 10 min.
     // Queued before start() so the first trigger cannot split the feed.
     stream.addData(early.toSeq)
-    val q = stream.toDF()
+    toMemory(spark, "s_stream_late", "append")(stream.toDF()
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("win_start"), col("n"))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_late")
-      .outputMode("append").start()
-    try {
-      q.processAllAvailable()
+      .select(col("window.start").as("win_start"), col("n")),
       // Everything older is now late beyond the watermark → dropped.
       // The sentinel rides in the SAME batch: the drop decision for the
       // late rows uses batch 1's watermark (watermarks only advance at
@@ -184,18 +188,15 @@ object Streams {
       // evicted, the "late" replays land in still-open windows and 531
       // windows emit instead of 3 (oracle-diffed at sf0.001). The
       // no-data cycles here are load-bearing eviction, not overhead.
-      stream.addData(late.toSeq :+ Ev(-1L, sentinelTs, -1L, "sentinel", 0.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table("s_stream_late")
+      () => stream.addData(
+        late.toSeq :+ Ev(-1L, sentinelTs, -1L, "sentinel", 0.0)))
       .filter(col("win_start") < lit(sentinelTs))
       .orderBy("win_start")
-    }
+  }
 
   /** Custom per-user running state via flatMapGroupsWithState: running
     * event count + value sum per user, updated across two batches. */
-  def sStreamStateful(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamStateful(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     val rows = eventRows(spark, sfDir).filter(_.user_id < 8)
     val (b1, b2) = rows.splitAt(rows.length / 2)
@@ -209,21 +210,14 @@ object Streams {
       state.update(next)
       Iterator((user, next._1, next._2))
     }
-    val q = stream.toDS()
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout)(updater)
-      .toDF("user_id", "n_events", "value_sum")
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_stateful")
-      .outputMode("update").start()
-    try {
-      q.processAllAvailable()
-      stream.addData(b2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    finalStatePerUser(spark, "s_stream_stateful")
-    }
+    finalStatePerUser(toMemory(spark, "s_stream_stateful", "update")(
+      stream.toDS()
+        .groupByKey(_.user_id)
+        .flatMapGroupsWithState(OutputMode.Update,
+          GroupStateTimeout.NoTimeout)(updater)
+        .toDF("user_id", "n_events", "value_sum"),
+      () => stream.addData(b2.toSeq)))
+  }
 
   /** Update mode appends one row per (user, batch); keep the final
     * state — the PAIR from the row with the highest n_events, not two
@@ -232,8 +226,8 @@ object Streams {
     * transformWithState operators, so the pair-recovery subtlety cannot
     * drift between them.
     */
-  private def finalStatePerUser(spark: SparkSession, table: String): DataFrame =
-    spark.table(table)
+  private def finalStatePerUser(table: DataFrame): DataFrame =
+    table
       .groupBy("user_id")
       .agg(max("n_events").as("n_events"),
         round(expr("max_by(value_sum, n_events)"), 4).as("value_sum"))
@@ -244,23 +238,17 @@ object Streams {
     * (re)broadcast per batch, which is exactly the cluster-scale shape.
     * Complete-mode aggregation keeps the memory sink deterministic.
     */
-  def sStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val cust = graft.Tables.t(spark, sfDir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val stream = newStream(spark)
     stream.addData(eventRows(spark, sfDir).toSeq) // queued before start()
-    val q = stream.toDF()
+    toMemory(spark, "s_stream_join", "complete")(stream.toDF()
       .join(cust, col("user_id") === col("c_custkey"))
       .groupBy("c_mktsegment", "event_type")
-      .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total"))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_join")
-      .outputMode("complete").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("s_stream_join")
+      .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total")))
       .orderBy("c_mktsegment", "event_type")
-    }
+  }
 
   /** Stream-STREAM interval join: view and purchase streams joined on
     * user within a 1-hour attribution window. Both sides carry
@@ -273,8 +261,7 @@ object Streams {
     * batch is needed here. (An OUTER variant WOULD need a later batch
     * to advance the watermark before unmatched rows emit null-padded.)
     */
-  def sStreamStreamJoin(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) { withNoDataBatchesOff(spark) {
+  def sStreamStreamJoin(spark: SparkSession, sfDir: String): DataFrame = {
     // Round 13 (StreamProf: 3 micro-batches → 1): adding the two feeds
     // AFTER start() raced the first trigger — the views landed as batch
     // 0 and the purchases as batch 1 — and the post-data no-data cycle
@@ -296,19 +283,15 @@ object Streams {
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
         col("event_id").as("p_id"))
       .withWatermark("p_ts", "10 minutes")
-    val q = views.join(purchases,
+    toMemory(spark, "s_stream_stream_join", "append", NoDataBatchesOff)(
+      views.join(purchases,
         col("v_user") === col("p_user") &&
           col("p_ts") >= col("v_ts") &&
-          col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_stream_join")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("s_stream_stream_join")
+          col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR")))
       .groupBy(col("v_user").as("user_id"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy("user_id")
-    } }
+  }
 
   /** Stream-stream LEFT-OUTER interval join (round 10): the unmatched-
     * attribution case [[sStreamStreamJoin]]'s inner join cannot express
@@ -326,8 +309,7 @@ object Streams {
     * oracle. State stays bounded by watermark + interval on BOTH sides
     * at any stream length.
     */
-  def sStreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamOuterJoin(spark: SparkSession, sfDir: String): DataFrame = {
     val vs = newStream(spark)
     val ps = newStream(spark)
     val views = vs.toDF()
@@ -359,31 +341,24 @@ object Streams {
       Ev(-1L, sentinelTs, -1L, "sentinel", 0.0))
     ps.addData(evs.filter(_.event_type == "purchase").toSeq :+
       Ev(-2L, sentinelTs, -2L, "sentinel", 0.0))
-    withNoDataBatchesOff(spark) {
-      val q = views.join(purchases,
-          col("v_user") === col("p_user") &&
-            col("p_ts") >= col("v_ts") &&
-            col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"),
-          "left_outer")
-        .writeStream.option("checkpointLocation", ckpt())
-        .format("memory").queryName("s_stream_outer_join")
-        .outputMode("append").start()
-      try {
-        q.processAllAvailable()
-        val sentinel2 = Timestamp.valueOf("2030-01-02 00:00:00")
+    val sentinel2 = Timestamp.valueOf("2030-01-02 00:00:00")
+    toMemory(spark, "s_stream_outer_join", "append", NoDataBatchesOff)(
+      views.join(purchases,
+        col("v_user") === col("p_user") &&
+          col("p_ts") >= col("v_ts") &&
+          col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"),
+        "left_outer"),
+      () => {
         vs.addData(Ev(-3L, sentinel2, -3L, "sentinel", 0.0))
         ps.addData(Ev(-4L, sentinel2, -4L, "sentinel", 0.0))
-        q.processAllAvailable()
-      } finally q.stop()
-    }
-    spark.table("s_stream_outer_join")
+      })
       .filter(col("v_user") >= 0)
       .groupBy(col("v_user").as("user_id"))
       .agg(count(lit(1)).as("n_rows"),
         sum(when(col("p_id").isNotNull, 1L).otherwise(0L)).as("n_matched"),
         sum(when(col("p_id").isNull, 1L).otherwise(0L)).as("n_unmatched"))
       .orderBy("user_id")
-    }
+  }
 
   val sStreamOuterJoinSql: String =
     """WITH v AS (SELECT user_id, ts, event_id FROM events
@@ -406,64 +381,47 @@ object Streams {
     * user with watermark-driven state eviction; the sentinel closes every
     * open session so append mode emits them all.
     */
-  def sStreamSession(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamSession(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = newStream(spark)
     // single data+sentinel batch queued before start() — see
     // s_stream_tumbling for why this emits the same append-mode rows
     // with fewer batch cycles
     stream.addData(eventRows(spark, sfDir).toSeq :+
       Ev(-1L, sentinelTs, -1L, "sentinel", 0.0))
-    val q = stream.toDF()
+    toMemory(spark, "s_stream_session", "append")(stream.toDF()
       .withWatermark("ts", "10 minutes")
       .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .select(col("session_window.start").as("sess_start"),
-        col("user_id"), col("n_events"))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_session")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("s_stream_session")
+        col("user_id"), col("n_events")))
       .filter(col("user_id") >= 0)
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
       .orderBy("user_id")
-    }
+  }
 
   /** foreachBatch sink: each micro-batch appended to a parquet dataset —
     * the production pattern for arbitrary/transactional sinks. Three
     * batches in, re-read the dataset, aggregate; totals must equal the
     * fed rows exactly (no loss, no duplication across batch boundaries).
     */
-  def sStreamForeach(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamForeach(spark: SparkSession, sfDir: String): DataFrame = {
     val dir = graft.TmpDirs.create("graft_febatch_")
     val rows = eventRows(spark, sfDir)
     val batches = rows.grouped(math.max(1, rows.length / 3 + 1)).toSeq
     val stream = newStream(spark)
     stream.addData(batches.head.toSeq) // queued before start()
-    val q = stream.toDF()
-      .writeStream
-      .option("checkpointLocation", ckpt())
+    run(spark, stream.toDF().writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(dir)
-      }
-      .start()
-    try {
-      q.processAllAvailable()
-      batches.tail.foreach { bs =>
-        stream.addData(bs.toSeq)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+      })(feed(batches.tail.map(bs => () => stream.addData(bs.toSeq))))
     spark.read.parquet(dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total"),
         countDistinct("batch_id").as("n_batches"))
       .orderBy("event_type")
-    }
+  }
 
   /** File-source streaming: readStream over a parquet directory with
     * Trigger.AvailableNow — the backfill-then-stop pattern for draining
@@ -474,89 +432,72 @@ object Streams {
   // test, not part of the streaming op — write it once per (session,
   // sfDir) like eventRows; every run still drains it through 3 fresh
   // micro-batches with a fresh checkpoint.
-  private val fileSrcCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val fileSrcCache = Tables.registerAuxCache[String]()
 
-  def sStreamFile(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamFile(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.Tables.events(spark, sfDir)
-    val dir = fileSrcCache.synchronized {
-      fileSrcCache.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}:$sfDir", {
-          val d = graft.TmpDirs.create("graft_filestream_")
-          ev.repartition(3).write.mode("overwrite").parquet(d)
-          d
-        })
+    val dir = Tables.memo(fileSrcCache,
+        s"${spark.sparkContext.applicationId}:$sfDir") {
+      val d = graft.TmpDirs.create("graft_filestream_")
+      ev.repartition(3).write.mode("overwrite").parquet(d)
+      d
     }
-    val q = spark.readStream
+    run(spark, spark.readStream
       .schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(dir)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("total"))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_file")
+      .writeStream.format("memory").queryName("s_stream_file")
       .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      val finished = q.awaitTermination(120000)
-      require(finished, "s_stream_file: AvailableNow drain timed out — " +
-        "refusing to return a partial result")
-    } finally q.stop()
-    spark.table("s_stream_file").orderBy("event_type")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())) { q =>
+      require(q.awaitTermination(120000), "s_stream_file: AvailableNow " +
+        "drain timed out — refusing to return a partial result")
     }
+    spark.table("s_stream_file").orderBy("event_type")
+  }
 
   /** Spark 4 `transformWithState` (the StatefulProcessor arbitrary-state
     * API that replaces flatMapGroupsWithState): per-user running count +
     * value sum held in a typed ValueState, updated across two micro-
     * batches. Requires the RocksDB state store provider — the same
     * provider a production cluster runs for large state (incremental
-    * checkpoint, state >> heap) — set for this query and restored after.
+    * checkpoint, state >> heap) — set for this query's start only.
     */
-  def sStreamTws(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamTws(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{TimeMode, TTLConfig}
     import spark.implicits._
-    Tables.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
-      val rows = eventRows(spark, sfDir).filter(_.user_id < 8)
-      val (b1, b2) = rows.splitAt(rows.length / 2)
-      val stream = newStream(spark)
-      stream.addData(b1.toSeq) // queued before start() — one batch per feed
-      val proc = new org.apache.spark.sql.streaming.StatefulProcessor[
-          Long, Ev, (Long, Long, Double)] {
-        @transient private var agg:
-            org.apache.spark.sql.streaming.ValueState[(Long, Double)] = _
-        override def init(outputMode: OutputMode,
-            timeMode: TimeMode): Unit =
-          agg = getHandle.getValueState[(Long, Double)]("agg",
-            Encoders.product[(Long, Double)], TTLConfig.NONE)
-        override def handleInputRows(user: Long, evs: Iterator[Ev],
-            timers: org.apache.spark.sql.streaming.TimerValues)
-            : Iterator[(Long, Long, Double)] = {
-          val (n0, s0) = if (agg.exists()) agg.get() else (0L, 0.0)
-          val batch = evs.toSeq
-          val next = (n0 + batch.size, s0 + batch.map(_.value).sum)
-          agg.update(next)
-          Iterator((user, next._1, next._2))
-        }
+    val rows = eventRows(spark, sfDir).filter(_.user_id < 8)
+    val (b1, b2) = rows.splitAt(rows.length / 2)
+    val stream = newStream(spark)
+    stream.addData(b1.toSeq) // queued before start() — one batch per feed
+    val proc = new org.apache.spark.sql.streaming.StatefulProcessor[
+        Long, Ev, (Long, Long, Double)] {
+      @transient private var agg:
+          org.apache.spark.sql.streaming.ValueState[(Long, Double)] = _
+      override def init(outputMode: OutputMode,
+          timeMode: TimeMode): Unit =
+        agg = getHandle.getValueState[(Long, Double)]("agg",
+          Encoders.product[(Long, Double)], TTLConfig.NONE)
+      override def handleInputRows(user: Long, evs: Iterator[Ev],
+          timers: org.apache.spark.sql.streaming.TimerValues)
+          : Iterator[(Long, Long, Double)] = {
+        val (n0, s0) = if (agg.exists()) agg.get() else (0L, 0.0)
+        val batch = evs.toSeq
+        val next = (n0 + batch.size, s0 + batch.map(_.value).sum)
+        agg.update(next)
+        Iterator((user, next._1, next._2))
       }
-      val q = stream.toDS()
+    }
+    finalStatePerUser(toMemory(spark, "s_stream_tws", "update",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(
+      stream.toDS()
         .groupByKey(_.user_id)
         .transformWithState(proc, TimeMode.None(), OutputMode.Update())
-        .toDF("user_id", "n_events", "value_sum")
-        .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_tws")
-        .outputMode("update").start()
-      try {
-        q.processAllAvailable()
-        stream.addData(b2.toSeq)
-        q.processAllAvailable()
-      } finally q.stop()
-      finalStatePerUser(spark, "s_stream_tws")
-    }
-    }
+        .toDF("user_id", "n_events", "value_sum"),
+      () => stream.addData(b2.toSeq)))
+  }
 
   case class Doc(doc_id: Long, text: String)
 
@@ -665,8 +606,7 @@ object Streams {
   // s_stream_index's oracle is the batch inverted index itself:
   // SparkEntry points it at Search.qInvertedIndexSql.
 
-  def sStreamIndex(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamIndex(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // HARNESS-ONLY collect (see eventRows): the MemoryStream feed, not a
     // production path — readStream on a real source replaces it 1:1.
@@ -675,21 +615,14 @@ object Streams {
     val (b1, b2) = docs.splitAt(docs.length / 2)
     val stream = MemoryStream[Doc](Encoders.product[Doc], spark)
     stream.addData(b1.toSeq) // queued before start() — one batch per feed
-    val q = graft.queries.Search.postingsProjection(
-      stream.toDF()
+    toMemory(spark, "s_stream_index", "complete")(
+      graft.queries.Search.postingsProjection(stream.toDF()
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .groupBy("term")
-        .agg(sort_array(collect_set(col("doc_id"))).as("id_set")))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_index")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      stream.addData(b2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table("s_stream_index").orderBy("term")
-    }
+        .agg(sort_array(collect_set(col("doc_id"))).as("id_set"))),
+      () => stream.addData(b2.toSeq))
+      .orderBy("term")
+  }
 
   /** Streaming 1h/15min SLIDING windows + watermark, append mode — the
     * streaming twin of the batch q_evt_sliding: each event lands in its
@@ -697,13 +630,12 @@ object Streams {
     * append emits every real window (sentinel windows at 2030 filtered
     * by the 2029 fence). Oracle: the batch slide-bucket expansion over
     * the same events. */
-  def sStreamSliding(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamSliding(spark: SparkSession, sfDir: String): DataFrame = {
     val stream = newStream(spark)
     // data + sentinel queued before start() (see s_stream_tumbling)
     stream.addData(eventRows(spark, sfDir).toSeq :+
       Ev(-1L, sentinelTs, -1L, "sentinel", 0.0))
-    val q = stream.toDF()
+    toMemory(spark, "s_stream_sliding", "append")(stream.toDF()
       .withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour", "15 minutes"))
       // exact integer cents, not a rounded double sum: micro-batch state
@@ -713,15 +645,10 @@ object Streams {
       .agg(count(lit(1)).as("n"),
         sum(expr("CAST(round(value * 100) AS BIGINT)")).as("total_cents"))
       .select(col("window.start").as("win_start"), col("n"),
-        col("total_cents"))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_sliding")
-      .outputMode("append").start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table("s_stream_sliding")
+        col("total_cents")))
       .filter(col("win_start") < lit("2029-01-01").cast("timestamp"))
       .orderBy("win_start")
-    }
+  }
 
   val sStreamSlidingSql: String =
     """SELECT CAST(to_timestamp(
@@ -739,8 +666,7 @@ object Streams {
     * whole result). Fed in two batches so the final table PROVES state
     * carried across triggers; after the last trigger it must equal the
     * batch group-by exactly. */
-  def sStreamComplete(spark: SparkSession, sfDir: String): DataFrame =
-    withStreamPartitions(spark) {
+  def sStreamComplete(spark: SparkSession, sfDir: String): DataFrame = {
     val rows = eventRows(spark, sfDir)
     val (b1, b2) = rows.splitAt(rows.length / 2)
     val stream = newStream(spark)
@@ -749,20 +675,13 @@ object Streams {
     // different order than the oracle's single pass, and per-type sums
     // here are large enough to brush the round(4) grid
     stream.addData(b1.toSeq) // queued before start() — one batch per feed
-    val q = stream.toDF()
+    toMemory(spark, "s_stream_complete", "complete")(stream.toDF()
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
-        sum(expr("CAST(round(value * 100) AS BIGINT)")).as("total_cents"))
-      .writeStream.option("checkpointLocation", ckpt())
-      .format("memory").queryName("s_stream_complete")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      stream.addData(b2.toSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    spark.table("s_stream_complete").orderBy("event_type")
-    }
+        sum(expr("CAST(round(value * 100) AS BIGINT)")).as("total_cents")),
+      () => stream.addData(b2.toSeq))
+      .orderBy("event_type")
+  }
 
   val sStreamCompleteSql: String =
     """SELECT event_type, count(*) AS n,

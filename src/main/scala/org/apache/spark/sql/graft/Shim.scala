@@ -35,6 +35,14 @@ object Shim {
       .withExtensions(f)
       .create()
 
+  /** A child of `spark` (`cloneSession` is private[sql]): it copies the
+    * parent's conf, temp views and registered functions, shares its
+    * SparkContext and cache manager, and its own conf writes never
+    * reach the parent. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
   /** Wrap a custom LogicalPlan as a DataFrame (`Dataset.ofRows` is
     * private[sql]) — needed by the graft.plans custom operators. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,

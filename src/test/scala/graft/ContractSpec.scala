@@ -173,6 +173,26 @@ class ContractSpec extends SparkSpecBase {
       """\bconf\.(set|unset)\(""".r)
     assert(toggles.isEmpty,
       s"session conf toggled outside Tables.withConf: $toggles")
+    // the shared conf is toggled only across a stream start(): graph
+    // code scopes its keys to Tables.scoped clones, and the one stream
+    // toggle is the start helper's (`def run` in streaming/)
+    val withConfRe = """\bTables\.withConf\(""".r
+    val defRe = """\bdef (\w+)""".r
+    val sites = Seq("queries", "streaming").flatMap(d =>
+      scalaFiles(new java.io.File(main, d))).flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        val lines = try src.getLines().toVector finally src.close()
+        lines.indices.filter(i => withConfRe.findFirstIn(lines(i)).isDefined)
+          .map { i =>
+            val owner = (i to 0 by -1).iterator
+              .flatMap(j => defRe.findFirstMatchIn(lines(j)).map(_.group(1)))
+              .nextOption().getOrElse("")
+            s"${main.toPath.relativize(f.toPath)}:${i + 1} (def $owner)"
+          }
+      }
+    assert(sites.size == 1 &&
+      sites.head.matches("""streaming/Streams\.scala:\d+ \(def run\)"""),
+      s"shared-conf toggles outside the one stream start helper: $sites")
   }
 
   test("session setup lives in graft.Session (source-level)") {

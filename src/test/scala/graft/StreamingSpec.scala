@@ -1,6 +1,14 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue,
+  LinkedBlockingQueue, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{StreamingQueryListener,
+  StreamingQueryProgress}
 
 /** Structured Streaming semantics (SURVEY.md §2.12 s_* rows). */
 class StreamingSpec extends SparkSpecBase {
@@ -154,5 +162,58 @@ class StreamingSpec extends SparkSpecBase {
     val diff = streamed.except(batch).count() + batch.except(streamed).count()
     assert(diff == 0,
       "complete-mode final table differs from the batch aggregate")
+  }
+
+  test("streams keep the conf set across start(): batches, state width, " +
+    "state store") {
+    import StreamingQueryListener._
+    val names = new ConcurrentHashMap[UUID, String]()
+    val progress = new ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val ended = new LinkedBlockingQueue[UUID]()
+    val listener = new StreamingQueryListener {
+      // onQueryStarted runs before start() returns; the other events
+      // arrive in order on the listener bus, so a query's progress is
+      // all in once its termination event is
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        names.put(e.runId, e.name)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        ended.put(e.runId)
+    }
+    /** The executed micro-batches of the run of `name`. */
+    def batches(name: String): Seq[StreamingQueryProgress] = {
+      var run: UUID = null
+      while (run == null) {
+        val id = ended.poll(120, TimeUnit.SECONDS)
+        assert(id != null, s"$name: no termination event")
+        if (names.get(id) == name) run = id
+      }
+      progress.asScala.toSeq
+        .filter(p => p.runId == run && p.durationMs.containsKey("addBatch"))
+    }
+    spark.streams.addListener(listener)
+    try {
+      val runs = Seq(
+        "s_stream_dedup" -> (streaming.Streams.sStreamDedup _),
+        "s_stream_stream_join" -> (streaming.Streams.sStreamStreamJoin _),
+        "s_stream_outer_join" -> (streaming.Streams.sStreamOuterJoin _),
+        "s_stream_tws" -> (streaming.Streams.sStreamTws _)
+      ).map { case (name, op) => op(spark, sf); name -> batches(name) }.toMap
+      // no-data batches off: each data feed is exactly one batch
+      assert(runs("s_stream_dedup").size == 2)
+      assert(runs("s_stream_stream_join").size == 1)
+      assert(runs("s_stream_outer_join").size == 2)
+      for ((name, ps) <- runs; p <- ps) {
+        assert(p.stateOperators.nonEmpty, s"$name: no state operator")
+        assert(p.stateOperators.forall(_.numShufflePartitions == 2),
+          s"$name batch ${p.batchId}: " +
+            p.stateOperators.map(_.numShufflePartitions).mkString(","))
+      }
+      assert(runs("s_stream_tws").nonEmpty && runs("s_stream_tws").forall(
+        _.stateOperators.forall(_.customMetrics.keySet.asScala
+          .exists(_.startsWith("rocksdb")))),
+        "s_stream_tws did not run on the RocksDB state store")
+    } finally spark.streams.removeListener(listener)
   }
 }
