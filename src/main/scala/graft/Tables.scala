@@ -166,7 +166,10 @@ object Tables {
     * built on a clone would stay bound to the clone's conf. A clone is
     * its own artifact session to the executors, so its first job
     * compiles its generated code again (about 90 ms more than the same
-    * job on the caller's session, sf0.01 on local[4]). */
+    * job on the caller's session, sf0.01 on local[4]). So a looping op
+    * opens one scope per invocation and builds everything that needs
+    * the keys inside it, its layouts included, rather than one scope
+    * per layout plus one for the loop. */
   private[graft] def scoped(spark: SparkSession, kvs: (String, String)*)(
       body: (DataFrame => DataFrame) => DataFrame): DataFrame = {
     val child = org.apache.spark.sql.graft.Shim.cloneSession(spark)
@@ -210,12 +213,15 @@ object Tables {
     * session owner: a memoized relation outlives the invocation that
     * built it, so its checkpoints are released only by [[clearCaches]]
     * (a re-invoking thread has finished with its previous result, not
-    * with the memo).
+    * with the memo). The entry is keyed on (applicationId, sfDir).
     */
   private[graft] def memo[T](
       cache: scala.collection.concurrent.TrieMap[String, T],
-      key: String)(build: => T): T =
-    cache.synchronized { cache.getOrElseUpdate(key, withOwner(null)(build)) }
+      spark: SparkSession, sfDir: String)(build: => T): T =
+    cache.synchronized {
+      cache.getOrElseUpdate(s"${spark.sparkContext.applicationId}:$sfDir",
+        withOwner(null)(build))
+    }
 
   /** Every memoized-DataFrame cache in the engine registers here at
     * object-init, giving [[clearCaches]] a handle on all of them. The
@@ -283,8 +289,7 @@ object Tables {
     * is exact tokenization.
     */
   def tokens(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    memo(tokenCache, key) {
+    memo(tokenCache, spark, sfDir) {
       t(spark, sfDir, "documents")
         .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
         .persist()
@@ -316,8 +321,7 @@ object Tables {
     * carries df/dl, which replaces the separate stat relations and the
     * joins every ranking query made against them. */
   def postings(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    memo(postingsCache, key) {
+    memo(postingsCache, spark, sfDir) {
       val toks = tokens(spark, sfDir)
       toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
         .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
@@ -343,8 +347,7 @@ object Tables {
     * each time. `avgdl` is Spark's `avg` over the per-document lengths,
     * the value the stat subqueries produced, so scores are unchanged. */
   def corpusStats(spark: SparkSession, sfDir: String): CorpusStats = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    memo(corpusStatsCache, key) {
+    memo(corpusStatsCache, spark, sfDir) {
       val r = postings(spark, sfDir).select("doc_id", "dl").distinct()
         .agg(avg(col("dl").cast("double")), sum("dl"))
         .head()
@@ -382,8 +385,7 @@ object Tables {
     * one explode + one distinct shuffle per session.
     */
   def shingles(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    memo(shingleCache, key) {
+    memo(shingleCache, spark, sfDir) {
       t(spark, sfDir, "documents")
         .withColumn("arr", split(col("text"), " "))
         .select(col("doc_id"), col("source"),
@@ -393,12 +395,6 @@ object Tables {
     }
   }
 
-  /** Variant taking a pre-bound token-array column. Callers on a hot path
-    * must `withColumn("arr", split(...))` first and pass that attribute:
-    * inlining the split here puts it inside the transform lambda, where
-    * it re-evaluates per shingle — O(len²) per doc (3× measured on the
-    * fingerprint family at sf0.1).
-    */
   /** 60-bit content-hash bucket: first 15 hex chars of md5(c) as a
     * BIGINT. EXACTLY 15 chars — 60 bits — so the long can never go
     * negative, matching DuckDB's `('0x' || substring(md5(x),1,15))
@@ -425,6 +421,12 @@ object Tables {
       slice(arr, lit(2), size(arr) - 1),
       combine)
 
+  /** Variant taking a pre-bound token-array column. Callers on a hot path
+    * must `withColumn("arr", split(...))` first and pass that attribute:
+    * inlining the split here puts it inside the transform lambda, where
+    * it re-evaluates per shingle — O(len²) per doc (3× measured on the
+    * fingerprint family at sf0.1).
+    */
   def shingles3Arr(arr: org.apache.spark.sql.Column,
       text: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(size(arr) >= 3,

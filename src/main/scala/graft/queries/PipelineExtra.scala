@@ -53,8 +53,7 @@ object PipelineExtra {
   private val sampleShingleCache = Tables.registerCache()
 
   private def sampleShingles(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    Tables.memo(sampleShingleCache, key)(
+    Tables.memo(sampleShingleCache, spark, sfDir)(
       cappedShingles(
         Tables.shingles(spark, sfDir)
           .filter(col("doc_id") % 10 === 0).select("doc_id", "sh"),

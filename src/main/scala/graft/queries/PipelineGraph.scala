@@ -51,11 +51,6 @@ object PipelineGraph {
       .select(col("d1"), col("d2"), col("deg"))
   }
 
-  /** Near-dup clusters over the §2.10 shared sample: minhash-LSH candidate
-    * pairs verified at ≥ [[EdgeThreshold]] become edges; connected
-    * components (cluster = min doc_id reachable) decide keeps. One row per
-    * sampled doc: its cluster id, the cluster size, and the keep flag.
-    */
   /** Connected components by min-label propagation, reusable over any
     * (nodes, directed edges) pair — `edges` need not be symmetric; the
     * symmetric closure is taken here. Returns one (doc_id, cluster) row
@@ -65,55 +60,71 @@ object PipelineGraph {
     */
   private[graft] def connectedComponents(
       nodes: DataFrame, edges: DataFrame): DataFrame = {
-    // LAZY localCheckpoints throughout the loop (round 6): the plan is
-    // cut to a LogicalRDD scan either way, but an eager checkpoint is a
-    // dedicated materialization JOB per round; lazy folds it into the
-    // round's convergence-sum action (which computes, caches, and scans
-    // in one job), halving scheduler round-trips per round. Measured
-    // neutral HERE (the convergence sum already ran per round, so only
-    // the checkpoint job folded away) but a real win on the
-    // fixed-iteration siblings below, where every checkpoint job
-    // collapses into the single output job (pagerank 2.71 → 1.97 s,
-    // triangles 1.44 → 1.09 s, 3-run sf0.1 medians).
     val sym = Tables.localCheckpoint(symmetric(edges), eager = false)
-    var labels = Tables.localCheckpoint(nodes
+    val labels0 = Tables.localCheckpoint(nodes
       .select(col("doc_id"), col("doc_id").as("cluster")), eager = false)
+    // Each pull step pulls the minimum neighbor label and keeps the
+    // smaller of (own, pulled).
+    def pull(cur: DataFrame): DataFrame = {
+      val pulled = sym
+        .join(cur, sym("d2") === cur("doc_id"))
+        .groupBy(sym("d1").as("nid"))
+        .agg(min("cluster").as("nbr_min"))
+      cur
+        .join(pulled, cur("doc_id") === pulled("nid"), "left")
+        .select(cur("doc_id"),
+          least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
+            .as("cluster"))
+    }
+    // Two pull steps per materialized round. Labels reach their
+    // component minimum at the same fixpoint either way (min-propagation
+    // is monotone), but pairing the hops halves the checkpoint +
+    // convergence-scan round-trips — the loop's cost is per-round job
+    // latency, not data volume, at every scale. Round 6 measured 4
+    // pulls/round as WORSE (4.7 vs 4.1 s warm, same session): this
+    // graph's clusters have diameter ≈ 2, so 2 pulls already converge in
+    // one propagation round + one confirmation round — extra pulls add
+    // per-round joins and save zero rounds.
     var prevSum: java.math.BigDecimal = null
-    var converged = false
-    while (!converged) {
-      // Two pull steps per materialized round: each step pulls the
-      // minimum neighbor label and keeps the smaller of (own, pulled).
-      // Labels reach their component minimum at the same fixpoint either
-      // way (min-propagation is monotone), but pairing the hops halves
-      // the checkpoint + convergence-scan round-trips — the loop's cost
-      // is per-round job latency, not data volume, at every scale.
-      // Round 6 measured 4 pulls/round as WORSE (4.7 vs 4.1 s warm,
-      // same session): this graph's clusters have diameter ≈ 2, so 2
-      // pulls already converge in one propagation round + one
-      // confirmation round — extra pulls add per-round joins and save
-      // zero rounds.
-      val twoHop = (1 to 2).foldLeft(labels) { (cur, _) =>
-        val pulled = sym
-          .join(cur, sym("d2") === cur("doc_id"))
-          .groupBy(sym("d1").as("nid"))
-          .agg(min("cluster").as("nbr_min"))
-        cur
-          .join(pulled, cur("doc_id") === pulled("nid"), "left")
-          .select(cur("doc_id"),
-            least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
-              .as("cluster"))
-      }
-      val next = Tables.localCheckpoint(twoHop, eager = false)
-      // decimal sum: overflow-proof at any corpus size — and the action
-      // that materializes this round's lazy checkpoint (see above)
+    rounds(labels0)(cur => pull(pull(cur))) { (next, _, _) =>
+      // decimal sum: overflow-proof at any corpus size
       val s = next.agg(sum(col("cluster").cast("decimal(38,0)")))
         .head().getDecimal(0)
-      labels = next
-      converged = s == prevSum || (prevSum != null && s.compareTo(prevSum) == 0)
+      val same = s == prevSum || (prevSum != null && s.compareTo(prevSum) == 0)
       prevSum = s
-    }
-    labels
+      same
+    }._1
   }
+
+  /** The graph loops' one round combinator: runs `step` from `init` for at
+    * most `cap` rounds, checkpointing each round's output LAZILY, and
+    * stops after the first round where `done(next, prev, round)` holds
+    * (`round` counts from 1). That probe is the round's one action, so
+    * it also materializes the round. An eager checkpoint would be a
+    * dedicated materialization job per round; the lazy one folds into
+    * the probe's job (round 6: neutral on [[connectedComponents]], whose
+    * probe ran per round anyway) or, under [[NoProbe]], every round
+    * collapses into the caller's single output job (pagerank 2.71 →
+    * 1.97 s, triangles 1.44 → 1.09 s, 3-run sf0.1 medians). Eager
+    * checkpoints inside a round are the step's own. Returns the last
+    * state, the number of rounds run and whether `done` held. */
+  private def rounds(init: DataFrame, cap: Int = Int.MaxValue)(
+      step: DataFrame => DataFrame)(
+      done: (DataFrame, DataFrame, Int) => Boolean)
+      : (DataFrame, Int, Boolean) = {
+    @annotation.tailrec
+    def go(prev: DataFrame, r: Int): (DataFrame, Int, Boolean) =
+      if (r == cap) (prev, r, false)
+      else {
+        val next = Tables.localCheckpoint(step(prev), eager = false)
+        if (done(next, prev, r + 1)) (next, r + 1, true) else go(next, r + 1)
+      }
+    go(init, 0)
+  }
+
+  /** The `done` of a fixed-length loop: it runs nothing. */
+  private val NoProbe: (DataFrame, DataFrame, Int) => Boolean =
+    (_, _, _) => false
 
   // The (doc_id, cluster) relation feeds TWO operators (duplicate
   // clustering, priority canonical selection) — run the propagation loop
@@ -126,13 +137,17 @@ object PipelineGraph {
     * the §2.10 shared sample). Memoized per (session, sfDir). */
   private[graft] def dedupClusters(
       spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    graft.Tables.memo(clusterCache, key) {
+    graft.Tables.memo(clusterCache, spark, sfDir) {
       connectedComponents(sampleNodes(spark, sfDir), nearDupEdges(spark, sfDir))
         .persist()
     }
   }
 
+  /** Near-dup clusters over the §2.10 shared sample: minhash-LSH candidate
+    * pairs verified at ≥ [[EdgeThreshold]] become edges; connected
+    * components (cluster = min doc_id reachable) decide keeps. One row per
+    * sampled doc: its cluster id, the cluster size, and the keep flag.
+    */
   def qDedupCluster(spark: SparkSession, sfDir: String): DataFrame = {
     val labels = dedupClusters(spark, sfDir)
     val sizes = labels.groupBy("cluster").agg(count(lit(1)).as("csize"))
@@ -165,24 +180,23 @@ object PipelineGraph {
     // No d1 layout: over 3 fixed iterations its count job and extra
     // exchange cost more than the per-iteration exchanges it saved (the
     // round-13 layout read 0.90 → 1.38 s on the 8-core driver pair).
-    // pr checkpoints stay lazy: each is consumed once, in sequence, by
-    // the next iteration's chain.
+    // pr checkpoints stay lazy ([[rounds]]): each is consumed once, in
+    // sequence, by the next iteration's chain.
     val symDeg = Tables.localCheckpoint(
       degreeFolded(symmetric(nearDupEdges(spark, sfDir))))
     val nodes = Tables.localCheckpoint(sampleNodes(spark, sfDir))
     val n = nodes.count().toDouble
-    var pr = nodes.withColumn("pr", lit(1.0 / n))
-    for (_ <- 1 to 3) {
+    val (pr, _, _) = rounds(nodes.withColumn("pr", lit(1.0 / n)), 3) { pr =>
       val contrib = symDeg
         .join(pr, col("d1") === pr("doc_id"))
         .select(col("d2").as("doc_id"), (col("pr") / col("deg")).as("c"))
         .groupBy("doc_id").agg(sum("c").as("in_pr"))
-      pr = Tables.localCheckpoint(nodes
+      nodes
         .join(contrib, Seq("doc_id"), "left")
         .select(col("doc_id"),
           (lit((1 - d) / n) + lit(d) * coalesce(col("in_pr"), lit(0.0)))
-            .as("pr")), eager = false)
-    }
+            .as("pr"))
+    }(NoProbe)
     pr.select(col("doc_id"), round(col("pr"), 6).as("pr"))
       .orderBy("doc_id")
   }
@@ -347,19 +361,6 @@ object PipelineGraph {
       |SELECT doc_id, count(*) AS n_tri FROM p GROUP BY doc_id
       |ORDER BY n_tri DESC, doc_id LIMIT 20""".stripMargin
 
-  /** Single-source BFS hop distance (≤3 hops) from the minimum sampled
-    * doc_id over the verified near-dup graph — the reachability probe
-    * completing the family: components say WHETHER two docs connect,
-    * PageRank says how central, BFS says how FAR. Three pull rounds of
-    * min-(dist+1) propagation (Bellman–Ford rounds: after k rounds every
-    * node within k hops holds its exact BFS distance); each round is one
-    * |edges| hash shuffle, the Pregel plan, with the [[qGraphPagerank]]
-    * lazy-checkpoint discipline (fixed iterations → all rounds collapse
-    * into the output job). The oracle walks the same graph with a
-    * bounded RECURSIVE CTE whose UNION-dedup keeps the walk ≤ 4·|nodes|
-    * rows regardless of path multiplicity. The seed stays a 1-row
-    * broadcast — never a driver-side collect.
-    */
   /** Round-0 BFS distances (seed ↦ 0, everything else null), exposed
     * UN-checkpointed so PlanAuditSpec can pin the broadcast seed — a
     * checkpoint is eager-or-lazy a LogicalRDD wall that would make an
@@ -373,24 +374,36 @@ object PipelineGraph {
         when(col("doc_id") === col("seed"), 0L).as("hop"))
   }
 
+  /** Single-source BFS hop distance (≤3 hops) from the minimum sampled
+    * doc_id over the verified near-dup graph — the reachability probe
+    * completing the family: components say WHETHER two docs connect,
+    * PageRank says how central, BFS says how FAR. Three pull rounds of
+    * min-(dist+1) propagation (Bellman–Ford rounds: after k rounds every
+    * node within k hops holds its exact BFS distance); each round is one
+    * |edges| hash shuffle, the Pregel plan, with the [[qGraphPagerank]]
+    * lazy-checkpoint discipline (fixed iterations → all rounds collapse
+    * into the output job). The oracle walks the same graph with a
+    * bounded RECURSIVE CTE whose UNION-dedup keeps the walk ≤ 4·|nodes|
+    * rows regardless of path multiplicity. The seed stays a 1-row
+    * broadcast — never a driver-side collect.
+    */
   def qGraphBfs(spark: SparkSession, sfDir: String): DataFrame = {
     // EAGER (round 13): one reference per pull round — the rounds all
     // collapse into the output job, whose concurrent stages raced the
     // lazy copy and re-derived it up to 3×
     val sym = Tables.localCheckpoint(symmetric(nearDupEdges(spark, sfDir)))
-    var dist = Tables.localCheckpoint(bfsSeedDist(spark, sfDir), eager = false)
-    for (_ <- 1 to 3) {
+    val seed = Tables.localCheckpoint(bfsSeedDist(spark, sfDir), eager = false)
+    val (dist, _, _) = rounds(seed, 3) { dist =>
       val reached = dist.filter(col("hop").isNotNull)
         .select(col("doc_id").as("rid"), col("hop").as("rhop"))
       val pulled = sym
         .join(reached, sym("d1") === col("rid"))
         .groupBy(sym("d2").as("nid"))
         .agg(min(col("rhop") + 1L).as("prop"))
-      dist = Tables.localCheckpoint(dist
+      dist
         .join(pulled, dist("doc_id") === pulled("nid"), "left")
-        .select(dist("doc_id"),
-          least(col("hop"), col("prop")).as("hop")), eager = false)
-    }
+        .select(dist("doc_id"), least(col("hop"), col("prop")).as("hop"))
+    }(NoProbe)
     dist.filter(col("hop").isNotNull)
       .select(col("doc_id"), col("hop"))
       .orderBy("hop", "doc_id")
@@ -482,6 +495,18 @@ object PipelineGraph {
 
   // ───────── convergence-loop graduation (round 10) ─────────
 
+  /** Hard hop bound: Σ terms starts at ≤ (1−d)·10⁹ = 5·10⁸ < 2³⁰ and at
+    * least halves per hop, so 30 hops reach exactly 0 on ANY graph. */
+  private val PrHalfHops = 30
+
+  /** Terms are additionally DRAINED: a term below t₀ div 1024 drops to
+    * exactly 0 (a CASE both engines apply identically), so the empirical
+    * hop count is ~log₂(1024) + graph diameter instead of ~log₂(t₀) —
+    * corpus-size-INDEPENDENT — at the cost of truncating pr by at most
+    * ~0.2% of t₀ per node (a deterministic definition, not an error:
+    * the oracle computes the same drained series). */
+  private val PrDrainShift = 1024L
+
   /** PageRank run to CONVERGENCE — the graduation of [[qGraphPagerank]]'s
     * fixed 3 iterations into a data-driven loop that still oracle-checks
     * exactly. The trick is the Neumann-series form with EXACT integer
@@ -503,18 +528,6 @@ object PipelineGraph {
     * [[connectedComponents]] discipline); rounds are corpus-independent
     * (≤ 30 by construction), so the whole loop is O(30·|edges|).
     */
-  /** Hard hop bound: Σ terms starts at ≤ (1−d)·10⁹ = 5·10⁸ < 2³⁰ and at
-    * least halves per hop, so 30 hops reach exactly 0 on ANY graph. */
-  private val PrHalfHops = 30
-
-  /** Terms are additionally DRAINED: a term below t₀ div 1024 drops to
-    * exactly 0 (a CASE both engines apply identically), so the empirical
-    * hop count is ~log₂(1024) + graph diameter instead of ~log₂(t₀) —
-    * corpus-size-INDEPENDENT — at the cost of truncating pr by at most
-    * ~0.2% of t₀ per node (a deterministic definition, not an error:
-    * the oracle computes the same drained series). */
-  private val PrDrainShift = 1024L
-
   def qPagerankConverge(spark: SparkSession, sfDir: String): DataFrame =
     pagerankConvergeWithHops(spark, sfDir)._1
 
@@ -525,11 +538,12 @@ object PipelineGraph {
       spark: SparkSession, sfDir: String): (DataFrame, Int) = {
     // degree folded into the edge list ONCE and checkpointed EAGERLY
     // (concurrent AQE stages cannot re-derive a lazy copy), then laid
-    // out by the per-hop join key d1 (round 13), so every hop's
-    // sort-merge join reads it exchange-free and sort-free; nodes is
-    // checkpointed (count action + seed).
-    val (symDeg, nPart) = d1Layout(spark, Tables.localCheckpoint(
-      degreeFolded(symmetric(nearDupEdges(spark, sfDir)))))
+    // out by the per-hop join key d1 (round 13) inside the loop's scope,
+    // so every hop's sort-merge join reads it exchange-free and
+    // sort-free; nodes is checkpointed (count action + seed).
+    val symDeg = Tables.localCheckpoint(
+      degreeFolded(symmetric(nearDupEdges(spark, sfDir))))
+    val n = layoutWidth(symDeg)
     val nodes = Tables.localCheckpoint(sampleNodes(spark, sfDir))
     val nNodes = nodes.count()
     val t0 = 500000000L / nNodes // (1−d)·10⁹ div n, exact long division
@@ -550,10 +564,8 @@ object PipelineGraph {
           coalesce(col("tn"), lit(0L)).as("t"),
           (col("pr") + coalesce(col("tn"), lit(0L))).as("pr"))
     }
-    var iter = 0
-    var maxT = t0
-    // two hops per materialized round (the connectedComponents pairing):
-    // same fixpoint, half the checkpoint + convergence-scan round-trips.
+    // two hops per round (the connectedComponents pairing): same
+    // fixpoint, half the checkpoint + convergence-scan round-trips.
     // The INNER hop is checkpointed eagerly (round 13): the outer hop
     // references it twice (contribution build + the state join), and a
     // lazy/absent checkpoint let the two consumer stages each recompute
@@ -563,23 +575,14 @@ object PipelineGraph {
     // loop stage is keyed on pre-partitioned or node-scaled inputs, and
     // per-stage re-planning cost ~2 extra driver round-trips per round —
     // JobProf measured 75 jobs for this loop with AQE on).
-    // loop shuffles (contribution groupBy, state-side exchange) use the
-    // same scale-derived width as the edge layout — with AQE off the
-    // session constant would fan every hop back out to 32 micro-tasks
-    val state = Tables.scoped(spark, AqeOff, loopWidth(nPart)) { in =>
-      val edges = in(symDeg)
-      var st = in(state0)
-      while (maxT > 0 && iter < PrHalfHops) {
-        val mid = Tables.localCheckpoint(hop(edges, st))
-        val next = Tables.localCheckpoint(hop(edges, mid), eager = false)
-        maxT = next.agg(max("t")).head().getLong(0)
-        st = next
-        iter += 2
-      }
-      st
+    val (state, r, _) = scopedLoop(spark, n) { in =>
+      val edges = d1Layout(in(symDeg), n)
+      rounds(in(state0), PrHalfHops / 2) { st =>
+        hop(edges, Tables.localCheckpoint(hop(edges, st)))
+      } { (next, _, _) => next.agg(max("t")).head().getLong(0) == 0L }
     }
     (state.select(col("doc_id"), col("pr").as("pr_e9")).orderBy("doc_id"),
-      iter)
+      2 * r)
   }
 
   /** Same 30 hops unrolled — hops past the Spark loop's exact-zero exit
@@ -618,25 +621,13 @@ object PipelineGraph {
       |ORDER BY doc_id""".stripMargin
   }
 
-  /** HITS run to CONVERGENCE on the customer→part co-purchase graph —
-    * the [[qGraphHits]] graduation. Unnormalized HITS overflows, so each
-    * round renormalizes IN INTEGERS: h(c) = Σ_{p∈c} a(p), then
-    * h ← h·10⁶ div max(h); a(p) = Σ_{c∋p} h(c), then a ← a·10⁶ div
-    * max(a). The loop exits early when the authority vector reaches an
-    * EXACT fixpoint (aₖ = aₖ₋₁ for every part): a fixpoint of a
-    * deterministic map persists, so stopping at round k < R provably
-    * equals running all R rounds — which is exactly what the DuckDB
-    * oracle does (R = [[HitsCap]] unrolled rounds). If no fixpoint
-    * appears by R, both sides run R rounds — equal again. Either way
-    * the check is BIGINT-exact with no tolerance. Scale: one |edges|
-    * shuffle per half-round + two scalar max aggregates; the
-    * fixpoint test is one lazy-checkpoint action per round.
-    */
+  /** Normalized HITS rounds (cap). */
   private val HitsCap = 8
 
   /** The customer→part co-purchase edge list, checkpointed: it feeds
-    * every half-round; without materialization the lineitem⋈orders join
-    * and distinct re-run per reference (the qGraphPagerank discipline). */
+    * every half-round of [[qGraphHits]] and both [[qHitsConverge]]
+    * layouts; without materialization the lineitem⋈orders join and
+    * distinct re-run per reference (the qGraphPagerank discipline). */
   private def copurchaseEdges(spark: SparkSession, sfDir: String): DataFrame =
     Tables.localCheckpoint(graft.Tables.t(spark, sfDir, "lineitem")
       .join(graft.Tables.t(spark, sfDir, "orders"),
@@ -654,68 +645,63 @@ object PipelineGraph {
     * pins both readings). */
   private val AqeOff = "spark.sql.adaptive.enabled" -> "false"
 
-  /** Shuffle width of a loop's own exchanges: with AQE off the session
-    * constant would fan every round back out to many micro-tasks. */
-  private def loopWidth(n: Int) = "spark.sql.shuffle.partitions" -> n.toString
-
-  /** `edges` laid out for a loop keyed on d1: hash-partitioned at a
-    * scale-adaptive width (~2M rows per partition, never below 1 — a
-    * session-constant 32-way split made every round a 32-task stage of
-    * task-launch overhead at sf0.1 while staying corpus-proportional at
-    * cluster SFs), sorted by d1, checkpointed EAGERLY under [[AqeOff]].
-    * Returns the layout and its width, which the loop's own shuffles
-    * use. `edges` should be checkpointed: it is counted, then read. */
-  private def d1Layout(spark: SparkSession,
-      edges: DataFrame): (DataFrame, Int) = {
-    val n = math.max(1L, edges.count() / 2000000L).toInt
-    (Tables.scoped(spark, AqeOff) { in =>
-      Tables.localCheckpoint(in(edges).repartition(n, col("d1"))
-        .sortWithinPartitions("d1"))
-    }, n)
+  /** Runs one loop on its own [[Tables.scoped]] clone with [[AqeOff]]
+    * and the loop's own shuffles at width `n` (with AQE off the session
+    * constant would fan every round back out to many micro-tasks).
+    * `body` gets the clone's `in`, builds its layouts on the clone and
+    * returns the [[rounds]] triple, whose state is rebound into the
+    * caller. One clone per loop invocation, layouts included. */
+  private def scopedLoop(spark: SparkSession, n: Int)(
+      body: (DataFrame => DataFrame) => (DataFrame, Int, Boolean))
+      : (DataFrame, Int, Boolean) = {
+    var run = (0, false)
+    val last = Tables.scoped(spark, AqeOff,
+        "spark.sql.shuffle.partitions" -> n.toString) { in =>
+      val (st, r, done) = body(in)
+      run = (r, done)
+      st
+    }
+    (last, run._1, run._2)
   }
 
-  /** [[copurchaseEdges]] checkpointed TWICE more: once hash-partitioned
-    * by customer and once by part — the [[qHitsConverge]] loop layout.
-    * Every HITS half-round is `edges ⋈ broadcast(vec) → groupBy(c or
-    * p)`: a broadcast join preserves the streamed side's partitioning,
-    * so a half-round fed by the matching pre-partitioned copy plans NO
+  /** A loop layout's scale-adaptive width, NOT the session
+    * shuffle-partition constant: ~2M (long, long) edges ≈ 32 MB per
+    * partition, never below 1 (guide §2.2 — fewer, larger partitions; a
+    * session-constant 32-way split made every round a 32-task stage of
+    * task-launch overhead at sf0.1 while staying corpus-proportional at
+    * cluster SFs). `edges` should be checkpointed: it is counted here,
+    * then read by the layout. */
+  private def layoutWidth(edges: DataFrame): Int =
+    math.max(1L, edges.count() / 2000000L).toInt
+
+  /** `edges` laid out for a loop keyed on d1: hash-partitioned at the
+    * explicit width `n` (so the loop's shuffle width leaves the plan
+    * alone), sorted by d1 and checkpointed EAGERLY. Build it inside the
+    * loop's [[scopedLoop]], from edges rebound there. */
+  private def d1Layout(edges: DataFrame, n: Int): DataFrame =
+    Tables.localCheckpoint(edges.repartition(n, col("d1"))
+      .sortWithinPartitions("d1"))
+
+  /** [[copurchaseEdges]] cut TWICE at width `n`: hash-partitioned by
+    * customer and by part — the [[qHitsConverge]] loop layout. Every
+    * HITS half-round is `edges ⋈ broadcast(vec) → groupBy(c or p)`: a
+    * broadcast join preserves the streamed side's partitioning, so a
+    * half-round fed by the matching pre-partitioned copy plans NO
     * exchange at all — the per-half-round shuffle of the whole edge
     * list (16 of them across the 8-round loop) collapses into these two
     * up-front shuffles (guide §2.4: operations keyed the same way share
     * one exchange). Worth it only for the 8-round loop: [[qGraphHits]]'
     * fixed 2 iterations measured FASTER on the plain checkpoint (4
-    * saved exchanges don't pay for 2 extra checkpoint builds). */
-  private def copurchaseLayouts(spark: SparkSession,
-      sfDir: String): (DataFrame, DataFrame) = {
-    val base = graft.Tables.t(spark, sfDir, "lineitem")
-      .join(graft.Tables.t(spark, sfDir, "orders"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-    // scale-adaptive layout, NOT the session shuffle-partition constant:
-    // ~2M (long, long) edges ≈ 32 MB per partition (guide §2.2 — fewer,
-    // larger partitions; a fixed 32-way split of a few-MB edge list made
-    // every half-round a 32-task stage of pure task-launch overhead,
-    // while at cluster SFs the count grows with |edges|). |edges| ≤
-    // |lineitem|, and the lineitem row count is a parquet-metadata read
-    // — good enough for sizing without materializing the edge list
-    // first.
-    val n = math.max(1L,
-      graft.Tables.t(spark, sfDir, "lineitem").count() / 2000000L).toInt
-    // The DISTINCT is folded into each layout exchange (round 13):
-    // hash-partitioning by c (or p) clusters every (c, p) duplicate
-    // into one partition — HashPartitioning(c) satisfies
-    // ClusteredDistribution(c, p) — so dropDuplicates after the
-    // repartition plans NO second exchange, and the previous
-    // intermediate distinct checkpoint (one extra full exchange by
-    // (c, p) + a third stored copy of the edge list) disappears. The
-    // two layouts are independent single-action builds over the same
-    // scan, so they run CONCURRENTLY (guide §2.6 — overlap independent
-    // jobs; the second build back-fills the first one's stragglers):
-    // by-part on a thread started for this call, by-customer here.
-    def layout(key: String) = Tables.scoped(spark, AqeOff) { in =>
-      Tables.localCheckpoint(
-        in(base).repartition(n, col(key)).dropDuplicates("c", "p"))
-    }
+    * saved exchanges don't pay for 2 extra checkpoint builds). Build it
+    * inside the loop's [[scopedLoop]], from edges rebound there. The two
+    * cuts are independent single-action builds over the same
+    * checkpoint, so they run CONCURRENTLY (guide §2.6 — overlap
+    * independent jobs; 4.76 s vs 5.35 s sequential, sf0.1 on 4 cores):
+    * by-part on a thread started for this call, by-customer here. */
+  private def copurchaseLayouts(edges: DataFrame,
+      n: Int): (DataFrame, DataFrame) = {
+    def layout(key: String) =
+      Tables.localCheckpoint(edges.repartition(n, col(key)))
     val byP = Tables.fork("graft-hits-layout")(layout("p"))
     val byC = layout("c")
     (byC, byP())
@@ -757,6 +743,20 @@ object PipelineGraph {
       .orderBy(col("authority_e6").desc, col("partkey"))
       .limit(10)
 
+  /** HITS run to CONVERGENCE on the customer→part co-purchase graph —
+    * the [[qGraphHits]] graduation. Unnormalized HITS overflows, so each
+    * round renormalizes IN INTEGERS: h(c) = Σ_{p∈c} a(p), then
+    * h ← h·10⁶ div max(h); a(p) = Σ_{c∋p} h(c), then a ← a·10⁶ div
+    * max(a). The loop exits early when the authority vector reaches an
+    * EXACT fixpoint (aₖ = aₖ₋₁ for every part): a fixpoint of a
+    * deterministic map persists, so stopping at round k < R provably
+    * equals running all R rounds — which is exactly what the DuckDB
+    * oracle does (R = [[HitsCap]] unrolled rounds). If no fixpoint
+    * appears by R, both sides run R rounds — equal again. Either way
+    * the check is BIGINT-exact with no tolerance. Scale: one |edges|
+    * shuffle per half-round + two scalar max aggregates; the
+    * fixpoint test is one lazy-checkpoint action per round.
+    */
   def qHitsConverge(spark: SparkSession, sfDir: String): DataFrame =
     hitsConvergeWithIters(spark, sfDir)._1
 
@@ -764,7 +764,7 @@ object PipelineGraph {
     *
     * Round-13 structure notes (guide §1 — measured, not guessed):
     *   - per-half-round edge-list exchanges are GONE (the
-    *     [[copurchaseEdges]] pre-partitioning; plan: the only exchanges
+    *     [[copurchaseLayouts]] pre-partitioning; plan: the only exchanges
     *     left per round are the two 1-partition vector-max windows);
     *   - the per-round lazy localCheckpoint STAYS: a fully lazy 8-round
     *     unroll in one action was re-measured at 10.2 s warm vs 5.8 s —
@@ -777,36 +777,28 @@ object PipelineGraph {
     *     exactly the cap-unrolled DuckDB oracle). */
   private[graft] def hitsConvergeWithIters(
       spark: SparkSession, sfDir: String): (DataFrame, Int, Boolean) = {
-    // layouts build at the session width (AQE off only so the
-    // checkpoints keep their partitioning) — then the loop's own
-    // actions run with AQE OFF at the layout width: every loop stage is
-    // dimension-bounded or pre-partitioned (no skew, nothing to
+    // the loop runs with AQE OFF at the layout width, layouts included
+    // (AQE off so the checkpoints keep their partitioning): every loop
+    // stage is dimension-bounded or pre-partitioned (no skew, nothing to
     // re-plan), and AQE's per-stage re-optimization added ~2 driver
     // round-trips per round (JobProf round 13: ~60 jobs vs 30, 9.5 s vs
     // 6.0 s warm — scheduling-bound, not data-bound). The loop's one
     // keyed exchange (the a₀ distinct) runs at the layout width, not
     // the session constant.
-    val (byC0, byP0) = copurchaseLayouts(spark, sfDir)
-    var iter = 0
-    var fixed = false
-    val last = Tables.scoped(spark, AqeOff,
-        loopWidth(byP0.rdd.getNumPartitions)) { in =>
-      val (byC, byP) = (in(byC0), in(byP0))
-      var a = Tables.localCheckpoint(byP.select(col("p")).distinct()
+    val edges = copurchaseEdges(spark, sfDir)
+    val n = layoutWidth(edges)
+    val (last, r, fixed) = scopedLoop(spark, n) { in =>
+      val (byC, byP) = copurchaseLayouts(in(edges), n)
+      val a0 = Tables.localCheckpoint(byP.select(col("p")).distinct()
         .select(col("p"), lit(1000000L).as("a")), eager = false)
-      while (!fixed && iter < HitsCap) {
-        val next =
-          Tables.localCheckpoint(hitsRound(byC, byP, a), eager = false)
-        fixed = iter >= HitsCap - 3 && next.toDF("p", "na")
+      rounds(a0, HitsCap)(hitsRound(byC, byP, _)) { (next, a, k) =>
+        k > HitsCap - 3 && next.toDF("p", "na")
           .join(broadcast(a), "p")
           .filter(col("na") =!= col("a"))
           .isEmpty
-        a = next
-        iter += 1
       }
-      a
     }
-    (hitsTop10(last), iter, fixed)
+    (hitsTop10(last), r, fixed)
   }
 
   /** h·10⁶ can overflow neither side: h ≤ |parts|·10⁶ ≤ ~10¹² at any
@@ -866,19 +858,16 @@ object PipelineGraph {
     // concurrent consumer stages), then laid out by the per-round join
     // key d1; the loop itself runs with AQE off and its shuffles at the
     // layout's width.
-    val (sym0, nPart) = d1Layout(spark,
-      Tables.localCheckpoint(symmetric(nearDupEdges(spark, sfDir))))
+    val sym = Tables.localCheckpoint(symmetric(nearDupEdges(spark, sfDir)))
+    val n = layoutWidth(sym)
     val labels0 = Tables.localCheckpoint(sampleNodes(spark, sfDir)
       .withColumn("label", col("doc_id") % 16))
-    var iter = 0
-    var fixed = false
-    val last = Tables.scoped(spark, AqeOff, loopWidth(nPart)) { in =>
-      val sym = in(sym0)
-      var labels = in(labels0)
-      while (!fixed && iter < LpaCap) {
-        val votes = sym
+    val (last, r, fixed) = scopedLoop(spark, n) { in =>
+      val edges = d1Layout(in(sym), n)
+      rounds(in(labels0), LpaCap) { labels =>
+        val votes = edges
           .join(labels.select(col("doc_id").as("src"), col("label")),
-            sym("d1") === col("src"))
+            edges("d1") === col("src"))
           .select(col("d2").as("nid"), col("label"))
           .unionAll(labels.select(col("doc_id").as("nid"), col("label")))
         // fixpoint probe FUSED into the round (round 13, guide §1/§2.4):
@@ -888,7 +877,7 @@ object PipelineGraph {
         // both materializes the round's lazy checkpoint and answers the
         // convergence test — the separate join+isEmpty job per round is
         // gone.
-        val next = Tables.localCheckpoint(votes.groupBy("nid", "label")
+        votes.groupBy("nid", "label")
           .agg(count(lit(1)).as("cnt"))
           .groupBy("nid")
           .agg(min(struct((-col("cnt")).as("nc"), col("label").as("label")))
@@ -899,17 +888,13 @@ object PipelineGraph {
           .select(col("doc_id"), col("label"),
             when(col("prev").isNull, 0L)
               .otherwise((col("label") =!= col("prev")).cast("long"))
-              .as("chg")), eager = false)
-        fixed = next.agg(sum("chg")).head().getLong(0) == 0L
-        labels = next
-        iter += 1
-      }
-      labels
+              .as("chg"))
+      } { (next, _, _) => next.agg(sum("chg")).head().getLong(0) == 0L }
     }
     val sizes = last.groupBy("label").agg(count(lit(1)).as("csize"))
     (last.join(sizes, "label")
       .select(col("doc_id"), col("label").as("community"), col("csize"))
-      .orderBy("doc_id"), iter, fixed)
+      .orderBy("doc_id"), r, fixed)
   }
 
   val qCommunityLpaSql: String = {

@@ -77,8 +77,8 @@ object PipelinePlus {
     * of token-set Jaccard — the un-truncated pair stream q_dedup_minhash
     * ranks and q_dedup_cluster clusters. */
   private[graft] def minhashPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    Tables.memo(pairsCache, key)(minhashPairsUncached(spark, sfDir).persist())
+    Tables.memo(pairsCache, spark, sfDir)(
+      minhashPairsUncached(spark, sfDir).persist())
   }
 
   /** Mega-bucket guard (round 10): buckets larger than this are
@@ -616,8 +616,7 @@ object PipelinePlus {
     // |langs| × |alphabet|² regardless of corpus size, so collecting it to
     // the driver is the same move as broadcasting a dim table — at 100 TB
     // this is still a few thousand rows.
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    val (langs, lpByGram, floors) = Tables.memo(langProfCache, key) {
+    val (langs, lpByGram, floors) = Tables.memo(langProfCache, spark, sfDir) {
       val prof = docs
         .select(col("lang"), explode(bigrams(col("text"))).as("g"))
         .groupBy("lang", "g").agg(count(lit(1)).as("c"))
@@ -935,8 +934,7 @@ object PipelinePlus {
       .filter(col("doc_id") % 10 === 0)
       .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
     val tf = Tables.localCheckpoint(tfRel, eager = false)
-    val sig = Tables.memo(wSigCache,
-      s"${spark.sparkContext.applicationId}:$sfDir") {
+    val sig = Tables.memo(wSigCache, spark, sfDir) {
       // integer-weight expansion + K min-hashes in one groupBy (the
       // minhashSig shape over the expanded elements)
       tfRel.select(col("doc_id"), col("term"),

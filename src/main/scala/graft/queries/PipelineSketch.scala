@@ -131,8 +131,7 @@ object PipelineSketch {
   /** Benchmark side: 5-gram shingle hashes of the `src0` documents —
     * the eval-set proxy whose content must not leak into training. */
   private def shingles(spark: SparkSession, sfDir: String): DataFrame = {
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    Tables.memo(shingle5Cache, key) {
+    Tables.memo(shingle5Cache, spark, sfDir) {
       val words = split(col("text"), " ")
       Tables.t(spark, sfDir, "documents")
         // sequence(0, n) flips to a DESCENDING range when n < 0 — guard
@@ -165,8 +164,7 @@ object PipelineSketch {
     // contract): materialize the ~100 KB sketch driver-side and embed it
     // as a literal — the same bounded collect-and-broadcast a scalar
     // subquery performs, independent of corpus size by construction.
-    val key = s"${spark.sparkContext.applicationId}:$sfDir"
-    val bf = Tables.memo(bloomCache, key) {
+    val bf = Tables.memo(bloomCache, spark, sfDir) {
       sh.filter(col("source") === "src0")
         .agg(graft.functions.BloomOps
           .bloomFilterAgg(col("sh"), 100000L, 800000L).as("bf"))

@@ -407,8 +407,7 @@ object RelationalExtra {
     // (sorted array, i<j) instead of through an ok-keyed self-join, so
     // no corpus-sized join exists anywhere in the plan. The oracle keeps
     // the self-join formulation: two algorithms, one answer.
-    val baskets = graft.Tables.memo(basketsCache,
-      s"${spark.sparkContext.applicationId}:$sfDir")(
+    val baskets = graft.Tables.memo(basketsCache, spark, sfDir)(
       t(spark, sfDir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey"))
         .join(t(spark, sfDir, "part")

@@ -245,8 +245,7 @@ object Search {
     graft.Tables.registerCache()
 
   private[queries] def lexScores(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memo(lexScoresCache,
-      s"${spark.sparkContext.applicationId}:$sfDir") {
+    Tables.memo(lexScoresCache, spark, sfDir) {
       Tables.localCheckpoint(bm25Scored(spark, sfDir, Seq("spark", "join"))
         .groupBy("doc_id")
         .agg(countDistinct("term").as("nt"), round(sum("s"), 4).as("score"))
@@ -358,8 +357,7 @@ object Search {
     graft.Tables.registerCache()
 
   private def docVectors(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memo(docVecCache,
-      s"${spark.sparkContext.applicationId}:$sfDir") {
+    Tables.memo(docVecCache, spark, sfDir) {
       Tables.localCheckpoint(tfidfRaw(spark, sfDir)
         .filter(col("doc_id") % 10 === 0)
         .groupBy("doc_id")

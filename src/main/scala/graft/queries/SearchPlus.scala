@@ -212,8 +212,7 @@ object SearchPlus {
     graft.Tables.registerCache()
 
   private def vsmScoredM(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Tables.memo(vsmCache,
-      s"${spark.sparkContext.applicationId}:$sfDir") {
+    graft.Tables.memo(vsmCache, spark, sfDir) {
       Tables.localCheckpoint(vsmScored(spark, sfDir))
     }
 

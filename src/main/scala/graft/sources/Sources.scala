@@ -187,8 +187,7 @@ object Sources {
     * writes per invocation.
     */
   def bucketedJoin(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memo(bucketedCache,
-      s"${spark.sparkContext.applicationId}:$sfDir") {
+    Tables.memo(bucketedCache, spark, sfDir) {
       bucketedJoinUncached(spark, sfDir)
     }
 
@@ -250,14 +249,11 @@ object Sources {
     def nFiles(d: String): Long =
       new java.io.File(d).listFiles()
         .count(f => f.getName.startsWith("part-")).toLong
-    val fragmented = fragDirCache.synchronized {
-      fragDirCache.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}:$sfDir", {
-          val d = tmpDir("graft_frag_")
-          Tables.t(spark, sfDir, "documents")
-            .repartition(32).write.mode("overwrite").parquet(d)
-          d
-        })
+    val fragmented = Tables.memo(fragDirCache, spark, sfDir) {
+      val d = tmpDir("graft_frag_")
+      Tables.t(spark, sfDir, "documents")
+        .repartition(32).write.mode("overwrite").parquet(d)
+      d
     }
     val compacted = tmpDir("graft_compact_")
     val small = spark.read.parquet(fragmented)

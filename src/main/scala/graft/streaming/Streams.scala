@@ -36,7 +36,7 @@ object Streams {
   // deployment swaps this scaffold for readStream on Kafka/files — the
   // query plans downstream are identical and never collect.
   private def eventRows(spark: SparkSession, sfDir: String): Array[Ev] =
-    Tables.memo(eventRowsCache, s"${spark.sparkContext.applicationId}:$sfDir") {
+    Tables.memo(eventRowsCache, spark, sfDir) {
       import spark.implicits._
       Tables.events(spark, sfDir)
         .select("event_id", "ts", "user_id", "event_type", "value")
@@ -436,8 +436,7 @@ object Streams {
 
   def sStreamFile(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.Tables.events(spark, sfDir)
-    val dir = Tables.memo(fileSrcCache,
-        s"${spark.sparkContext.applicationId}:$sfDir") {
+    val dir = Tables.memo(fileSrcCache, spark, sfDir) {
       val d = graft.TmpDirs.create("graft_filestream_")
       ev.repartition(3).write.mode("overwrite").parquet(d)
       d

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.graft.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 
 /** Properties of the duplicate-clustering operator (connected components
@@ -70,5 +73,31 @@ class PipelineGraphSpec extends SparkSpecBase {
     val l2 = out.select(col("doc_id").as("d2"), col("cluster").as("c2"))
     assert(edges.join(l1, "d1").join(l2, "d2")
       .filter(col("c1") =!= col("c2")).count() == 0)
+  }
+
+  test("q_hits_converge builds its co-purchase edge list once") {
+    // the loop's two layouts and its width are cut from one checkpointed
+    // lineitem⋈orders edge list: exactly one SQL execution reads the
+    // lineitem file per invocation
+    val id = "q_hits_converge"
+    val sc = spark.sparkContext
+    SparkEntry.queries(id)(spark, sf).collect()
+    TestBus.drain(sc)
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("lineitem.parquet") =>
+          scans.incrementAndGet()
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries(id)(spark, sf).collect()
+      TestBus.drain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(scans.get == 1,
+      s"${scans.get} SQL executions scanned lineitem.parquet during $id")
   }
 }

@@ -7,18 +7,66 @@ import org.apache.spark.sql.functions._
   */
 class PostingsSpec extends SparkSpecBase {
 
-  test("postings equal a fresh token-stream derivation of tf, df and dl") {
-    val toks = Tables.t(spark, sf, "documents")
+  /** Asserts that the postings memo over `dir` equals a fresh
+    * token-stream derivation of tf, df and dl. */
+  private def assertFreshPostings(dir: String): Unit = {
+    val toks = Tables.t(spark, dir, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
     val tf = toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
     val df = toks.distinct().groupBy("term").agg(count(lit(1)).as("df"))
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val fresh = tf.join(df, "term").join(dl, "doc_id")
       .select("term", "doc_id", "tf", "df", "dl")
-    val memo = Tables.postings(spark, sf)
+    val memo = Tables.postings(spark, dir)
     assert(memo.columns.toSeq == Seq("term", "doc_id", "tf", "df", "dl"))
     assert(memo.exceptAll(fresh).isEmpty, "postings rows missing from tokens")
     assert(fresh.exceptAll(memo).isEmpty, "token rows missing from postings")
+  }
+
+  test("postings equal a fresh token-stream derivation of tf, df and dl") {
+    assertFreshPostings(sf)
+  }
+
+  /** A copy of sf0.001 whose `documents` is 3 files of contiguous doc_id
+    * ranges, so the token cache and the postings memo run at width > 1
+    * (every fixture table is one file); the other tables are copied. */
+  private lazy val splitSf: String = {
+    val dir = TmpDirs.create("graft_split_sf_")
+    new java.io.File(sf).listFiles()
+      .filter(f => f.getName.endsWith(".parquet") &&
+        f.getName != "documents.parquet")
+      .foreach(f => java.nio.file.Files.copy(f.toPath,
+        java.nio.file.Paths.get(dir, f.getName)))
+    Tables.t(spark, sf, "documents")
+      .repartitionByRange(3, col("doc_id")).sortWithinPartitions("doc_id")
+      .write.parquet(s"$dir/documents.parquet")
+    assert(new java.io.File(s"$dir/documents.parquet").listFiles()
+      .count(_.getName.startsWith("part-")) == 3)
+    dir
+  }
+
+  test("postings over a 3-file documents table span several partitions") {
+    assert(Tables.postings(spark, splitSf).rdd.getNumPartitions > 1)
+    assertFreshPostings(splitSf)
+  }
+
+  test("the search mix hashes to its golden values over a split documents") {
+    // the 31 ids of perfbench's `search` workload
+    val searchMix = Seq(
+      "q_search_and", "q_search_or", "q_search_not", "q_search_phrase",
+      "q_search_prefix", "q_search_proximity", "q_search_boolean",
+      "q_search_regex", "q_search_fuzzy", "q_fuzzy_deletion",
+      "q_spell_correct", "q_autocomplete", "q_search_bm25", "q_bm25f",
+      "q_bm25_prf", "q_search_qld", "q_search_pl2", "q_search_wand",
+      "q_search_rrf", "q_search_diverse", "q_vsm_cosine", "q_idx_prefix",
+      "q_idx_stopword", "q_idx_champion", "q_idx_skiplist", "q_idx_impact",
+      "q_index_merge", "q_search_snippet", "q_search_facets",
+      "q_search_hybrid", "q_sim_cosine_topk")
+    assert(searchMix.distinct.size == 31)
+    val bad = searchMix.filter(id =>
+      Golden.hash(SparkEntry.queries(id)(spark, splitSf)) !=
+        GoldenSpec.golden(id))
+    assert(bad.isEmpty, s"search ids drifted on the split copy: $bad")
   }
 
   test("corpus scalars equal the documents count and the dl mean and sum") {
