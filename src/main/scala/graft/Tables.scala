@@ -284,14 +284,20 @@ object Tables {
   private val tokenCache =
     registerCache()
 
-  /** (doc_id, term) token stream. The corpus is space-joined single-space
-    * lowercase tokens with no empties (SURVEY.md §1.2), so a plain split
-    * is exact tokenization.
+  /** (doc_id, pos, term) token stream, in document order. The corpus is
+    * space-joined single-space lowercase tokens with no empties
+    * (SURVEY.md §1.2), so a plain split is exact tokenization. `pos` is
+    * the token's 0-based offset in its document (posexplode's own
+    * base); an op that needs another base shifts it where it reads it.
+    * This is the engine's one tokenization: positional ops read these
+    * rows or the positions in [[postings]], never the corpus text.
+    * A consumer that de-duplicates rows must project `pos` away first.
     */
   def tokens(spark: SparkSession, sfDir: String): DataFrame = {
     memo(tokenCache, spark, sfDir) {
       t(spark, sfDir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+        .select(col("doc_id"),
+          posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
         .persist()
     }
   }
@@ -299,11 +305,13 @@ object Tables {
   private val postingsCache =
     registerCache()
 
-  /** The inverted index, built once per (session, sfDir): one row per
-    * (term, doc_id) posting with its term frequency `tf`, the term's
-    * document frequency `df` and the document's token length `dl` —
-    * the index-time statistics every ranking function reads, so no
-    * search query re-aggregates the token stream or joins a stat table.
+  /** The positional inverted index, built once per (session, sfDir):
+    * one row per (term, doc_id) posting with its term frequency `tf`,
+    * its ascending 0-based token positions `pos` (the [[tokens]] base;
+    * `tf` = size(pos)), the term's document frequency `df` and the
+    * document's token length `dl` — the index-time statistics every
+    * ranking function reads, so no search query re-aggregates the token
+    * stream, joins a stat table or re-tokenizes the corpus.
     *
     * Layout: range-partitioned on `term` to the token cache's own
     * partition count, then sorted by (term, doc_id) within each
@@ -323,7 +331,8 @@ object Tables {
   def postings(spark: SparkSession, sfDir: String): DataFrame = {
     memo(postingsCache, spark, sfDir) {
       val toks = tokens(spark, sfDir)
-      toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
+      toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"),
+          sort_array(collect_list("pos")).as("pos"))
         .withColumn("df", count(lit(1)).over(Window.partitionBy("term")))
         .withColumn("dl", sum("tf").over(Window.partitionBy("doc_id")))
         .repartitionByRange(toks.rdd.getNumPartitions, col("term"))

@@ -402,7 +402,8 @@ object PipelineGov {
   // ───────────────── deterministic span-corruption stats ─────────────────
 
   /** T5-style span-corruption statistics under a DETERMINISTIC mask:
-    * token (doc, pos) is masked iff its 60-bit md5 bucket ≡ 0 (mod 5) —
+    * token (doc, pos) — pos the token cache's 0-based offset, the
+    * oracle's i - 1 — is masked iff its 60-bit md5 bucket ≡ 0 (mod 5) —
     * a content-addressed 20% rate both engines reproduce exactly, the
     * q_split_train hash-gate convention. Adjacent masked tokens merge
     * into spans (a span starts where masked ∧ ¬masked-predecessor — one
@@ -412,9 +413,7 @@ object PipelineGov {
     */
   def qSpanMask(spark: SparkSession, sfDir: String): DataFrame = {
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    Tables.t(spark, sfDir, "documents")
-      .withColumn("arr", split(col("text"), " "))
-      .select(col("doc_id"), posexplode(col("arr")).as(Seq("pos", "term")))
+    Tables.tokens(spark, sfDir)
       .withColumn("m",
         (Tables.md5Bucket(concat(col("doc_id"), lit(":"), col("pos")))
           % 5 === 0).cast("long"))

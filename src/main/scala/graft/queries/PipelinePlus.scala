@@ -36,7 +36,7 @@ object PipelinePlus {
     * memoized one level up anyway. */
   private[queries] def sampleTerms(spark: SparkSession, sfDir: String): DataFrame =
     Tables.tokens(spark, sfDir)
-      .filter(col("doc_id") % 10 === 0).distinct()
+      .filter(col("doc_id") % 10 === 0).select("doc_id", "term").distinct()
 
   // ───────────────────────── MinHash + LSH dedup ─────────────────────────
 

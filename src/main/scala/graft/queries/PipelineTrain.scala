@@ -558,10 +558,8 @@ object PipelineTrain {
     * force-broadcast.
     */
   def qKeyphraseRake(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = Tables.t(spark, sfDir, "documents")
-      .select(col("doc_id"), posexplode(split(col("text"), " "))
-        .as(Seq("pos", "tok")))
-      .withColumn("stop", col("tok").isin("a", "the"))
+    val toks = Tables.tokens(spark, sfDir)
+      .withColumn("stop", col("term").isin("a", "the"))
     val wDoc = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.unboundedPreceding, 0)
     val seg = toks
@@ -570,29 +568,28 @@ object PipelineTrain {
       .filter(!col("stop"))
     val wPhrase = Window.partitionBy("doc_id", "grp")
     // TWO consumers (the word-score aggregation and the phrase re-join)
-    // — without materialization the whole scan → posexplode → two-window
-    // chain runs twice (round-13 plan dump: 2 parquet scans, the corpus
-    // re-exploded per branch; guide §2.4). A lazy localCheckpoint cuts
-    // the duplicate; the pinned copy belongs to the invocation and is
-    // released when the same thread re-invokes the query. (A
-    // window-over-tok rewrite would also single-pass it but buffers
-    // hot-token partitions at scale — the aggregate+join form keeps
-    // partial aggregation and AQE skew handling, so it stays.)
+    // — without materialization the token-cache scan and the two-window
+    // chain over it run once per branch (guide §2.4). A lazy
+    // localCheckpoint cuts the duplicate; the pinned copy belongs to the
+    // invocation and is released when the same thread re-invokes the
+    // query. (A window-over-token rewrite would also single-pass it but
+    // buffers hot-token partitions at scale — the aggregate+join form
+    // keeps partial aggregation and AQE skew handling, so it stays.)
     val withLen = Tables.localCheckpoint(
       seg.withColumn("plen", count(lit(1)).over(wPhrase)), eager = false)
-    val words = withLen.groupBy("tok")
+    val words = withLen.groupBy("term")
       .agg(count(lit(1)).as("freq"), sum("plen").as("deg"))
-      .select(col("tok"),
+      .select(col("term"),
         expr("deg * 1000000 div freq").as("wscore"))
     // word-score table is vocab-sized — unbounded under Heaps' law, so
     // no forced broadcast (round-10 advice): AQE promotes to
     // broadcast-hash at runtime when the aggregated table is small
-    val phrases = withLen.join(words, "tok")
+    val phrases = withLen.join(words, "term")
       .groupBy("doc_id", "grp")
       .agg(
         concat_ws(" ", transform(
-          array_sort(collect_list(struct(col("pos"), col("tok")))),
-          s => s.getField("tok"))).as("phrase"),
+          array_sort(collect_list(struct(col("pos"), col("term")))),
+          s => s.getField("term"))).as("phrase"),
         sum("wscore").as("score_e6"))
     phrases.groupBy("phrase")
       .agg(count(lit(1)).as("n_occur"), max("score_e6").as("score_e6"))

@@ -141,13 +141,14 @@ object Search {
        |WHERE term IN ('vector', 'stream')
        |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
 
-  /** Phrase query 'hash join' via positional bigram adjacency. The oracle
-    * uses padded-LIKE containment, exactly equivalent on this single-space
+  /** Phrase query 'hash join' via positional bigram adjacency over the
+    * two terms' position lists in the postings. The oracle uses
+    * padded-LIKE containment, exactly equivalent on this single-space
     * corpus (SURVEY.md §2.9 footnote). */
   def qSearchPhrase(spark: SparkSession, sfDir: String): DataFrame = {
-    val pos = Tables.t(spark, sfDir, "documents")
-      .select(col("doc_id"), posexplode(split(col("text"), " ")))
-      .toDF("doc_id", "pos", "term")
+    val pos = Tables.postings(spark, sfDir)
+      .filter(col("term").isin("hash", "join"))
+      .select(col("doc_id"), explode(col("pos")).as("pos"), col("term"))
     val a = pos.filter(col("term") === "hash").as("a")
     val b = pos.filter(col("term") === "join").as("b")
     a.join(b,

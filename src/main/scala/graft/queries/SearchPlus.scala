@@ -19,16 +19,15 @@ object SearchPlus {
   private val TermA = "spark"
   private val TermB = "query"
 
-  /** Positional postings for one term: (doc_id, pos). posexplode is
-    * 0-based and DuckDB's generate_series is 1-based; the +1 here keeps
-    * positions identical on both engines. */
+  /** Positional postings for one term: (doc_id, pos), read off the
+    * postings' position lists. The index is 0-based and DuckDB's
+    * generate_series 1-based; proximity only emits position
+    * differences, so no shift is needed. */
   private def positions(spark: SparkSession, sfDir: String,
       term: String): DataFrame =
-    Tables.t(spark, sfDir, "documents")
-      .select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("p0", "term")))
+    Tables.postings(spark, sfDir)
       .filter(col("term") === term)
-      .select(col("doc_id"), (col("p0") + 1).as("pos"))
+      .select(col("doc_id"), explode(col("pos")).as("pos"))
 
   /** Proximity search: docs where TermA and TermB occur within 3 token
     * positions; reports the closest distance and the number of close

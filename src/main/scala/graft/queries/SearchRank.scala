@@ -118,26 +118,18 @@ object SearchRank {
     * conjunctive query: the weighted tf is the exact integer
     * 2·tf_title + tf_body, then the standard BM25 saturation
     * (k1 = 1.2, b = 0.75) over it, per-term scores summed in FIXED
-    * a + b order (2 addends — IEEE-commutative across engines). df and
-    * dl come from the two query terms' postings, avgdl and N are
-    * literals; the corpus is read only for the positional field split.
-    * Constants spelled identically to [[Search.bm25ScoredOn]]'s
-    * association.
+    * a + b order (2 addends — IEEE-commutative across engines). Every
+    * input is a column of the two query terms' postings: 2·tf_title +
+    * tf_body = tf + |positions < 5|, with df and dl beside it; avgdl and
+    * N are literals. Constants spelled identically to
+    * [[Search.bm25ScoredOn]]'s association.
     */
   def qBm25f(spark: SparkSession, sfDir: String): DataFrame = {
-    val toks = Tables.t(spark, sfDir, "documents")
-      .withColumn("arr", split(col("text"), " "))
-      .select(col("doc_id"), posexplode(col("arr")).as(Seq("p0", "term")))
-      .filter(col("term").isin("spark", "join"))
-    val wtf = toks
-      .groupBy("doc_id", "term")
-      .agg((sum(when(col("p0") < 5, 2L).otherwise(1L))).as("wtf"))
-    val stats = Tables.postings(spark, sfDir)
-      .filter(col("term").isin("spark", "join"))
-      .select("term", "doc_id", "df", "dl")
     val cs = Tables.corpusStats(spark, sfDir)
-    val scored = wtf
-      .join(stats, Seq("term", "doc_id"))
+    val scored = Tables.postings(spark, sfDir)
+      .filter(col("term").isin("spark", "join"))
+      .withColumn("wtf",
+        col("tf") + size(filter(col("pos"), p => p < 5)))
       .withColumn("idf",
         log((lit(cs.nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
       .withColumn("s",

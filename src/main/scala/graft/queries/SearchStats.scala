@@ -19,23 +19,19 @@ object SearchStats {
     * doc:positions posting wire format (shipped as md5 — the driver
     * comparator hashes scalar cells). Postings are ordered numerically
     * by doc_id via a struct sort (lexicographic string order would put
-    * doc 10 before doc 2); positions are 1-based to match the oracle's
-    * generate_series indexing. Scale: the same term-keyed build as
-    * q_inverted_index — one (term, doc) combine then one term-keyed
-    * aggregate; position lists ride inside the aggregation buffers.
+    * doc 10 before doc 2); positions are shifted to 1-based here to
+    * match the oracle's generate_series indexing. Scale: one term-keyed
+    * aggregate over the postings, which already carry each posting's
+    * sorted position list and are term-partitioned, so no Exchange.
     */
   def qIdxPositional(spark: SparkSession, sfDir: String): DataFrame = {
-    val p = Tables.t(spark, sfDir, "documents")
-      .withColumn("arr", split(col("text"), " "))
-      .select(col("doc_id"), posexplode(col("arr")).as(Seq("p0", "term")))
-      .select(col("term"), col("doc_id"),
-        (col("p0") + 1).cast("long").as("pos"))
-    p.groupBy("term", "doc_id")
-      .agg(concat_ws(",", sort_array(collect_list(col("pos")))).as("plist"),
-        count(lit(1)).as("n"))
+    Tables.postings(spark, sfDir)
+      .select(col("term"), col("doc_id"), col("tf"),
+        array_join(transform(col("pos"), p => (p + 1).cast("string")), ",")
+          .as("plist"))
       .withColumn("entry", concat(col("doc_id"), lit(":"), col("plist")))
       .groupBy("term")
-      .agg(count(lit(1)).as("df"), sum("n").as("cf"),
+      .agg(count(lit(1)).as("df"), sum("tf").as("cf"),
         md5(concat_ws(";", transform(
           sort_array(collect_list(struct(col("doc_id"), col("entry")))),
           x => x.getField("entry")))).as("postings_md5"))

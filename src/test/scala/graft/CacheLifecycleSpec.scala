@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.storage.StorageLevel
 
-import graft.queries.SearchIndex
+import graft.queries.SearchStats
 
 /** Memo-cache lifecycle (round 11, verdict item #7; sweep SCOPED in
   * round 12 per the round-11 advice): the engine's memoized relations
@@ -47,11 +47,11 @@ class CacheLifecycleSpec extends SparkSpecBase {
     // an invocation owner that is not the test thread's
     val worker = java.util.concurrent.Executors.newSingleThreadExecutor()
     val workerPins = try pinsOf(on(worker)(
-      SparkEntry.queries("q_search_wand")(spark, sfA).collect()))
+      SparkEntry.queries("q_collocation")(spark, sfA).collect()))
     finally worker.shutdown()
     // a direct call bypassing SparkEntry pins into the session owner
-    val wandPins = pinsOf(SearchIndex.qSearchWand(spark, sfA).collect())
-    assert(workerPins.nonEmpty && wandPins.nonEmpty,
+    val directPins = pinsOf(SearchStats.qCollocation(spark, sfA).collect())
+    assert(workerPins.nonEmpty && directPins.nonEmpty,
       "the second-thread and direct calls should have pinned checkpoints")
     // the postings memo and the corpus scalars, at both sfDirs
     val postA = Tables.postings(spark, sfA)

@@ -195,6 +195,36 @@ class ContractSpec extends SparkSpecBase {
       s"shared-conf toggles outside the one stream start helper: $sites")
   }
 
+  test("the corpus is tokenized with positions only in Tables (source-level)") {
+    // Tables.tokens and the positions in Tables.postings are the one
+    // positional tokenization; a query that posexplodes the split text
+    // itself re-reads the corpus and picks its own position base. The
+    // exploded array is either split(col("text")…) inline or a column
+    // bound to it earlier in the same chain (no `val`/`def` between).
+    val main = new java.io.File(
+      sys.props.getOrElse("user.dir", "."), "src/main/scala/graft")
+    assume(main.isDirectory,
+      s"source tree not visible from ${sys.props.get("user.dir")}; " +
+        "skipping source-level tokenization scan")
+    val splitText = """split\(col\("text"\)"""
+    val posRe = ("""posexplode\(\s*(?:""" + splitText +
+      """|col\("(\w+)"\)\s*\))""").r
+    val found = scalaFiles(main).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try src.mkString finally src.close()
+      posRe.findAllMatchIn(text).filter { m =>
+        Option(m.group(1)).forall { name =>
+          val chain = text.take(m.start).split("""\b(?:val|def) """).last
+          ("""withColumn\("""" + name + """",\s*""" + splitText).r
+            .findFirstIn(chain).isDefined
+        }
+      }.map(m => s"${main.toPath.relativize(f.toPath)}:" +
+        s"${text.take(m.start).count(_ == '\n') + 1}").toSeq
+    }
+    assert(found.forall(_.startsWith("Tables.scala:")),
+      s"posexplode of the split corpus text outside Tables: $found")
+  }
+
   test("session setup lives in graft.Session (source-level)") {
     // Session.local is the one benched session config; a hand-copied
     // builder drifts from it (core count, coalescing, extensions). Smoke

@@ -376,6 +376,10 @@ class PlanAuditSpec extends SparkSpecBase {
       s"posting build lost its map-side combine:\n$p")
     assert(!p.contains("Join"),
       s"positional index build regressed to a join:\n$p")
+    // the position lists come from the postings memo, not the corpus
+    val own = ownPlan("q_idx_positional")
+    assert(!own.contains("Scan parquet"),
+      s"q_idx_positional re-reads the corpus:\n$own")
   }
 
   test("q_collocation margins broadcast; no corpus-sized sort-merge") {
@@ -647,18 +651,22 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("the search family reads the postings memo: no parquet scan, no term re-shuffle") {
-    // postings carry tf/df/dl and the corpus scalars are literals, so
-    // these ops never reach the documents table or re-aggregate tokens
+    // postings carry tf/pos/df/dl and the corpus scalars are literals,
+    // so these ops never reach the documents table or re-aggregate tokens
     Seq("q_search_and", "q_search_or", "q_search_not", "q_search_prefix",
       "q_vsm_cosine", "q_search_pl2", "q_search_qld", "q_idx_stopword",
-      "q_bm25_prf", "q_search_wand").foreach { q =>
+      "q_bm25_prf", "q_search_wand", "q_search_phrase",
+      "q_search_proximity", "q_bm25f").foreach { q =>
       val p = ownPlan(q)
       assert(!p.contains("Scan parquet"), s"$q scans parquet:\n$p")
     }
-    // the champion window runs on the term-partitioned postings as laid out
-    val p = ownPlan("q_idx_champion")
-    assert(!p.contains("Exchange hashpartitioning(term"),
-      s"q_idx_champion re-shuffles the postings on term:\n$p")
+    // the champion window and the positional index's term aggregate run
+    // on the term-partitioned postings as laid out
+    Seq("q_idx_champion", "q_idx_positional").foreach { q =>
+      val p = ownPlan(q)
+      assert(!p.contains("Exchange hashpartitioning(term"),
+        s"$q re-shuffles the postings on term:\n$p")
+    }
   }
 
   test("q_sample_weighted is one TakeOrdered pass — no Exchange, no global Sort") {
@@ -1140,19 +1148,22 @@ class PlanAuditSpec extends SparkSpecBase {
   test("q_bm25f and q_search_pl2 push term predicates to the scan; stats broadcast") {
     // the corpus stats are literals and df/dl ride on the postings, so
     // there is no stat relation left to broadcast; what must hold is
-    // that the postings scan is term-pruned, that no stat subquery
-    // scans documents (q_bm25f keeps exactly its one positional scan),
+    // that the postings scan is term-pruned, that nothing scans
+    // documents (q_bm25f's field split reads the postings' positions),
     // and that no join shuffles or degenerates to a cartesian
-    Seq("q_bm25f" -> 1, "q_search_pl2" -> 0).foreach { case (q, scans) =>
+    Seq("q_bm25f", "q_search_pl2").foreach { q =>
       val p = ownPlan(q)
       assert(p.linesIterator.exists(l => l.contains("InMemoryTableScan")
           && l.contains("IN (spark,join)")),
         s"$q postings scan lost its term predicate:\n$p")
-      assert(p.linesIterator.count(_.contains("Scan parquet")) == scans,
-        s"$q scans documents beyond its positional split:\n$p")
+      assert(p.linesIterator.count(_.contains("Scan parquet")) == 0,
+        s"$q scans documents:\n$p")
       assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"),
         s"$q grew a cartesian or a shuffled join:\n$p")
     }
+    // BM25F's weighted tf, df and dl are all on the posting row
+    val p = ownPlan("q_bm25f")
+    assert(!p.contains("Join"), s"q_bm25f joins a second relation:\n$p")
   }
 
   test("q_eval_pr_curve windows only the distinct-score aggregate") {

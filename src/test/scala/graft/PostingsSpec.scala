@@ -2,23 +2,29 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The postings memo (term, doc_id, tf, df, dl) and the corpus scalars
-  * the search family reads instead of re-aggregating the token stream.
+/** The positional postings memo (term, doc_id, tf, pos, df, dl) and the
+  * corpus scalars the search family reads instead of re-aggregating or
+  * re-tokenizing the corpus.
   */
 class PostingsSpec extends SparkSpecBase {
 
   /** Asserts that the postings memo over `dir` equals a fresh
-    * token-stream derivation of tf, df and dl. */
+    * derivation of tf, the 0-based position lists, df and dl from the
+    * documents text. */
   private def assertFreshPostings(dir: String): Unit = {
     val toks = Tables.t(spark, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-    val tf = toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"))
-    val df = toks.distinct().groupBy("term").agg(count(lit(1)).as("df"))
+      .select(col("doc_id"),
+        posexplode(split(col("text"), " ")).as(Seq("pos", "term")))
+    val tf = toks.groupBy("term", "doc_id").agg(count(lit(1)).as("tf"),
+      sort_array(collect_list("pos")).as("pos"))
+    val df = toks.select("term", "doc_id").distinct()
+      .groupBy("term").agg(count(lit(1)).as("df"))
     val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
     val fresh = tf.join(df, "term").join(dl, "doc_id")
-      .select("term", "doc_id", "tf", "df", "dl")
+      .select("term", "doc_id", "tf", "pos", "df", "dl")
     val memo = Tables.postings(spark, dir)
-    assert(memo.columns.toSeq == Seq("term", "doc_id", "tf", "df", "dl"))
+    assert(memo.columns.toSeq ==
+      Seq("term", "doc_id", "tf", "pos", "df", "dl"))
     assert(memo.exceptAll(fresh).isEmpty, "postings rows missing from tokens")
     assert(fresh.exceptAll(memo).isEmpty, "token rows missing from postings")
   }
@@ -51,7 +57,10 @@ class PostingsSpec extends SparkSpecBase {
   }
 
   test("the search mix hashes to its golden values over a split documents") {
-    // the 31 ids of perfbench's `search` workload
+    // the 31 ids of perfbench's `search` workload, then the golden ids
+    // that read the token cache's positions or rows: directly, through
+    // PipelinePlus.sampleTerms, or through a memo built from it
+    // (q_agg_cms reads it too but is a unit row with no golden hash)
     val searchMix = Seq(
       "q_search_and", "q_search_or", "q_search_not", "q_search_phrase",
       "q_search_prefix", "q_search_proximity", "q_search_boolean",
@@ -63,10 +72,17 @@ class PostingsSpec extends SparkSpecBase {
       "q_index_merge", "q_search_snippet", "q_search_facets",
       "q_search_hybrid", "q_sim_cosine_topk")
     assert(searchMix.distinct.size == 31)
-    val bad = searchMix.filter(id =>
+    val tokenReaders = Seq(
+      "q_idx_positional", "q_span_mask", "q_keyphrase_rake",
+      "q_repetition_filter", "q_tok_vocab", "q_bpe_pairs",
+      "q_tok_oov", "q_feature_hash", "q_heavy_hitters", "q_dedup_minhash_w",
+      "q_surprisal", "q_quality_bucket", "q_dedup_near", "q_minhash_err",
+      "q_simjoin_prefix", "q_dedup_simhash", "q_dedup_minhash",
+      "q_dedup_cluster")
+    val bad = (searchMix ++ tokenReaders).filter(id =>
       Golden.hash(SparkEntry.queries(id)(spark, splitSf)) !=
         GoldenSpec.golden(id))
-    assert(bad.isEmpty, s"search ids drifted on the split copy: $bad")
+    assert(bad.isEmpty, s"ids drifted on the split copy: $bad")
   }
 
   test("corpus scalars equal the documents count and the dl mean and sum") {
