@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -15,8 +16,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *  - plan: one run so AQE finalizes, then the formatted physical plan;
   *    a query that throws prints `ERROR: …` and the run moves on.
   *  - time: 3 timed count() runs, one line per query.
-  *  - prof: a warm run, then a profiled one: total and task count, one
-  *    line per Spark job (ms, stages) and, for s_* ids, one per
+  *  - prof: a warm run, then a profiled one: total, task count and the
+  *    number of classes the warm run compiled (its codegen footprint),
+  *    one line per Spark job (ms, stages) and, for s_* ids, one per
   *    micro-batch (rows, durationMs), so loop and stream costs can be
   *    attributed instead of guessed.
   */
@@ -54,15 +56,18 @@ object Dev {
         val prof = new Profile
         spark.sparkContext.addSparkListener(prof.jobs)
         spark.streams.addListener(prof.batches)
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
         names.foreach { name =>
+          val c0 = compiles.getCount
           query(name).count()
+          val warmCompiles = compiles.getCount - c0
           // listener events arrive asynchronously: let the warm run's
           // drain before the reset and the profiled run's before the print
           Thread.sleep(500)
           prof.reset()
           val total = timed(name)
           Thread.sleep(500)
-          prof.print(name, total)
+          prof.print(name, total, warmCompiles)
         }
     }
     spark.stop()
@@ -111,8 +116,8 @@ object Dev {
       tasks.set(0)
     }
 
-    def print(name: String, total: Double): Unit = synchronized {
-      println(f"$name total=$total%.2f s tasks=${tasks.get()}")
+    def print(name: String, total: Double, compiles: Long): Unit = synchronized {
+      println(f"$name total=$total%.2f s tasks=${tasks.get()} compiles=$compiles")
       jobLines.foreach(l => println(s"  $l"))
       if (name.startsWith("s_")) batchLines.foreach(l => println(s"  $l"))
     }

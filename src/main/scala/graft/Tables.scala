@@ -12,8 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Design notes (scale): every reader returns a plain parquet-backed
   * DataFrame so Catalyst keeps pushdown/pruning. The search family reads
-  * two session-wide materializations instead: the tokenized `documents`
-  * projection and the [[postings]] index built from it (SURVEY.md §4.3).
+  * session-wide materializations instead: the positional token stream
+  * ([[tokens]]), the [[postings]] index built from it, the term
+  * dictionary ([[lexicon]]) built from that, and the corpus scalars
+  * ([[corpusStats]]) (SURVEY.md §4.3).
   */
 object Tables {
 
@@ -340,6 +342,23 @@ object Tables {
         .persist()
     }
   }
+
+  private val lexiconCache =
+    registerCache()
+
+  /** The term dictionary, built once per (session, sfDir) from the
+    * [[postings]]: one row per term with its document frequency `df`
+    * and its collection frequency `ctf` (the sum of its postings' tf).
+    * Vocabulary-level reads — fuzzy, prefix and spelling lookups, top-df
+    * picks, frequency ranks, a query term's ctf — scan these rows
+    * instead of re-aggregating the postings per call. The postings are
+    * range-partitioned on `term`, so the build needs no Exchange. */
+  def lexicon(spark: SparkSession, sfDir: String): DataFrame =
+    memo(lexiconCache, spark, sfDir) {
+      postings(spark, sfDir).groupBy("term", "df")
+        .agg(sum("tf").as("ctf"))
+        .persist()
+    }
 
   /** Distinct (doc_id, term) pairs — the postings without their stats. */
   def docTerms(spark: SparkSession, sfDir: String): DataFrame =

@@ -1,18 +1,18 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
 /** Search-engine core — the reference's actual domain (SURVEY.md §2.9):
   * tokenize → tf/df → inverted index → tf-idf → ranked keyword queries.
   *
-  * Scale notes: the postings index (term, doc_id, tf, df, dl) is built
-  * once per sfDir (Tables.postings) with the corpus scalars beside it
-  * (Tables.corpusStats); search queries reduce to term-filtered scans +
-  * aggregates over postings — the Spark-native analog of the reference's
-  * posting-list intersection.
+  * Scale notes: the positional postings index (term, doc_id, tf, pos,
+  * df, dl) is built once per sfDir (Tables.postings), with the term
+  * dictionary (term, df, ctf) and the corpus scalars beside it
+  * (Tables.lexicon, Tables.corpusStats); search queries reduce to
+  * term-filtered scans + aggregates over postings — the Spark-native
+  * analog of the reference's posting-list intersection.
   */
 object Search {
 
@@ -41,9 +41,8 @@ object Search {
        |           FROM tf JOIN df USING (term) CROSS JOIN n)""".stripMargin
 
   def qTokenize(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.postings(spark, sfDir)
-      .groupBy("term")
-      .agg(sum("tf").as("n"))
+    Tables.lexicon(spark, sfDir)
+      .select(col("term"), col("ctf").as("n"))
       .orderBy("term")
 
   val qTokenizeSql: String =
@@ -59,7 +58,7 @@ object Search {
        |GROUP BY doc_id, term ORDER BY doc_id, term""".stripMargin
 
   def qDocFreq(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.postings(spark, sfDir).select("term", "df").distinct()
+    Tables.lexicon(spark, sfDir).select("term", "df")
       .withColumn("n_docs", lit(Tables.corpusStats(spark, sfDir).nDocs))
       .orderBy("term")
 
@@ -458,21 +457,24 @@ object Search {
     * query — the language-modeling alternative to [[qSearchBm25]]'s
     * probabilistic ranking: score(d) = Σ_t ln((tf + µ·ctf_t/|C|)/(dl +
     * µ)). The two per-term components are summed in FIXED left-to-right
-    * order (IEEE-identical in both engines); ctf (corpus term counts)
-    * is a term-keyed window sum over the two query terms' postings, and
-    * |C| is the memoized token total, inlined as a literal. Scale: two
-    * term-filtered posting scans joined on doc_id, the [[bm25Scored]]
-    * shape.
+    * order (IEEE-identical in both engines). ctf (corpus term counts)
+    * comes from the term dictionary and |C| is the memoized token total,
+    * both inlined as literals. Scale: one doc-keyed conditional
+    * aggregate over the two terms' postings — no window, no self-join;
+    * a doc matches when both per-term tf slots are filled.
     */
   def qSearchQld(spark: SparkSession, sfDir: String): DataFrame = {
-    val post = Tables.postings(spark, sfDir)
-      .withColumn("ctf", sum("tf").over(Window.partitionBy("term")))
-    val a = post.filter(col("term") === "spark")
-      .select(col("doc_id"), col("dl"), col("tf").as("tf_s"),
-        col("ctf").as("ctf_s"))
-    val b = post.filter(col("term") === "join")
-      .select(col("doc_id"), col("tf").as("tf_j"), col("ctf").as("ctf_j"))
-    a.join(b, "doc_id")
+    val ctf = Tables.lexicon(spark, sfDir)
+      .filter(col("term").isin("spark", "join")).select("term", "ctf")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def tfOf(t: String) = max(when(col("term") === t, col("tf")))
+    Tables.postings(spark, sfDir)
+      .filter(col("term").isin("spark", "join"))
+      .groupBy("doc_id", "dl")
+      .agg(tfOf("spark").as("tf_s"), tfOf("join").as("tf_j"))
+      .filter(col("tf_s").isNotNull && col("tf_j").isNotNull)
+      .withColumn("ctf_s", lit(ctf.getOrElse("spark", 0L)))
+      .withColumn("ctf_j", lit(ctf.getOrElse("join", 0L)))
       .withColumn("nc", lit(Tables.corpusStats(spark, sfDir).nTokens))
       .select(col("doc_id"),
         // µ spelled CAST(... AS DOUBLE) on BOTH sides: a bare 2000.0 is

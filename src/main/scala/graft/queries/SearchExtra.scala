@@ -11,10 +11,9 @@ import graft.Tables
   * Scale notes: regex retrieval is one narrow codegen'd scan (the regex
   * runs inside WholeStageCodegen; only `doc_id` and the match count
   * survive the projection). Segment merge is the compaction primitive of
-  * every log-structured index: each segment's postings are built with a
-  * map-side-combinable aggregate, and the merge itself is a term-keyed
-  * equi-join of two ALREADY-AGGREGATED (vocabulary-sized) relations —
-  * at 100 TB the join input is the vocabulary, never the corpus.
+  * every log-structured index: both segments' posting lists and their
+  * merge come out of ONE term-keyed aggregate over the term-partitioned
+  * postings — no join, and no shuffle before the final sort.
   */
 object SearchExtra {
 
@@ -40,35 +39,27 @@ object SearchExtra {
        |WHERE len(regexp_extract_all(text, '$Pattern')) > 0
        |ORDER BY n_hits DESC, doc_id LIMIT 50""".stripMargin
 
-  /** One segment's posting lists: docs with `doc_id % 2 == parity`,
-    * aggregated to (term, sorted id array). Partial-aggregable — each
-    * executor pre-collects its local postings before the term shuffle. */
-  private def segment(spark: SparkSession, sfDir: String,
-      parity: Int): DataFrame =
-    Tables.docTerms(spark, sfDir)
-      .filter(col("doc_id") % 2 === parity)
-      .groupBy("term")
-      .agg(sort_array(collect_set(col("doc_id"))).as("ids"))
-
-  /** LSM-style segment merge: two independently-built index segments
-    * (even/odd docs — stand-ins for "yesterday's index" and "today's
-    * delta") full-outer-merged on term into one compacted index. A term
-    * missing from one segment keeps the other's postings verbatim.
-    * Output is the merged df and the posting list serialized to the
-    * string wire format (arrays are driver-unhashable).
+  /** LSM-style segment merge: two index segments (even/odd docs —
+    * stand-ins for "yesterday's index" and "today's delta") compacted
+    * into one merged index. Each segment's posting list is a
+    * parity-conditional collect in the same term-keyed aggregate (a
+    * term missing from one segment gets an empty list there), and the
+    * merge sorts their concatenation. Output is the merged df, each
+    * segment's df and the posting list serialized to the string wire
+    * format (the result hash reads scalar cells only).
     */
   def qIndexMerge(spark: SparkSession, sfDir: String): DataFrame = {
-    val empty = array().cast("array<bigint>")
-    val a = segment(spark, sfDir, 0).withColumnRenamed("ids", "ids_a")
-    val b = segment(spark, sfDir, 1).withColumnRenamed("ids", "ids_b")
-    a.join(b, Seq("term"), "full_outer")
+    def seg(parity: Int) =
+      collect_list(when(col("doc_id") % 2 === parity, col("doc_id")))
+    Tables.docTerms(spark, sfDir)
+      .groupBy("term")
+      .agg(seg(0).as("ids_a"), seg(1).as("ids_b"))
       .withColumn("merged",
-        sort_array(concat(coalesce(col("ids_a"), empty),
-          coalesce(col("ids_b"), empty))))
+        sort_array(concat(col("ids_a"), col("ids_b"))))
       .select(col("term"),
         size(col("merged")).cast("long").as("df"),
-        size(coalesce(col("ids_a"), empty)).cast("long").as("df_a"),
-        size(coalesce(col("ids_b"), empty)).cast("long").as("df_b"),
+        size(col("ids_a")).cast("long").as("df_a"),
+        size(col("ids_b")).cast("long").as("df_b"),
         array_join(transform(col("merged"), _.cast("string")), ",")
           .as("postings"))
       .orderBy("term")

@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -10,14 +9,15 @@ import graft.Tables
   * and fuzzy (edit-distance) term matching — the parts of a search
   * engine that live BELOW the query API.
   *
-  * Scale notes: WAND's pruning statistics (per-term score upper bounds,
-  * the top-k threshold) are vocabulary-bounded one-row/term aggregates —
-  * broadcast-sized at any corpus scale; candidate generation semi-joins
-  * the fact-sized postings against the ESSENTIAL terms only, which is
+  * Scale notes: WAND's pruning statistics (per-term score upper bounds
+  * and k-th best scores) are one aggregate row per query term, collected
+  * to pick the threshold and the ESSENTIAL terms as literals; the
+  * ranking is then one doc-keyed aggregate over the query terms'
+  * postings that keeps only docs holding an essential term, which is
   * the whole point of MaxScore. Posting compression is one term-keyed
   * aggregate (no window — gaps come from the sorted collected list, so
-  * there is a single shuffle). Fuzzy matching scans the vocabulary (a
-  * groupBy output, bounded), never the corpus.
+  * there is a single shuffle). Fuzzy matching scans the term dictionary
+  * (Tables.lexicon, one row per term), never the corpus.
   */
 object SearchIndex {
 
@@ -27,57 +27,55 @@ object SearchIndex {
   /** MaxScore/WAND-style disjunctive top-k: BM25 OR-query over three
     * terms, answered through the pruned path —
     *
-    *   1. ub_t  = max_d s(t,d)          (term score upper bounds)
-    *   2. theta = k-th best SINGLE-term score on the highest-ub term's
-    *      postings — a valid lower bound of the k-th best true score
-    *      (any doc's true score >= any one of its term scores)
-    *   3. non-essential terms = the maximal ascending-ub prefix with
-    *      cumulative ub sum < theta; docs appearing ONLY in
-    *      non-essential postings can never reach theta and are skipped
-    *   4. exact re-scoring of the surviving candidates over ALL terms.
+    *   1. one aggregate row per query term: ub_t = max_d s(t,d) (the
+    *      term's score upper bound) and its k-th best score
+    *   2. those ≤ |query| rows are collected, and [[wandSelect]] picks
+    *      theta and the essential terms from them
+    *   3. one doc-keyed aggregate sums every query term's score per doc
+    *      and keeps the docs that hold an essential term; docs appearing
+    *      ONLY in non-essential postings can never reach theta.
     *
     * The pruning is exact, so the result equals the plain disjunctive
-    * top-k the oracle computes. theta falls back to -inf when the best
-    * term has fewer than k postings (pruning with an unfounded threshold
-    * would be unsound).
+    * top-k the oracle computes.
     */
   def qSearchWand(spark: SparkSession, sfDir: String): DataFrame = {
-    // The scored postings feed FIVE plan positions (ub, theta,
-    // candidate semi-join, and both sides of the re-scoring join). Each
-    // is a term-pruned scan of the in-memory postings plus one narrow
-    // projection, with df/dl on the row and the corpus scalars as
-    // literals, so re-reading it per position is cheaper than pinning
-    // a per-invocation checkpoint (11 → 5 jobs per op at sf0.1).
     val scored = Search.bm25Scored(spark, sfDir, WandTerms)
-    val ub = scored.groupBy("term").agg(max("s").as("ub"))
-    // k-th best single-term score on the top-ub term (3-row window input)
-    val tstar = ub
-      .withColumn("rk", row_number().over(
-        Window.orderBy(desc("ub"), asc("term"))))
-      .filter(col("rk") === 1).select("term")
-    val theta = scored.join(broadcast(tstar), "term")
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("term").orderBy(desc("s"), asc("doc_id"))))
-      .filter(col("rk") <= WandK)
-      .agg(count(lit(1)).as("c"), min("s").as("kth"))
-      .select(when(col("c") >= WandK, col("kth"))
-        .otherwise(lit(Double.MinValue)).as("theta"))
-    // ascending-ub running sum over the 3-row ub table → essential set
-    val essential = ub
-      .crossJoin(broadcast(theta))
-      .withColumn("cum", sum("ub").over(
-        Window.orderBy(asc("ub"), asc("term"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .filter(col("cum") >= col("theta"))
-      .select("term")
-    val candidates = scored
-      .join(broadcast(essential), "term")
-      .select("doc_id").distinct()
-    scored.join(candidates, "doc_id")
-      .groupBy("doc_id")
-      .agg(round(sum("s"), 4).as("score"), count(lit(1)).as("nt"))
+    val bounds = scored.groupBy("term")
+      .agg(max("s").as("ub"),
+        try_element_at(sort_array(collect_list("s"), asc = false),
+          lit(WandK)).as("kth"))
+      .collect().toSeq.map(r => (r.getString(0), r.getDouble(1),
+        Option(r.get(2)).map(_.asInstanceOf[Double])))
+    val essential = wandSelect(bounds)._2
+    scored.groupBy("doc_id")
+      .agg(round(sum("s"), 4).as("score"), count(lit(1)).as("nt"),
+        max(col("term").isin(essential: _*)).as("ess"))
+      .filter(col("ess"))
+      .select("doc_id", "score", "nt")
       .orderBy(desc("score"), asc("doc_id"))
       .limit(WandK)
+  }
+
+  /** WAND's threshold and essential terms from each query term's
+    * (term, ub, k-th best score — None below k postings):
+    *   - theta = the k-th best SINGLE-term score on the highest-ub term
+    *     (ties to the smaller term) — a valid lower bound of the k-th
+    *     best true score, since a doc's true score is at least any one
+    *     of its term scores. It is -inf when that term has fewer than k
+    *     postings: pruning with an unfounded threshold would be unsound.
+    *   - the non-essential terms are the maximal prefix, in ascending
+    *     (ub, term) order, whose running ub sum stays below theta; the
+    *     rest are essential, in that order.
+    * No bounds (no query term in the corpus) gives no essential term. */
+  private[graft] def wandSelect(
+      bounds: Seq[(String, Double, Option[Double])]): (Double, Seq[String]) = {
+    val top = bounds.sortWith { case ((t1, u1, _), (t2, u2, _)) =>
+      u1 > u2 || (u1 == u2 && t1 < t2) }.headOption
+    val theta = top.flatMap(_._3).getOrElse(Double.NegativeInfinity)
+    val asc = bounds.sortWith { case ((t1, u1, _), (t2, u2, _)) =>
+      u1 < u2 || (u1 == u2 && t1 < t2) }
+    val cum = asc.scanLeft(0.0)(_ + _._2).tail
+    (theta, asc.zip(cum).collect { case ((t, _, _), c) if c >= theta => t })
   }
 
   /** Oracle: the UNPRUNED disjunctive top-k — pruning exactness is the
@@ -150,12 +148,12 @@ object SearchIndex {
   /** Fuzzy term lookup: vocabulary terms within Levenshtein distance 1
     * of the (misspelled) query term, with their document frequency —
     * the spell-correction half of a "did you mean" pipeline. The scan
-    * is over the VOCABULARY (a bounded groupBy output), not the corpus;
-    * at web scale the standard upgrade is a deletion-neighborhood index
-    * over the same vocab table, which is one more groupBy.
+    * is over the VOCABULARY (the memoized term dictionary), not the
+    * corpus; at web scale the standard upgrade is a deletion-neighborhood
+    * index over the same vocab table, which is one more groupBy.
     */
   def qSearchFuzzy(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.postings(spark, sfDir).select("term", "df").distinct()
+    Tables.lexicon(spark, sfDir).select("term", "df")
       .withColumn("dist", levenshtein(col("term"), lit(FuzzyQ)))
       .filter(col("dist") <= 1)
       .select(col("term"), col("dist").cast("long").as("dist"), col("df"))
@@ -189,8 +187,7 @@ object SearchIndex {
     val merged = BpeMerges.foldLeft(chars) { case (c, (a, b)) =>
       regexp_replace(c, s"$a  $b", s"$a$b")
     }
-    Tables.postings(spark, sfDir)
-      .select("term").distinct()
+    Tables.lexicon(spark, sfDir).select("term")
       .withColumn("pieces",
         regexp_replace(merged, "  ", " "))
       .withColumn("n_pieces",
@@ -221,11 +218,10 @@ object SearchIndex {
     * convention — the driver comparator hashes scalar cells). 1-char
     * terms have no 2-gram and drop from both engines identically.
     * Scale: built entirely on the DISTINCT vocabulary (≪ corpus —
-    * the q_tok_vocab argument), read off the term-clustered postings.
+    * the q_tok_vocab argument), read off the term dictionary.
     */
   def qKgramIndex(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.postings(spark, sfDir)
-      .select("term").distinct()
+    Tables.lexicon(spark, sfDir).select("term")
       .filter(length(col("term")) >= 2) // Spark sequence(1,0) DESCENDS
       .select(col("term"), explode(expr(
         "transform(sequence(1, length(term) - 1)," +
@@ -260,11 +256,10 @@ object SearchIndex {
     * levenshtein ≤ 2 verifies, and candidates rank by (distance,
     * corpus frequency desc, term). Both engines implement levenshtein
     * identically (unit-cost DP). Everything is vocabulary-bounded; term
-    * frequencies are the per-term sum of the postings' tf.
+    * frequencies are the term dictionary's ctf.
     */
   def qSpellCorrect(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.postings(spark, sfDir)
-      .groupBy("term").agg(sum("tf").as("ctf"))
+    Tables.lexicon(spark, sfDir).select("term", "ctf")
       .filter(length(col("term")) >= 2)
       .withColumn("grams", expr(
         "transform(sequence(1, length(term) - 1)," +
@@ -322,7 +317,7 @@ object SearchIndex {
     * index must prove.
     */
   def qFuzzyDeletion(spark: SparkSession, sfDir: String): DataFrame = {
-    val vocab = Tables.postings(spark, sfDir).select("term", "df").distinct()
+    val vocab = Tables.lexicon(spark, sfDir).select("term", "df")
     // (delkey, term, df) index rows: the term itself + one row per
     // single-character deletion, built in-row (no join, no UDF)
     val dels = array_distinct(concat(

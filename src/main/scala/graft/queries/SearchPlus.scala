@@ -62,13 +62,11 @@ object SearchPlus {
     * signal. log2 of a ratio of exact integer counts; round(4) absorbs
     * libm last-ulp differences (q_fn_trig precedent). */
   def qCooccurPmi(spark: SparkSession, sfDir: String): DataFrame = {
-    // every input comes from the postings memo: both self-join sides
-    // read its (doc_id, term) pairs, df is its per-term column and
-    // n_docs a literal, so the three consumers share one persisted
-    // relation and nothing is distinct-ed or checkpointed per invocation
-    val post = Tables.postings(spark, sfDir)
-    val dt = post.select("doc_id", "term")
-    val df_ = post.select("term", "df").distinct()
+    // both self-join sides read the postings' (doc_id, term) pairs, df
+    // comes from the term dictionary and n_docs is a literal, so nothing
+    // is distinct-ed or checkpointed per invocation
+    val dt = Tables.docTerms(spark, sfDir)
+    val df_ = Tables.lexicon(spark, sfDir).select("term", "df")
     val pairs = dt.toDF("doc_id", "ta")
       .join(dt.toDF("doc_id", "tb"), Seq("doc_id"))
       .filter(col("ta") < col("tb"))
@@ -201,16 +199,17 @@ object SearchPlus {
       .limit(10)
   }
 
-  /** q_vsm_cosine's scoring (dp over the two query terms / doc norm,
-    * round(4)) WITHOUT the top-10 cut — the fusion list ranks deeper.
-    * Memoized + eagerly checkpointed like Search.lexScores: the norm
-    * denominator is a FULL-corpus tfidf pass, and three consumers (RRF,
-    * interleave, RBO) each re-derived it per execution. Output is
-    * |docs matching either term|-sized — posting-bounded. */
+  /** VSM cosine per doc (dp over the two query terms / doc norm,
+    * round(4)) — q_vsm_cosine is its top-10 cut, and the fusion lists
+    * rank deeper. Memoized + eagerly checkpointed like Search.lexScores:
+    * the norm denominator is a FULL-corpus tfidf pass, and four
+    * consumers (q_vsm_cosine, RRF, interleave, RBO) each re-derived it
+    * per execution. Output is |docs matching either term|-sized —
+    * posting-bounded. */
   private val vsmCache =
     graft.Tables.registerCache()
 
-  private def vsmScoredM(spark: SparkSession, sfDir: String): DataFrame =
+  private[queries] def vsmScoredM(spark: SparkSession, sfDir: String): DataFrame =
     graft.Tables.memo(vsmCache, spark, sfDir) {
       Tables.localCheckpoint(vsmScored(spark, sfDir))
     }

@@ -28,15 +28,14 @@ object SearchRank {
     * √df spacing that balances skip hops against linear scans). The
     * positions window partitions on the TERM — one posting list per
     * partition, the standard index-build partition — and the top-10 cut
-    * is a distributed TakeOrdered over the vocab-bounded df relation.
+    * is a TakeOrdered over the term dictionary.
     * ceil(sqrt(int)) is correctly-rounded IEEE on both engines.
     */
   def qIdxSkiplist(spark: SparkSession, sfDir: String): DataFrame = {
-    val post = Tables.postings(spark, sfDir)
-    val top = post.select("term", "df").distinct()
+    val top = Tables.lexicon(spark, sfDir)
       .orderBy(desc("df"), asc("term")).limit(10)
     val wT = Window.partitionBy("term").orderBy("doc_id")
-    post.join(broadcast(top.select("term")), "term")
+    Tables.postings(spark, sfDir).join(broadcast(top.select("term")), "term")
       .withColumn("pos", row_number().over(wT))
       .withColumn("skip_len",
         ceil(sqrt(col("df").cast("double"))).cast("long"))
@@ -75,10 +74,10 @@ object SearchRank {
     * are ≤8 rows; everything else is posting-bounded aggregation.
     */
   def qIdxImpact(spark: SparkSession, sfDir: String): DataFrame = {
-    val tf = Tables.postings(spark, sfDir)
-    val top = tf.select("term", "df").distinct()
+    val top = Tables.lexicon(spark, sfDir)
       .orderBy(desc("df"), asc("term")).limit(5)
-    val tiers = tf.join(broadcast(top.select("term")), "term")
+    val tiers = Tables.postings(spark, sfDir)
+      .join(broadcast(top.select("term")), "term")
       .withColumn("impact", least(col("tf"), lit(8L)))
       .groupBy("term", "impact")
       .agg(count(lit(1)).as("n_docs"),

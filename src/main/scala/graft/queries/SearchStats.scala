@@ -133,13 +133,12 @@ object SearchStats {
     * slope ≈ −1 is the natural-language signature; the synthetic
     * corpus's flat vocabulary shows up as a slope near 0, which is
     * exactly what the diagnostic is for. The global rank window runs
-    * over the AGGREGATED vocabulary (≪ corpus — q_tok_vocab precedent),
-    * never the token stream; the regression aggregates are single-pass
-    * mergeable co-moments (q_corr_stats precedent), round(4).
+    * over the term dictionary (one row per term, ≪ corpus — q_tok_vocab
+    * precedent), never the token stream; the regression aggregates are
+    * single-pass mergeable co-moments (q_corr_stats precedent), round(4).
     */
   def qZipfFit(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.postings(spark, sfDir)
-      .groupBy("term").agg(sum("tf").as("c"))
+    Tables.lexicon(spark, sfDir).select(col("term"), col("ctf").as("c"))
       .withColumn("rank",
         row_number().over(Window.orderBy(desc("c"), asc("term"))))
       .agg(count(lit(1)).as("n_terms"),
@@ -194,15 +193,14 @@ object SearchStats {
 
   /** Typeahead: top-3 completions per 2-char prefix, ranked by corpus
     * frequency (tf desc, term asc). The rank window partitions the
-    * AGGREGATED vocabulary by prefix — bounded keys, tiny partitions —
-    * which is exactly the precomputed completion table a search box
-    * serves from.
+    * term dictionary by prefix — bounded keys, tiny partitions — which
+    * is exactly the precomputed completion table a search box serves
+    * from.
     */
   def qAutocomplete(spark: SparkSession, sfDir: String): DataFrame = {
     val byPrefix = Window.partitionBy("prefix")
       .orderBy(desc("tf"), asc("term"))
-    Tables.postings(spark, sfDir)
-      .groupBy("term").agg(sum("tf").as("tf"))
+    Tables.lexicon(spark, sfDir).select(col("term"), col("ctf").as("tf"))
       .filter(length(col("term")) >= 2)
       .withColumn("prefix", substring(col("term"), 1, 2))
       .withColumn("rank", row_number().over(byPrefix))
@@ -229,23 +227,14 @@ object SearchStats {
   /** Vector-space-model retrieval: cosine between the {spark, join}
     * unit-weight query vector and each doc's tf-idf vector, top-10.
     * Unlike q_search_and's score SUM, VSM length-normalizes by the doc
-    * norm — verbose docs stop winning by volume. The norm table is one
-    * doc-keyed aggregate; the dot product touches only the two query
-    * terms' postings.
+    * norm — verbose docs stop winning by volume. The per-doc cosines are
+    * the memoized [[SearchPlus.vsmScoredM]] list that the fusion and
+    * evaluation ops rank from, so this op is its top-10 cut.
     */
-  def qVsmCosine(spark: SparkSession, sfDir: String): DataFrame = {
-    val w = Search.tfidfRaw(spark, sfDir).select("doc_id", "term", "score")
-    val nrm = w.groupBy("doc_id")
-      .agg(sqrt(sum(col("score") * col("score"))).as("nrm"))
-    val qnrm = math.sqrt(2.0) // two unit-weight query terms
-    w.filter(col("term").isin("spark", "join"))
-      .groupBy("doc_id").agg(sum(col("score")).as("dp"))
-      .join(nrm, "doc_id")
-      .select(col("doc_id"),
-        round(col("dp") / (col("nrm") * qnrm), 4).as("cos"))
+  def qVsmCosine(spark: SparkSession, sfDir: String): DataFrame =
+    SearchPlus.vsmScoredM(spark, sfDir)
       .orderBy(desc("cos"), asc("doc_id"))
       .limit(10)
-  }
 
   val qVsmCosineSql: String =
     """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
@@ -285,7 +274,7 @@ object SearchStats {
     * identical output/oracle/golden; the corpus-sized window is gone.
     */
   def qIdxPrefix(spark: SparkSession, sfDir: String): DataFrame = {
-    val v = Tables.postings(spark, sfDir).select("term").distinct()
+    val v = Tables.lexicon(spark, sfDir).select("term")
       .withColumn("b", substring(col("term"), 1, 1))
     // per-bucket boundary: the max term of the PREVIOUS non-empty bucket
     // (bounded ≤|alphabet| rows, so its own window is trivially small)
@@ -366,11 +355,11 @@ object SearchStats {
     * with df ≥ 70% of the corpus are dropped — the sizing decision an
     * index builder makes before materializing posting lists. Exact
     * integer arithmetic throughout (df·100 ≥ n_docs·70 avoids any
-    * float ratio); one vocab-bounded aggregate over the per-term df of
-    * the postings, with the corpus size inlined as a literal.
+    * float ratio); one vocab-bounded aggregate over the term
+    * dictionary's df, with the corpus size inlined as a literal.
     */
   def qIdxStopword(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.postings(spark, sfDir).select("term", "df").distinct()
+    Tables.lexicon(spark, sfDir).select("term", "df")
       .withColumn("n_docs", lit(Tables.corpusStats(spark, sfDir).nDocs))
       .agg(count(lit(1)).as("n_terms"),
         sum(when(col("df") * 100 >= col("n_docs") * 70, 1L).otherwise(0L))

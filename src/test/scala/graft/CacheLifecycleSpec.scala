@@ -13,7 +13,8 @@ import graft.queries.SearchStats
   * loop-internal localCheckpoint RDDs that DataFrame.unpersist cannot
   * reach — whichever owner holds them: the session owner (memo builds,
   * direct calls that bypass SparkEntry) or an invocation owner on any
-  * thread — plus the postings memo and the corpus-scalar aux cache,
+  * thread — plus the postings memo, the term dictionary built on it and
+  * the corpus-scalar aux cache,
   * and must NOT touch anything the HOST application pinned
   * itself (a blanket sweep would permanently break a host-owned
   * localCheckpointed RDD: its blocks cannot be recomputed).
@@ -53,13 +54,18 @@ class CacheLifecycleSpec extends SparkSpecBase {
     val directPins = pinsOf(SearchStats.qCollocation(spark, sfA).collect())
     assert(workerPins.nonEmpty && directPins.nonEmpty,
       "the second-thread and direct calls should have pinned checkpoints")
-    // the postings memo and the corpus scalars, at both sfDirs
+    // the postings memo, the term dictionary and the corpus scalars, at
+    // both sfDirs
     val postA = Tables.postings(spark, sfA)
     val postRows = postA.orderBy("term", "doc_id").collect()
     Tables.postings(spark, sfB).count()
+    val lexA = Tables.lexicon(spark, sfA)
+    val lexRows = lexA.orderBy("term").collect()
+    Tables.lexicon(spark, sfB).count()
     val statsA = Tables.corpusStats(spark, sfA)
     Tables.corpusStats(spark, sfB)
     assert(postA.storageLevel != StorageLevel.NONE)
+    assert(lexA.storageLevel != StorageLevel.NONE)
     val enginePinned = sc.getPersistentRDDs.keySet.diff(preEngine)
     assert(enginePinned.nonEmpty, "the sweep should have pinned relations")
     Tables.clearCaches(spark)
@@ -76,13 +82,20 @@ class CacheLifecycleSpec extends SparkSpecBase {
     assert(hostRdd.getStorageLevel != StorageLevel.NONE)
     assert(hostCkpt.count() == 50,
       "host localCheckpoint blocks were destroyed by the engine sweep")
-    // the postings buffers are released, and both memos rebuild equal
+    // the postings and term dictionary buffers are released, and every
+    // memo rebuilds equal
     assert(postA.storageLevel == StorageLevel.NONE,
       "clearCaches left the postings memo cached")
     val postA2 = Tables.postings(spark, sfA)
     assert(!(postA2 eq postA))
     assert(postA2.orderBy("term", "doc_id").collect().toSeq == postRows.toSeq,
       "post-clear postings rebuild diverged")
+    assert(lexA.storageLevel == StorageLevel.NONE,
+      "clearCaches left the term dictionary cached")
+    val lexA2 = Tables.lexicon(spark, sfA)
+    assert(!(lexA2 eq lexA))
+    assert(lexA2.orderBy("term").collect().toSeq == lexRows.toSeq,
+      "post-clear term dictionary rebuild diverged")
     val statsA2 = Tables.corpusStats(spark, sfA)
     assert(!(statsA2 eq statsA) && statsA2 == statsA,
       "corpus scalars were not re-derived equal after clearCaches")

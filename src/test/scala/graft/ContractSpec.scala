@@ -225,6 +225,35 @@ class ContractSpec extends SparkSpecBase {
       s"posexplode of the split corpus text outside Tables: $found")
   }
 
+  test("vocabulary reads come from the term dictionary (source-level)") {
+    // Tables.lexicon memoizes (term, df, ctf) once per sfDir; a query
+    // that re-derives it runs a near-full postings aggregate per call.
+    // A chain starts at the postings when its statement (back to the
+    // previous `val`/`def`) calls Tables.postings / Tables.docTerms or
+    // calls a method on a val bound to one of them in the same file.
+    val queries = new java.io.File(
+      sys.props.getOrElse("user.dir", "."), "src/main/scala/graft/queries")
+    assume(queries.isDirectory,
+      s"source tree not visible from ${sys.props.get("user.dir")}; " +
+        "skipping source-level vocabulary scan")
+    val memoCall = """Tables\.(?:postings|docTerms)\("""
+    val vocabRe = ("""select\("term"[^)]*\)\s*\.distinct\(\)""" +
+      """|groupBy\("term"[^)]*\)\s*\.agg\(sum\("tf"\)""").r
+    val found = scalaFiles(queries).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val text = try src.mkString finally src.close()
+      val bound = ("""val (\w+) = """ + memoCall).r
+        .findAllMatchIn(text).map(_.group(1)).toSeq
+      vocabRe.findAllMatchIn(text).filter { m =>
+        val chain = text.take(m.start).split("""\b(?:val|def) """).last
+        (memoCall +: bound.map(b => s"\\b$b\\s*\\.")).exists(
+          _.r.findFirstIn(chain).isDefined)
+      }.map(m => s"${f.getName}:${text.take(m.start).count(_ == '\n') + 1}")
+    }
+    assert(found.isEmpty,
+      s"vocabulary re-derived from the postings outside Tables.lexicon: $found")
+  }
+
   test("session setup lives in graft.Session (source-level)") {
     // Session.local is the one benched session config; a hand-copied
     // builder drifts from it (core count, coalescing, extensions). Smoke

@@ -15,18 +15,23 @@ class PlanAuditSpec extends SparkSpecBase {
   /** [[plan]] without the plans that populated the cached relations it
     * reads: an InMemoryRelation prints its build plan under the scan,
     * but that plan ran once per session and is not this query's work.
-    * A line belongs to the build when it is indented deeper than the
-    * InMemoryRelation line above it (tree bars `:` and `|` aside). */
+    * One line per operator of the query's own tree, walked through the
+    * adaptive wrapper and its query stages; an in-memory scan is a leaf
+    * (its relation is an inner child, not a child); subquery plans are
+    * the query's own and are kept. A printed-text cut does not work: a
+    * memo built on another memo prints an adaptive build plan whose
+    * lines are not indented under its InMemoryRelation line. */
   private def ownPlan(name: String): String = {
-    var cut = -1
-    plan(name).linesIterator.filter { l =>
-      val indent = l.indexWhere(c => c != ' ' && c != ':' && c != '|')
-      if (cut >= 0 && indent > cut) false
-      else {
-        cut = if (l.contains("InMemoryRelation")) indent else -1
-        true
-      }
-    }.mkString("\n")
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def lines(p: SparkPlan, depth: Int): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => lines(a.executedPlan, depth)
+      case q: QueryStageExec => lines(q.plan, depth)
+      case _ => ("  " * depth + p.simpleString(Int.MaxValue)) +:
+        (p.children ++ p.subqueries).flatMap(lines(_, depth + 1))
+    }
+    lines(SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan, 0)
+      .mkString("\n")
   }
 
   test("q_scan_filter pushes the shipdate predicate to the parquet scan") {
@@ -318,13 +323,15 @@ class PlanAuditSpec extends SparkSpecBase {
       s"bitmap distinct regressed to window/expand:\n$p")
   }
 
-  test("q_index_merge merges segments with an equi-join, never a loop") {
-    val p = plan("q_index_merge")
-    assert(!p.contains("BroadcastNestedLoopJoin")
-      && !p.contains("CartesianProduct"),
-      s"segment merge degraded to a non-equi join:\n$p")
-    assert(p.contains("partial_collect_set"),
-      s"segment postings are not map-side combined:\n$p")
+  test("q_index_merge merges both segments in one term-keyed aggregate, no join") {
+    // each segment's list is a parity-conditional collect in the same
+    // aggregate, over postings already partitioned on term
+    val p = ownPlan("q_index_merge")
+    assert(p.contains("HashAggregate(keys=[term"),
+      s"segment merge lost its term-keyed aggregate:\n$p")
+    assert(!p.contains("Join"), s"segment merge regressed to a join:\n$p")
+    assert(!p.contains("Exchange hashpartitioning(term"),
+      s"segment merge re-shuffles the postings on term:\n$p")
   }
 
   test("q_search_boolean is one aggregate pass — no per-clause join chain") {
@@ -552,12 +559,28 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("q_search_qld stays term-filtered: no corpus-wide posting join") {
-    val p = plan("q_search_qld")
-    assert(p.contains("BroadcastHashJoin")
-        || p.contains("BroadcastExchange"),
-      s"the two term-filtered posting sides are not broadcast-joined:\n$p")
-    assert(!p.contains("SortMergeJoin"),
-      s"term-filtered posting join regressed to sort-merge:\n$p")
+    // one doc-keyed conditional aggregate over the two terms' postings;
+    // ctf comes from the term dictionary as a literal
+    val p = ownPlan("q_search_qld")
+    assert(p.linesIterator.exists(l => l.contains("InMemoryTableScan")
+        && l.contains("IN (spark,join)")),
+      s"the postings scan lost its term predicate:\n$p")
+    assert(!p.contains("Join"), s"q_search_qld joins the postings:\n$p")
+    assert(!p.contains("Window"), s"q_search_qld windows the postings:\n$p")
+  }
+
+  test("q_search_wand and q_vsm_cosine make one pass: no join, no rescan") {
+    // WAND's bounds are collected first; the ranking is one doc-keyed
+    // aggregate over the query terms' postings
+    val wand = ownPlan("q_search_wand")
+    assert(!wand.contains("Join") && !wand.contains("Window"),
+      s"q_search_wand joins or windows the scored postings:\n$wand")
+    assert(wand.linesIterator.count(_.contains("InMemoryTableScan")) == 1,
+      s"q_search_wand scans the postings more than once:\n$wand")
+    // the cosine list is the memoized per-doc VSM scores
+    val vsm = ownPlan("q_vsm_cosine")
+    assert(!vsm.contains("InMemoryTableScan") && !vsm.contains("Scan parquet"),
+      s"q_vsm_cosine re-derives its scores from the postings:\n$vsm")
   }
 
   test("q_win_percentile keeps a bounded ROWS frame, no full-partition buffering") {
@@ -1093,14 +1116,16 @@ class PlanAuditSpec extends SparkSpecBase {
     // only unpartitioned window is over the ≤|alphabet|-row bounds
     // relation; q_tok_vocab: the windows sit above a TakeOrdered-100 cut;
     // q_autocomplete: its rank window partitions on the prefix key.
-    val pfx = plan("q_idx_prefix")
+    // (own plans: the term dictionary's build aggregates the postings on
+    // term under its InMemoryRelation, and that work is not the op's)
+    val pfx = ownPlan("q_idx_prefix")
     val lagLine = pfx.linesIterator
       .find(l => l.contains("lag(term")).getOrElse("")
     assert(lagLine.contains("windowspecdefinition(b#") ||
       lagLine.contains("windowspecdefinition(b,"),
       s"q_idx_prefix lag lost its first-char partition spec:\n$pfx")
-    assert(pfx.contains("HashAggregate(keys=[term"),
-      s"q_idx_prefix windows the token stream, not the vocab:\n$pfx")
+    assert(!pfx.contains("HashAggregate(keys=[term"),
+      s"q_idx_prefix re-aggregates the vocab instead of reading the term dictionary:\n$pfx")
 
     val vocab = plan("q_tok_vocab")
     assert(vocab.contains("TakeOrderedAndProject"),
@@ -1112,7 +1137,7 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(wIdx >= 0 && tIdx > wIdx,
       s"q_tok_vocab windows run below the top-100 cut:\n$vocab")
 
-    val ac = plan("q_autocomplete")
+    val ac = ownPlan("q_autocomplete")
     val acWin = ac.linesIterator.filter(_.contains("row_number()")).toSeq
     assert(acWin.nonEmpty && acWin.forall(_.contains("prefix")),
       s"q_autocomplete rank window lost its prefix partition:\n$ac")
@@ -1121,7 +1146,7 @@ class PlanAuditSpec extends SparkSpecBase {
   // ── round-8 wave pins ──
 
   test("q_idx_skiplist: positions window partitions per term, top cut is TakeOrdered") {
-    val p = plan("q_idx_skiplist")
+    val p = ownPlan("q_idx_skiplist")
     val posLine = p.linesIterator
       .find(l => l.contains("row_number()")).getOrElse("")
     assert(posLine.contains("term"),

@@ -1,6 +1,9 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -59,9 +62,34 @@ class PlanSweepSpec extends SparkSpecBase {
     case _ => false
   }
 
+  /** A scan of a memoized relation that IS an aggregate's output (the
+    * term dictionary: one row per term) — bounded by its key space like
+    * the aggregate itself. Decided at the cached plan's root, through
+    * only the projections, filters, sorts and exchanges above its last
+    * aggregate, so a memo that aggregates somewhere inside its build
+    * (the postings, whose root sits above windows) does not count. */
+  private def cachedAggregate(p: SparkPlan): Boolean = {
+    def aggRoot(q: SparkPlan): Boolean = q match {
+      case _: HashAggregateExec | _: ObjectHashAggregateExec |
+          _: SortAggregateExec => true
+      case a: AdaptiveSparkPlanExec => aggRoot(a.executedPlan)
+      case s: QueryStageExec => aggRoot(s.plan)
+      case u @ (_: ProjectExec | _: FilterExec | _: SortExec |
+          _: WholeStageCodegenExec | _: InputAdapter |
+          _: ShuffleExchangeExec | _: AQEShuffleReadExec) =>
+        aggRoot(u.children.head)
+      case _ => false
+    }
+    p match {
+      case s: InMemoryTableScanExec => aggRoot(s.relation.cachedPlan)
+      case _ => false
+    }
+  }
+
   /** A plan subtree whose row count cannot scale with the corpus: it is
     * aggregate-bounded, limit-bounded, reads only fixed dims, is a
-    * literal local relation, or is cut to a constant probe set by a
+    * literal local relation or a memoized aggregate output
+    * ([[cachedAggregate]]), or is cut to a constant probe set by a
     * key-range filter (the similarity family's `vec_id < K` idiom — an
     * upper-bound comparison of an id/key attribute against a literal,
     * visible either as a FilterExec or pushed into the scan). */
@@ -93,7 +121,7 @@ class PlanSweepSpec extends SparkSpecBase {
     }
     isAggBounded(p) || limitBounded || hasProbeCut ||
       (scanTables(p).nonEmpty && scanTables(p).subsetOf(fixedDims)) ||
-      p.collectLeaves().forall(l =>
+      p.collectLeaves().forall(l => cachedAggregate(l) ||
         l.getClass.getSimpleName.startsWith("LocalTableScan") ||
           l.getClass.getSimpleName.startsWith("RDDScan") ||
           // spark.range(literal) — constant row count by construction
@@ -169,6 +197,21 @@ class PlanSweepSpec extends SparkSpecBase {
     val plan = SparkEntry.queries(name)(spark, sf).queryExecution.sparkPlan
     val v = violations(plan)
     assert(v.isEmpty, s"$name violates plan invariants:\n${v.mkString("\n")}")
+  }
+
+  test("a memoized aggregate output bounds a window; the postings do not") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    def flagged(df: org.apache.spark.sql.DataFrame): Boolean =
+      violations(df.queryExecution.sparkPlan)
+        .exists(_.contains("single-partition window"))
+    val byTf = Window.orderBy(desc("tf"), asc("term"), asc("doc_id"))
+    assert(flagged(Tables.postings(spark, sf)
+        .withColumn("rn", row_number().over(byTf))),
+      "a global window over the postings memo was not flagged")
+    assert(!flagged(Tables.lexicon(spark, sf)
+        .withColumn("rn", row_number().over(Window.orderBy("term")))),
+      "a global window over the term dictionary was flagged")
   }
 
   test("detectors fire on seeded regressions") {

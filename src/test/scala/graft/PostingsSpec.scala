@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The positional postings memo (term, doc_id, tf, pos, df, dl) and the
-  * corpus scalars the search family reads instead of re-aggregating or
-  * re-tokenizing the corpus.
+/** The positional postings memo (term, doc_id, tf, pos, df, dl), the
+  * term dictionary (term, df, ctf) and the corpus scalars the search
+  * family reads instead of re-aggregating or re-tokenizing the corpus.
   */
 class PostingsSpec extends SparkSpecBase {
 
@@ -33,6 +33,25 @@ class PostingsSpec extends SparkSpecBase {
     assertFreshPostings(sf)
   }
 
+  /** Asserts that the term dictionary over `dir` equals a fresh
+    * derivation of df and ctf from the documents text, and that a
+    * second request returns the same memoized relation. */
+  private def assertFreshLexicon(dir: String): Unit = {
+    val fresh = Tables.t(spark, dir, "documents")
+      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
+      .groupBy("term")
+      .agg(countDistinct("doc_id").as("df"), count(lit(1)).as("ctf"))
+    val memo = Tables.lexicon(spark, dir)
+    assert(memo.columns.toSeq == Seq("term", "df", "ctf"))
+    assert(memo.exceptAll(fresh).isEmpty, "lexicon rows missing from tokens")
+    assert(fresh.exceptAll(memo).isEmpty, "token terms missing from lexicon")
+    assert(Tables.lexicon(spark, dir) eq memo)
+  }
+
+  test("the term dictionary equals a fresh token-stream derivation of df and ctf") {
+    assertFreshLexicon(sf)
+  }
+
   /** A copy of sf0.001 whose `documents` is 3 files of contiguous doc_id
     * ranges, so the token cache and the postings memo run at width > 1
     * (every fixture table is one file); the other tables are copied. */
@@ -54,6 +73,11 @@ class PostingsSpec extends SparkSpecBase {
   test("postings over a 3-file documents table span several partitions") {
     assert(Tables.postings(spark, splitSf).rdd.getNumPartitions > 1)
     assertFreshPostings(splitSf)
+  }
+
+  test("the term dictionary over a 3-file documents table is exact") {
+    assert(Tables.lexicon(spark, splitSf).rdd.getNumPartitions > 1)
+    assertFreshLexicon(splitSf)
   }
 
   test("the search mix hashes to its golden values over a split documents") {

@@ -19,6 +19,21 @@ class SearchIndexSpec extends SparkSpecBase {
     assert(pruned.toSeq == full.toSeq)
   }
 
+  test("wand selection: ub ties, fewer than k postings, no query term") {
+    import queries.SearchIndex.wandSelect
+    val inf = Double.NegativeInfinity
+    // tied top ub: the smaller term sets theta (1.0, not b's 0.6), so c's
+    // ub 0.8 stays below it and c is the one non-essential term
+    assert(wandSelect(Seq(("b", 2.0, Some(0.6)), ("a", 2.0, Some(1.0)),
+      ("c", 0.8, Some(0.7)))) == ((1.0, Seq("a", "b"))))
+    // the top term has fewer than k postings: no threshold, every term
+    // essential, in ascending (ub, term) order
+    assert(wandSelect(Seq(("x", 3.0, None), ("y", 1.0, Some(0.9)))) ==
+      ((inf, Seq("y", "x"))))
+    // no query term in the corpus: nothing is essential
+    assert(wandSelect(Nil) == ((inf, Nil)))
+  }
+
   test("delta gaps prefix-sum back to the sorted posting list") {
     // per-term sum(gaps) == max doc_id of postings (first gap is absolute)
     val idx = Tables.docTerms(spark, sf)
