@@ -452,6 +452,15 @@ object Search {
        |FROM scores WHERE term LIKE 'pa%'
        |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
 
+  /** The query terms' collection frequencies, read from the term
+    * dictionary for a ranking function to inline as literals; a term
+    * absent from the corpus is absent from the map. */
+  def ctfOf(spark: SparkSession, sfDir: String,
+      terms: Seq[String]): Map[String, Long] =
+    Tables.lexicon(spark, sfDir)
+      .filter(col("term").isin(terms: _*)).select("term", "ctf")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+
   /** Query-likelihood ranking with Dirichlet smoothing (µ = 2000, the
     * Zhai/Lafferty 2001 default) for the conjunctive {spark, join}
     * query — the language-modeling alternative to [[qSearchBm25]]'s
@@ -464,9 +473,7 @@ object Search {
     * a doc matches when both per-term tf slots are filled.
     */
   def qSearchQld(spark: SparkSession, sfDir: String): DataFrame = {
-    val ctf = Tables.lexicon(spark, sfDir)
-      .filter(col("term").isin("spark", "join")).select("term", "ctf")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val ctf = ctfOf(spark, sfDir, Seq("spark", "join"))
     def tfOf(t: String) = max(when(col("term") === t, col("tf")))
     Tables.postings(spark, sfDir)
       .filter(col("term").isin("spark", "join"))

@@ -9,9 +9,10 @@ import graft.Tables
   * and fuzzy (edit-distance) term matching — the parts of a search
   * engine that live BELOW the query API.
   *
-  * Scale notes: WAND's pruning statistics (per-term score upper bounds
-  * and k-th best scores) are one aggregate row per query term, collected
-  * to pick the threshold and the ESSENTIAL terms as literals; the
+  * Scale notes: WAND's pruning statistics (per-term score upper bounds,
+  * one aggregate row per query term, and the top-ub term's k-th best
+  * score, a top-k bounded by k) are collected to pick the threshold and
+  * the ESSENTIAL terms as literals; the
   * ranking is then one doc-keyed aggregate over the query terms'
   * postings that keeps only docs holding an essential term, which is
   * the whole point of MaxScore. Posting compression is one term-keyed
@@ -27,10 +28,12 @@ object SearchIndex {
   /** MaxScore/WAND-style disjunctive top-k: BM25 OR-query over three
     * terms, answered through the pruned path —
     *
-    *   1. one aggregate row per query term: ub_t = max_d s(t,d) (the
-    *      term's score upper bound) and its k-th best score
+    *   1. one aggregate row per query term: ub_t = max_d s(t,d), the
+    *      term's score upper bound
     *   2. those ≤ |query| rows are collected, and [[wandSelect]] picks
-    *      theta and the essential terms from them
+    *      theta — the k-th best score of the top-ub term, read by a
+    *      top-k over that one term's postings (memory bounded by k) —
+    *      and the essential terms
     *   3. one doc-keyed aggregate sums every query term's score per doc
     *      and keeps the docs that hold an essential term; docs appearing
     *      ONLY in non-essential postings can never reach theta.
@@ -40,13 +43,12 @@ object SearchIndex {
     */
   def qSearchWand(spark: SparkSession, sfDir: String): DataFrame = {
     val scored = Search.bm25Scored(spark, sfDir, WandTerms)
-    val bounds = scored.groupBy("term")
-      .agg(max("s").as("ub"),
-        try_element_at(sort_array(collect_list("s"), asc = false),
-          lit(WandK)).as("kth"))
-      .collect().toSeq.map(r => (r.getString(0), r.getDouble(1),
-        Option(r.get(2)).map(_.asInstanceOf[Double])))
-    val essential = wandSelect(bounds)._2
+    val ubs = scored.groupBy("term").agg(max("s"))
+      .collect().toSeq.map(r => r.getString(0) -> r.getDouble(1))
+    def kth(t: String): Option[Double] =
+      scored.filter(col("term") === t).select("s").orderBy(desc("s"))
+        .limit(WandK).collect().lift(WandK - 1).map(_.getDouble(0))
+    val essential = wandSelect(ubs, kth)._2
     scored.groupBy("doc_id")
       .agg(round(sum("s"), 4).as("score"), count(lit(1)).as("nt"),
         max(col("term").isin(essential: _*)).as("ess"))
@@ -57,7 +59,8 @@ object SearchIndex {
   }
 
   /** WAND's threshold and essential terms from each query term's
-    * (term, ub, k-th best score — None below k postings):
+    * (term, ub) and a lookup of a term's k-th best score (None below k
+    * postings), which is asked for the top-ub term only:
     *   - theta = the k-th best SINGLE-term score on the highest-ub term
     *     (ties to the smaller term) — a valid lower bound of the k-th
     *     best true score, since a doc's true score is at least any one
@@ -67,15 +70,15 @@ object SearchIndex {
     *     (ub, term) order, whose running ub sum stays below theta; the
     *     rest are essential, in that order.
     * No bounds (no query term in the corpus) gives no essential term. */
-  private[graft] def wandSelect(
-      bounds: Seq[(String, Double, Option[Double])]): (Double, Seq[String]) = {
-    val top = bounds.sortWith { case ((t1, u1, _), (t2, u2, _)) =>
+  private[graft] def wandSelect(ubs: Seq[(String, Double)],
+      kth: String => Option[Double]): (Double, Seq[String]) = {
+    val top = ubs.sortWith { case ((t1, u1), (t2, u2)) =>
       u1 > u2 || (u1 == u2 && t1 < t2) }.headOption
-    val theta = top.flatMap(_._3).getOrElse(Double.NegativeInfinity)
-    val asc = bounds.sortWith { case ((t1, u1, _), (t2, u2, _)) =>
+    val theta = top.flatMap(t => kth(t._1)).getOrElse(Double.NegativeInfinity)
+    val asc = ubs.sortWith { case ((t1, u1), (t2, u2)) =>
       u1 < u2 || (u1 == u2 && t1 < t2) }
     val cum = asc.scanLeft(0.0)(_ + _._2).tail
-    (theta, asc.zip(cum).collect { case ((t, _, _), c) if c >= theta => t })
+    (theta, asc.zip(cum).collect { case ((t, _), c) if c >= theta => t })
   }
 
   /** Oracle: the UNPRUNED disjunctive top-k — pruning exactness is the

@@ -189,12 +189,14 @@ object SearchRank {
     * agree; the 2 per-term scores sum in fixed a + b order.
     */
   def qSearchPl2(spark: SparkSession, sfDir: String): DataFrame = {
-    // ctf is a window sum inside each query term's postings, and the
-    // corpus scalars are literals: the score chain has no join at all
+    // ctf comes from the term dictionary and the corpus scalars are
+    // literals: the score chain has no join and no window
     val cs = Tables.corpusStats(spark, sfDir)
+    val ctf = Search.ctfOf(spark, sfDir, Seq("spark", "join"))
     val scored = Tables.postings(spark, sfDir)
       .filter(col("term").isin("spark", "join"))
-      .withColumn("ctf", sum("tf").over(Window.partitionBy("term")))
+      .withColumn("ctf", when(col("term") === "spark",
+        ctf.getOrElse("spark", 0L)).otherwise(ctf.getOrElse("join", 0L)))
       .withColumn("avgdl", lit(cs.avgdl))
       .withColumn("n_docs", lit(cs.nDocs))
       .withColumn("tfn", expr("tf * log2(1 + avgdl / dl)"))

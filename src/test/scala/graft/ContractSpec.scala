@@ -227,7 +227,8 @@ class ContractSpec extends SparkSpecBase {
 
   test("vocabulary reads come from the term dictionary (source-level)") {
     // Tables.lexicon memoizes (term, df, ctf) once per sfDir; a query
-    // that re-derives it runs a near-full postings aggregate per call.
+    // that re-derives it runs a near-full postings aggregate per call
+    // (or, for ctf, a term-partitioned window sum over the postings).
     // A chain starts at the postings when its statement (back to the
     // previous `val`/`def`) calls Tables.postings / Tables.docTerms or
     // calls a method on a val bound to one of them in the same file.
@@ -238,7 +239,8 @@ class ContractSpec extends SparkSpecBase {
         "skipping source-level vocabulary scan")
     val memoCall = """Tables\.(?:postings|docTerms)\("""
     val vocabRe = ("""select\("term"[^)]*\)\s*\.distinct\(\)""" +
-      """|groupBy\("term"[^)]*\)\s*\.agg\(sum\("tf"\)""").r
+      """|groupBy\("term"[^)]*\)\s*\.agg\(sum\("tf"\)""" +
+      """|sum\("tf"\)\.over\(Window\.partitionBy\("term"\)\)""").r
     val found = scalaFiles(queries).flatMap { f =>
       val src = scala.io.Source.fromFile(f, "UTF-8")
       val text = try src.mkString finally src.close()

@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SortExec, SparkPlan, WholeStageCodegenExec}
-import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.execution.window.WindowExec
@@ -62,34 +60,22 @@ class PlanSweepSpec extends SparkSpecBase {
     case _ => false
   }
 
-  /** A scan of a memoized relation that IS an aggregate's output (the
-    * term dictionary: one row per term) — bounded by its key space like
-    * the aggregate itself. Decided at the cached plan's root, through
-    * only the projections, filters, sorts and exchanges above its last
-    * aggregate, so a memo that aggregates somewhere inside its build
-    * (the postings, whose root sits above windows) does not count. */
-  private def cachedAggregate(p: SparkPlan): Boolean = {
-    def aggRoot(q: SparkPlan): Boolean = q match {
-      case _: HashAggregateExec | _: ObjectHashAggregateExec |
-          _: SortAggregateExec => true
-      case a: AdaptiveSparkPlanExec => aggRoot(a.executedPlan)
-      case s: QueryStageExec => aggRoot(s.plan)
-      case u @ (_: ProjectExec | _: FilterExec | _: SortExec |
-          _: WholeStageCodegenExec | _: InputAdapter |
-          _: ShuffleExchangeExec | _: AQEShuffleReadExec) =>
-        aggRoot(u.children.head)
-      case _ => false
-    }
-    p match {
-      case s: InMemoryTableScanExec => aggRoot(s.relation.cachedPlan)
-      case _ => false
-    }
+  /** A scan of the term dictionary memo ([[Tables.lexicon]]): one row
+    * per term, bounded by the vocabulary like the term-keyed aggregate
+    * it replaced. Matched by the memo's own cache entry, so no other
+    * memo — the postings, the shingles — counts as bounded input. */
+  private def lexiconScan(p: SparkPlan): Boolean = p match {
+    case s: InMemoryTableScanExec =>
+      Tables.lexicon(spark, sf).queryExecution.sparkPlan.collectFirst {
+        case l: InMemoryTableScanExec => l.relation.cacheBuilder
+      }.exists(_ eq s.relation.cacheBuilder)
+    case _ => false
   }
 
   /** A plan subtree whose row count cannot scale with the corpus: it is
     * aggregate-bounded, limit-bounded, reads only fixed dims, is a
-    * literal local relation or a memoized aggregate output
-    * ([[cachedAggregate]]), or is cut to a constant probe set by a
+    * literal local relation or the term dictionary ([[lexiconScan]]),
+    * or is cut to a constant probe set by a
     * key-range filter (the similarity family's `vec_id < K` idiom — an
     * upper-bound comparison of an id/key attribute against a literal,
     * visible either as a FilterExec or pushed into the scan). */
@@ -121,7 +107,7 @@ class PlanSweepSpec extends SparkSpecBase {
     }
     isAggBounded(p) || limitBounded || hasProbeCut ||
       (scanTables(p).nonEmpty && scanTables(p).subsetOf(fixedDims)) ||
-      p.collectLeaves().forall(l => cachedAggregate(l) ||
+      p.collectLeaves().forall(l => lexiconScan(l) ||
         l.getClass.getSimpleName.startsWith("LocalTableScan") ||
           l.getClass.getSimpleName.startsWith("RDDScan") ||
           // spark.range(literal) — constant row count by construction
@@ -199,7 +185,7 @@ class PlanSweepSpec extends SparkSpecBase {
     assert(v.isEmpty, s"$name violates plan invariants:\n${v.mkString("\n")}")
   }
 
-  test("a memoized aggregate output bounds a window; the postings do not") {
+  test("the term dictionary bounds a window; other memos do not") {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
     def flagged(df: org.apache.spark.sql.DataFrame): Boolean =
@@ -209,6 +195,11 @@ class PlanSweepSpec extends SparkSpecBase {
     assert(flagged(Tables.postings(spark, sf)
         .withColumn("rn", row_number().over(byTf))),
       "a global window over the postings memo was not flagged")
+    // a distinct (an aggregate) at the cached plan's root, but one row
+    // per (doc, shingle): it grows with the corpus
+    assert(flagged(Tables.shingles(spark, sf)
+        .withColumn("rn", row_number().over(Window.orderBy("doc_id", "sh")))),
+      "a global window over the shingles memo was not flagged")
     assert(!flagged(Tables.lexicon(spark, sf)
         .withColumn("rn", row_number().over(Window.orderBy("term")))),
       "a global window over the term dictionary was flagged")

@@ -23,15 +23,19 @@ class SearchIndexSpec extends SparkSpecBase {
     import queries.SearchIndex.wandSelect
     val inf = Double.NegativeInfinity
     // tied top ub: the smaller term sets theta (1.0, not b's 0.6), so c's
-    // ub 0.8 stays below it and c is the one non-essential term
-    assert(wandSelect(Seq(("b", 2.0, Some(0.6)), ("a", 2.0, Some(1.0)),
-      ("c", 0.8, Some(0.7)))) == ((1.0, Seq("a", "b"))))
+    // ub 0.8 stays below it and c is the one non-essential term; only the
+    // top term's k-th best score is asked for
+    val asked = scala.collection.mutable.Buffer.empty[String]
+    val kths = Map("a" -> 1.0, "b" -> 0.6, "c" -> 0.7)
+    assert(wandSelect(Seq(("b", 2.0), ("a", 2.0), ("c", 0.8)),
+      t => { asked += t; kths.get(t) }) == ((1.0, Seq("a", "b"))))
+    assert(asked == Seq("a"))
     // the top term has fewer than k postings: no threshold, every term
     // essential, in ascending (ub, term) order
-    assert(wandSelect(Seq(("x", 3.0, None), ("y", 1.0, Some(0.9)))) ==
+    assert(wandSelect(Seq(("x", 3.0), ("y", 1.0)), Map("y" -> 0.9).get) ==
       ((inf, Seq("y", "x"))))
     // no query term in the corpus: nothing is essential
-    assert(wandSelect(Nil) == ((inf, Nil)))
+    assert(wandSelect(Nil, _ => fail("no term to ask")) == ((inf, Nil)))
   }
 
   test("delta gaps prefix-sum back to the sorted posting list") {
