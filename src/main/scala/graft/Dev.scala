@@ -21,6 +21,9 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    one line per Spark job (ms, stages) and, for s_* ids, one per
   *    micro-batch (rows, durationMs), so loop and stream costs can be
   *    attributed instead of guessed.
+  * Caches are not cleared between runs, so `time` and `prof` time only
+  * the memo lookup for an op whose whole result is memoized
+  * (q_dedup_cluster), once its first run is done.
   */
 object Dev {
   def main(args: Array[String]): Unit = {

@@ -81,11 +81,11 @@ object Pipeline {
       |FROM iv JOIN sz s1 ON d1 = s1.doc_id JOIN sz s2 ON d2 = s2.doc_id
       |ORDER BY jaccard DESC, d1, d2 LIMIT 20""".stripMargin
 
-  /** Brute-force cosine top-k against vec_id=0, all math in double
-    * (SURVEY.md §2 rule C). The query vector is a broadcast single row;
-    * the scan side never shuffles — this is the exact-search baseline the
-    * ANN variant (q_sim_ann_ivf) trades against. */
-  def qSimCosineTopk(spark: SparkSession, sfDir: String): DataFrame = {
+  /** (vec_id, cos): every other embedding's cosine against vec_id=0,
+    * round(4), all math in double (SURVEY.md §2 rule C). The query
+    * vector is a broadcast single row; the scan side never shuffles. */
+  private[queries] def queryCosines(spark: SparkSession,
+      sfDir: String): DataFrame = {
     val emb = Tables.t(spark, sfDir, "embeddings")
       .withColumn("e", col("embedding").cast("array<double>"))
     val q = emb.filter(col("vec_id") === 0)
@@ -97,9 +97,12 @@ object Pipeline {
       .select(col("vec_id"),
         round(graft.functions.VectorOps.cosine(col("e"), col("qe")), 4)
           .as("cos"))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(10)
   }
+
+  /** Brute-force cosine top-k against vec_id=0 — the exact-search
+    * baseline the ANN variant (q_sim_ann_ivf) trades against. */
+  def qSimCosineTopk(spark: SparkSession, sfDir: String): DataFrame =
+    Search.topK(queryCosines(spark, sfDir), 10, "cos", "vec_id")
 
   val qSimCosineTopkSql: String =
     """WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),

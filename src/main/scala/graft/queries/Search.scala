@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -13,8 +14,45 @@ import graft.Tables
   * (Tables.lexicon, Tables.corpusStats); search queries reduce to
   * term-filtered scans + aggregates over postings — the Spark-native
   * analog of the reference's posting-list intersection.
+  *
+  * Every ranked op is the same pipeline: score the query terms'
+  * postings ([[bm25ScoredOn]] for BM25), combine the scores per doc
+  * ([[perDoc]], [[allTerms]] for a conjunctive query), and cut the top
+  * k ([[topK]], [[topKRanks]] when the rank is an output or an input).
   */
 object Search {
+
+  /** The ranked cut: `score` descending with `id` ascending as the
+    * total-order tiebreak, first k. It plans as a TakeOrderedAndProject
+    * (per-partition k-row heaps and one k-row merge), never a global
+    * sort. */
+  private[queries] def topK(scored: DataFrame, k: Int,
+      score: String = "score", id: String = "doc_id"): DataFrame =
+    scored.orderBy(desc(score), asc(id)).limit(k)
+
+  /** [[topK]]'s docs as (doc_id, `rank`), rank 1..k in cut order. The
+    * rank window sees only the k survivors, so the single-partition sort
+    * it implies is constant-size at any scale (an unpartitioned
+    * `row_number <= k` filter gets no WindowGroupLimit pushdown). */
+  private[queries] def topKRanks(scored: DataFrame, k: Int,
+      score: String = "score", rank: String = "r"): DataFrame =
+    topK(scored, k, score).select(col("doc_id"), row_number().over(
+      Window.orderBy(desc(score), asc("doc_id"))).as(rank))
+
+  /** The per-doc combine of scored postings (doc_id, term, `s`): nt, the
+    * number of matched query terms, and score = round(sum(s), 4).
+    * (term, doc_id) is unique in the postings, so count(1) counts
+    * distinct terms without a distinct aggregate. */
+  private[queries] def perDoc(scored: DataFrame, s: String = "s"): DataFrame =
+    scored.groupBy("doc_id")
+      .agg(count(lit(1)).as("nt"), round(sum(s), 4).as("score"))
+
+  /** [[perDoc]] for a conjunctive query over n terms: (doc_id, score) of
+    * the docs matching all n. With two terms the sum is the same double
+    * as a + b in either order. */
+  private[queries] def allTerms(scored: DataFrame, n: Int,
+      s: String = "s"): DataFrame =
+    perDoc(scored, s).filter(col("nt") === n).select("doc_id", "score")
 
   /** Raw (unrounded) tf-idf per posting: tf * ln(N / df), with N the
     * memoized corpus size inlined as a literal. */
@@ -25,10 +63,8 @@ object Search {
   }
 
   // Shared oracle CTEs (DuckDB side of the same pipeline).
-  private val tokSql =
+  private[queries] val tokSql =
     "SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents"
-  /** [[tokSql]] for sibling query objects (q_topic_lodds). */
-  private[queries] val tokSqlPublic: String = tokSql
   private[queries] val tfidfCte: String =
     s"""WITH tok AS ($tokSql),
        |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
@@ -106,17 +142,10 @@ object Search {
        |FROM scores ORDER BY doc_id, term""".stripMargin
 
   /** Conjunctive keyword query: docs containing ALL terms, tf-idf ranked.
-    * Posting intersection ≡ groupBy(doc) HAVING n_distinct_terms = |q|. */
+    * Posting intersection ≡ groupBy(doc) HAVING matched terms = |q|. */
   def qSearchAnd(spark: SparkSession, sfDir: String): DataFrame =
-    tfidfRaw(spark, sfDir)
-      .filter(col("term").isin("spark", "join"))
-      .groupBy("doc_id")
-      .agg(countDistinct("term").as("nt"),
-        round(sum("score"), 4).as("score"))
-      .filter(col("nt") === 2)
-      .select("doc_id", "score")
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+    topK(allTerms(tfidfRaw(spark, sfDir)
+      .filter(col("term").isin("spark", "join")), 2, "score"), 10)
 
   val qSearchAndSql: String =
     s"""$tfidfCte
@@ -127,12 +156,9 @@ object Search {
 
   /** Disjunctive keyword query: docs containing ANY term. */
   def qSearchOr(spark: SparkSession, sfDir: String): DataFrame =
-    tfidfRaw(spark, sfDir)
-      .filter(col("term").isin("vector", "stream"))
-      .groupBy("doc_id")
-      .agg(round(sum("score"), 4).as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+    topK(perDoc(tfidfRaw(spark, sfDir)
+      .filter(col("term").isin("vector", "stream")), "score")
+      .select("doc_id", "score"), 10)
 
   val qSearchOrSql: String =
     s"""$tfidfCte
@@ -193,7 +219,8 @@ object Search {
 
   /** [[bm25Scored]] over an arbitrary pre-filtered postings relation —
     * the PRF path filters by a RUNTIME term set (broadcast join) instead
-    * of a literal IN list. */
+    * of a literal IN list, and BM25F passes its field-weighted tf in the
+    * `tf` column. The one spelling of the BM25 expression. */
   private[graft] def bm25ScoredOn(spark: SparkSession, sfDir: String,
       post: DataFrame): DataFrame = {
     val cs = Tables.corpusStats(spark, sfDir)
@@ -246,11 +273,8 @@ object Search {
 
   private[queries] def lexScores(spark: SparkSession, sfDir: String): DataFrame =
     Tables.memo(lexScoresCache, spark, sfDir) {
-      Tables.localCheckpoint(bm25Scored(spark, sfDir, Seq("spark", "join"))
-        .groupBy("doc_id")
-        .agg(countDistinct("term").as("nt"), round(sum("s"), 4).as("score"))
-        .filter(col("nt") === 2)
-        .select("doc_id", "score"))
+      Tables.localCheckpoint(
+        allTerms(bm25Scored(spark, sfDir, Seq("spark", "join")), 2))
     }
 
   /** BM25-ranked conjunctive-ish query (k1=1.2, b=0.75) over the same
@@ -262,9 +286,7 @@ object Search {
     * agree at round(4).
     */
   def qSearchBm25(spark: SparkSession, sfDir: String): DataFrame =
-    lexScores(spark, sfDir)
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+    topK(lexScores(spark, sfDir), 10)
 
   val qSearchBm25Sql: String =
     s"""${bm25ScoredCte(Seq("spark", "join"))}
@@ -287,22 +309,17 @@ object Search {
     // seed = the shared memoized lexical list's top-3 (identical
     // expression to the previous inline build; reuse kills one full
     // scored-subtree derivation per execution — round-7 verdict item 5)
-    val seed = lexScores(spark, sfDir)
-      .orderBy(desc("score"), asc("doc_id")).limit(3)
-      .select("doc_id")
-    val ex = tfidfRaw(spark, sfDir)
+    val seed = topK(lexScores(spark, sfDir), 3).select("doc_id")
+    val ex = topK(tfidfRaw(spark, sfDir)
       .join(broadcast(seed), "doc_id")
       .filter(!col("term").isin("spark", "join"))
-      .groupBy("term").agg(round(sum("score"), 4).as("w"))
-      .orderBy(desc("w"), asc("term")).limit(2)
+      .groupBy("term").agg(round(sum("score"), 4).as("w")), 2, "w", "term")
       .select("term")
+    // the expansion terms exclude the originals, so every query term
+    // joins once and (term, doc_id) stays unique
     val qterms = Seq("spark", "join").toDF("term").union(ex)
-    bm25ScoredOn(spark, sfDir,
-        Tables.postings(spark, sfDir).join(broadcast(qterms), "term"))
-      .groupBy("doc_id")
-      .agg(countDistinct("term").as("nt"), round(sum("s"), 4).as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+    topK(perDoc(bm25ScoredOn(spark, sfDir,
+      Tables.postings(spark, sfDir).join(broadcast(qterms), "term"))), 10)
   }
 
   val qBm25PrfSql: String =
@@ -415,12 +432,10 @@ object Search {
   def qSearchNot(spark: SparkSession, sfDir: String): DataFrame = {
     val neg = Tables.docTerms(spark, sfDir)
       .filter(col("term") === "stream").select("doc_id")
-    tfidfRaw(spark, sfDir)
+    topK(tfidfRaw(spark, sfDir)
       .filter(col("term") === "spark")
       .join(broadcast(neg), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), round(col("score"), 4).as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+      .select(col("doc_id"), round(col("score"), 4).as("score")), 10)
   }
 
   val qSearchNotSql: String =
@@ -437,13 +452,9 @@ object Search {
     * can't); here it reaches the scan as a StartsWith pushed filter.
     */
   def qSearchPrefix(spark: SparkSession, sfDir: String): DataFrame =
-    tfidfRaw(spark, sfDir)
-      .filter(col("term").startsWith("pa"))
-      .groupBy("doc_id")
-      .agg(countDistinct("term").as("n_terms"),
-        round(sum("score"), 4).as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+    topK(perDoc(tfidfRaw(spark, sfDir)
+      .filter(col("term").startsWith("pa")), "score")
+      .withColumnRenamed("nt", "n_terms"), 10)
 
   val qSearchPrefixSql: String =
     s"""$tfidfCte
@@ -453,47 +464,42 @@ object Search {
        |GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
 
   /** The query terms' collection frequencies, read from the term
-    * dictionary for a ranking function to inline as literals; a term
-    * absent from the corpus is absent from the map. */
-  def ctfOf(spark: SparkSession, sfDir: String,
-      terms: Seq[String]): Map[String, Long] =
-    Tables.lexicon(spark, sfDir)
+    * dictionary, as one literal CASE on a posting's `term` (0 for a term
+    * absent from the corpus) for a ranking function to score with. */
+  private[queries] def ctfOf(spark: SparkSession, sfDir: String,
+      terms: Seq[String]): Column = {
+    val ctf = Tables.lexicon(spark, sfDir)
       .filter(col("term").isin(terms: _*)).select("term", "ctf")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    terms.tail.foldLeft(when(col("term") === terms.head,
+        ctf.getOrElse(terms.head, 0L))) { (c, t) =>
+      c.when(col("term") === t, ctf.getOrElse(t, 0L)) }
+  }
 
   /** Query-likelihood ranking with Dirichlet smoothing (µ = 2000, the
     * Zhai/Lafferty 2001 default) for the conjunctive {spark, join}
     * query — the language-modeling alternative to [[qSearchBm25]]'s
     * probabilistic ranking: score(d) = Σ_t ln((tf + µ·ctf_t/|C|)/(dl +
-    * µ)). The two per-term components are summed in FIXED left-to-right
-    * order (IEEE-identical in both engines). ctf (corpus term counts)
-    * comes from the term dictionary and |C| is the memoized token total,
-    * both inlined as literals. Scale: one doc-keyed conditional
-    * aggregate over the two terms' postings — no window, no self-join;
-    * a doc matches when both per-term tf slots are filled.
+    * µ)). The two per-term components sum per doc (two addends: the
+    * same double in either order, IEEE-identical in both engines). ctf
+    * (corpus term counts) comes from the term dictionary and |C| is the
+    * memoized token total, both inlined as literals. Scale: each
+    * posting of the two terms is scored in-row, then one doc-keyed
+    * aggregate keeps the docs matching both — no window, no self-join.
     */
   def qSearchQld(spark: SparkSession, sfDir: String): DataFrame = {
-    val ctf = ctfOf(spark, sfDir, Seq("spark", "join"))
-    def tfOf(t: String) = max(when(col("term") === t, col("tf")))
-    Tables.postings(spark, sfDir)
-      .filter(col("term").isin("spark", "join"))
-      .groupBy("doc_id", "dl")
-      .agg(tfOf("spark").as("tf_s"), tfOf("join").as("tf_j"))
-      .filter(col("tf_s").isNotNull && col("tf_j").isNotNull)
-      .withColumn("ctf_s", lit(ctf.getOrElse("spark", 0L)))
-      .withColumn("ctf_j", lit(ctf.getOrElse("join", 0L)))
+    val terms = Seq("spark", "join")
+    val scored = Tables.postings(spark, sfDir)
+      .filter(col("term").isin(terms: _*))
+      .withColumn("ctf", ctfOf(spark, sfDir, terms))
       .withColumn("nc", lit(Tables.corpusStats(spark, sfDir).nTokens))
-      .select(col("doc_id"),
-        // µ spelled CAST(... AS DOUBLE) on BOTH sides: a bare 2000.0 is
-        // DECIMAL in both parsers, but Spark stays in exact-decimal
-        // arithmetic (HALF_UP scale reduction) while DuckDB converts to
-        // DOUBLE at the first division — the IEEE paths fork before
-        // ln()/round(4) (qEvtWilson/qRevBridge discipline).
-        round(expr("ln((tf_s + CAST(2000.0 AS DOUBLE) * ctf_s / nc) / (dl + CAST(2000.0 AS DOUBLE)))") +
-          expr("ln((tf_j + CAST(2000.0 AS DOUBLE) * ctf_j / nc) / (dl + CAST(2000.0 AS DOUBLE)))"), 4)
-          .as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+      // µ spelled CAST(... AS DOUBLE) on BOTH sides: a bare 2000.0 is
+      // DECIMAL in both parsers, but Spark stays in exact-decimal
+      // arithmetic (HALF_UP scale reduction) while DuckDB converts to
+      // DOUBLE at the first division — the IEEE paths fork before
+      // ln()/round(4) (qEvtWilson/qRevBridge discipline).
+      .withColumn("s", expr("ln((tf + CAST(2000.0 AS DOUBLE) * ctf / nc) / (dl + CAST(2000.0 AS DOUBLE)))"))
+    topK(allTerms(scored, 2), 10)
   }
 
   val qSearchQldSql: String =

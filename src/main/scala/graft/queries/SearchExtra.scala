@@ -25,12 +25,10 @@ object SearchExtra {
     * by match count. The predicate and count run in one narrow scan —
     * no shuffle until the bounded top-50 sort. */
   def qSearchRegex(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.t(spark, sfDir, "documents")
+    Search.topK(Tables.t(spark, sfDir, "documents")
       .select(col("doc_id"),
         regexp_count(col("text"), lit(Pattern)).cast("long").as("n_hits"))
-      .filter(col("n_hits") > 0)
-      .orderBy(desc("n_hits"), asc("doc_id"))
-      .limit(50)
+      .filter(col("n_hits") > 0), 50, "n_hits")
 
   val qSearchRegexSql: String =
     s"""SELECT doc_id,

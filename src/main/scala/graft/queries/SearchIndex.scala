@@ -49,13 +49,12 @@ object SearchIndex {
       scored.filter(col("term") === t).select("s").orderBy(desc("s"))
         .limit(WandK).collect().lift(WandK - 1).map(_.getDouble(0))
     val essential = wandSelect(ubs, kth)._2
-    scored.groupBy("doc_id")
+    // not Search.perDoc: the essential-term flag rides in the same pass
+    Search.topK(scored.groupBy("doc_id")
       .agg(round(sum("s"), 4).as("score"), count(lit(1)).as("nt"),
         max(col("term").isin(essential: _*)).as("ess"))
       .filter(col("ess"))
-      .select("doc_id", "score", "nt")
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(WandK)
+      .select("doc_id", "score", "nt"), WandK)
   }
 
   /** WAND's threshold and essential terms from each query term's

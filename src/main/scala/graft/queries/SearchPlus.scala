@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import Search.{topK, topKRanks}
 
 /** Round-3 search-engine extensions (SURVEY.md §2.9): positional
   * proximity search, PMI co-occurrence mining (query-expansion input),
@@ -155,27 +156,11 @@ object SearchPlus {
   // ─────────────── hybrid-retrieval rank fusion (round 6) ───────────────
 
   /** Fusion depth per list and the RRF smoothing constant (k = 60, the
-    * value from Cormack/Clarke/Buettcher 2009). */
+    * value from Cormack/Clarke/Buettcher 2009). Each list is ranked by
+    * its ROUNDED score ([[Search.topKRanks]]): both engines rank
+    * identical round(4) doubles, so ranks are engine-portable. */
   private val FuseK = 20
   private val RrfC = 60
-
-  /** One ranked retrieval list as (doc_id, r): rank 1..[[FuseK]] by the
-    * ROUNDED score — both engines rank identical round(4) doubles, so
-    * ranks are engine-portable — with doc_id as the total-order
-    * tiebreak. Shape: orderBy+limit compiles to TakeOrderedAndProject
-    * (per-partition partial top-K, merge of K-row heaps — the full list
-    * is never globally sorted; plan-verified, since the UNPARTITIONED
-    * `row_number ≤ K` filter does NOT get Spark's WindowGroupLimit
-    * pushdown, unlike q_search_diverse's partitioned cap); the rank
-    * window then touches only the K survivors.
-    */
-  private def rankedList(scored: DataFrame, score: String): DataFrame =
-    scored
-      .orderBy(desc(score), asc("doc_id"))
-      .limit(FuseK)
-      .withColumn("r", row_number().over(
-        Window.orderBy(desc(score), asc("doc_id"))))
-      .select(col("doc_id"), col("r"))
 
   /** Reciprocal-rank fusion of two retrieval lists for {spark, join} —
     * the standard hybrid-search combiner (lexical ⊕ vector list, RRF =
@@ -189,14 +174,12 @@ object SearchPlus {
     * value both engines computed from the same ints).
     */
   def qSearchRrf(spark: SparkSession, sfDir: String): DataFrame = {
-    val lex = rankedList(Search.lexScores(spark, sfDir), "score")
-    val sem = rankedList(vsmScoredM(spark, sfDir), "cos")
-    lex.unionByName(sem)
+    val lex = topKRanks(Search.lexScores(spark, sfDir), FuseK, "score")
+    val sem = topKRanks(vsmScoredM(spark, sfDir), FuseK, "cos")
+    topK(lex.unionByName(sem)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_lists"),
-        round(sum(lit(1.0) / (col("r") + RrfC)), 6).as("rrf"))
-      .orderBy(desc("rrf"), asc("doc_id"))
-      .limit(10)
+        round(sum(lit(1.0) / (col("r") + RrfC)), 6).as("rrf")), 10, "rrf")
   }
 
   /** VSM cosine per doc (dp over the two query terms / doc norm,
@@ -266,15 +249,13 @@ object SearchPlus {
     val scored = Search.lexScores(spark, sfDir)
     val bySrc = Window.partitionBy("source")
       .orderBy(desc("score"), asc("doc_id"))
-    scored
+    topK(scored
       .join(Tables.t(spark, sfDir, "documents").select("doc_id", "source"),
         "doc_id")
       .withColumn("src_rank", row_number().over(bySrc))
       .filter(col("src_rank") <= 2)
       .select(col("doc_id"), col("source"),
-        col("src_rank").cast("long").as("src_rank"), col("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+        col("src_rank").cast("long").as("src_rank"), col("score")), 10)
   }
 
   val qSearchDiverseSql: String =
@@ -304,11 +285,7 @@ object SearchPlus {
     * round(4) grid (the q_tfidf ln() precedent).
     */
   def qEvalNdcg(spark: SparkSession, sfDir: String): DataFrame = {
-    val ranked = Search.lexScores(spark, sfDir)
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
-      .withColumn("r", row_number().over(
-        Window.orderBy(desc("score"), asc("doc_id"))))
+    val ranked = topKRanks(Search.lexScores(spark, sfDir), 10)
     val rel = Tables.postings(spark, sfDir)
       .filter(col("term") === "spark")
       .select(col("doc_id"), col("tf").as("rel"))
@@ -335,11 +312,11 @@ object SearchPlus {
     * beyond the postings of the query terms.
     */
   def qEvalInterleave(spark: SparkSession, sfDir: String): DataFrame = {
-    val lex = rankedList(Search.lexScores(spark, sfDir), "score")
+    val lex = topKRanks(Search.lexScores(spark, sfDir), FuseK, "score")
       .filter(col("r") <= 10)
       .select(col("doc_id"), (col("r") * 2 - 1).as("p"),
         lit("lex").as("team"), col("r"))
-    val sem = rankedList(vsmScoredM(spark, sfDir), "cos")
+    val sem = topKRanks(vsmScoredM(spark, sfDir), FuseK, "cos")
       .filter(col("r") <= 10)
       .select(col("doc_id"), (col("r") * 2).as("p"),
         lit("sem").as("team"), col("r"))
@@ -386,11 +363,7 @@ object SearchPlus {
     * 10 rows; the relevant-set aggregate is one term-filtered pass.
     */
   def qEvalMap(spark: SparkSession, sfDir: String): DataFrame = {
-    val ranked = Search.lexScores(spark, sfDir)
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
-      .withColumn("r", row_number().over(
-        Window.orderBy(desc("score"), asc("doc_id"))))
+    val ranked = topKRanks(Search.lexScores(spark, sfDir), 10)
     val rel = Tables.postings(spark, sfDir)
       .filter(col("term") === "spark" && col("tf") >= 2)
       .select("doc_id")
@@ -469,10 +442,10 @@ object SearchPlus {
     * the same ascending-d order (one tiny ordered aggregate).
     */
   def qRankRbo(spark: SparkSession, sfDir: String): DataFrame = {
-    val lex = rankedList(Search.lexScores(spark, sfDir), "score")
+    val lex = topKRanks(Search.lexScores(spark, sfDir), FuseK, "score")
       .filter(col("r") <= RboDepth)
       .select(col("doc_id"), col("r").as("ra"))
-    val sem = rankedList(vsmScoredM(spark, sfDir), "cos")
+    val sem = topKRanks(vsmScoredM(spark, sfDir), FuseK, "cos")
       .filter(col("r") <= RboDepth)
       .select(col("doc_id"), col("r").as("rb"))
     // a pair's intersection entry depth = max(ra, rb); ≤10 rows survive
@@ -620,7 +593,7 @@ object SearchPlus {
   }
 
   val qTopicLoddsSql: String =
-    s"""WITH tok AS (${Search.tokSqlPublic}),
+    s"""WITH tok AS (${Search.tokSql}),
       |st AS (SELECT d.source, t.term, count(*) AS cst
       |  FROM tok t JOIN documents d USING (doc_id)
       |  GROUP BY d.source, t.term),

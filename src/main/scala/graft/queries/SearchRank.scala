@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import Search.{tokSql, topK, topKRanks}
 
 /** Round-8 ranking & index-layout extensions (SURVEY.md §2.19a):
   * skip-pointer layout, impact-ordered postings, field-weighted BM25F,
@@ -17,9 +18,6 @@ import graft.Tables
   * a fixed-association double landing on round(4).
   */
 object SearchRank {
-
-  private val tokSql =
-    "SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents"
 
   // ───────────────────── skip-pointer layout ─────────────────────
 
@@ -116,36 +114,18 @@ object SearchRank {
     * weight 2; body = the rest, weight 1) for the {spark, join}
     * conjunctive query: the weighted tf is the exact integer
     * 2·tf_title + tf_body, then the standard BM25 saturation
-    * (k1 = 1.2, b = 0.75) over it, per-term scores summed in FIXED
-    * a + b order (2 addends — IEEE-commutative across engines). Every
+    * (k1 = 1.2, b = 0.75) over it, scored by [[Search.bm25ScoredOn]]
+    * with the weighted tf in its `tf` column, and the 2 per-term scores
+    * summed per doc (2 addends — IEEE-commutative across engines). Every
     * input is a column of the two query terms' postings: 2·tf_title +
     * tf_body = tf + |positions < 5|, with df and dl beside it; avgdl and
-    * N are literals. Constants spelled identically to
-    * [[Search.bm25ScoredOn]]'s association.
+    * N are literals.
     */
   def qBm25f(spark: SparkSession, sfDir: String): DataFrame = {
-    val cs = Tables.corpusStats(spark, sfDir)
-    val scored = Tables.postings(spark, sfDir)
+    val weighted = Tables.postings(spark, sfDir)
       .filter(col("term").isin("spark", "join"))
-      .withColumn("wtf",
-        col("tf") + size(filter(col("pos"), p => p < 5)))
-      .withColumn("idf",
-        log((lit(cs.nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1.0))
-      .withColumn("s",
-        col("idf") * ((col("wtf") * 2.2) /
-          (col("wtf") + (col("dl") * 0.75 / lit(cs.avgdl) + 0.25) * 1.2)))
-    // both-terms AND via one conditional aggregation (round 12): the
-    // a⋈b self-join consumed `scored` twice, re-running the whole
-    // score chain per side; (doc_id, term) is unique so the
-    // conditional min IS the single per-term score, and requiring both
-    // non-null is exactly the inner join
-    scored.groupBy("doc_id")
-      .agg(min(when(col("term") === "spark", col("s"))).as("sa"),
-        min(when(col("term") === "join", col("s"))).as("sb"))
-      .filter(col("sa").isNotNull && col("sb").isNotNull)
-      .select(col("doc_id"), round(col("sa") + col("sb"), 4).as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+      .withColumn("tf", col("tf") + size(filter(col("pos"), p => p < 5)))
+    topK(Search.allTerms(Search.bm25ScoredOn(spark, sfDir, weighted), 2), 10)
   }
 
   val qBm25fSql: String =
@@ -186,17 +166,17 @@ object SearchRank {
     * score_t = (tfn·log2(tfn/λ) + (λ − tfn)·log2(e) + 0.5·log2(2π·tfn))
     * / (tfn + 1). Every constant is spelled with the SAME expression
     * text on both engines (log2(exp(1.0)), pi()) so the IEEE paths
-    * agree; the 2 per-term scores sum in fixed a + b order.
+    * agree; the 2 per-term scores sum per doc (2 addends, the same
+    * double in either order).
     */
   def qSearchPl2(spark: SparkSession, sfDir: String): DataFrame = {
     // ctf comes from the term dictionary and the corpus scalars are
     // literals: the score chain has no join and no window
     val cs = Tables.corpusStats(spark, sfDir)
-    val ctf = Search.ctfOf(spark, sfDir, Seq("spark", "join"))
+    val terms = Seq("spark", "join")
     val scored = Tables.postings(spark, sfDir)
-      .filter(col("term").isin("spark", "join"))
-      .withColumn("ctf", when(col("term") === "spark",
-        ctf.getOrElse("spark", 0L)).otherwise(ctf.getOrElse("join", 0L)))
+      .filter(col("term").isin(terms: _*))
+      .withColumn("ctf", Search.ctfOf(spark, sfDir, terms))
       .withColumn("avgdl", lit(cs.avgdl))
       .withColumn("n_docs", lit(cs.nDocs))
       .withColumn("tfn", expr("tf * log2(1 + avgdl / dl)"))
@@ -204,18 +184,7 @@ object SearchRank {
       .withColumn("s", expr(
         """(tfn * log2(tfn / lam) + (lam - tfn) * log2(exp(1.0D))
           | + 0.5D * log2(2.0D * pi() * tfn)) / (tfn + 1.0D)""".stripMargin))
-    // both-terms AND via one conditional aggregation (round 12): the
-    // a⋈b self-join consumed `scored` twice, re-running the whole
-    // score chain per side; (doc_id, term) is unique so the
-    // conditional min IS the single per-term score, and requiring both
-    // non-null is exactly the inner join
-    scored.groupBy("doc_id")
-      .agg(min(when(col("term") === "spark", col("s"))).as("sa"),
-        min(when(col("term") === "join", col("s"))).as("sb"))
-      .filter(col("sa").isNotNull && col("sb").isNotNull)
-      .select(col("doc_id"), round(col("sa") + col("sb"), 4).as("score"))
-      .orderBy(desc("score"), asc("doc_id"))
-      .limit(10)
+    topK(Search.allTerms(scored, 2), 10)
   }
 
   val qSearchPl2Sql: String =
@@ -263,34 +232,16 @@ object SearchRank {
     * fusion never touches the corpus again.
     */
   def qSearchHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    // each arm cuts to top-K with orderBy+limit (TakeOrdered — a
-    // per-partition heap + driver merge, never a global sort) and only
-    // THEN ranks with a window: the window sees ≤ K rows, so the
-    // single-partition sort it implies is constant-size at any scale
-    val wLex = Window.orderBy(desc("score"), asc("doc_id"))
-    val lex = Search.lexScores(spark, sfDir)
-      .orderBy(desc("score"), asc("doc_id")).limit(RrfK)
-      .withColumn("lrank", row_number().over(wLex).cast("long"))
-      .select(col("doc_id"), col("lrank"))
-    val emb = Tables.t(spark, sfDir, "embeddings")
-      .withColumn("e", col("embedding").cast("array<double>"))
-    val q = emb.filter(col("vec_id") === 0).select(col("e").as("qe"))
-    val wSem = Window.orderBy(desc("cos"), asc("doc_id"))
-    val sem = emb.filter(col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id").as("doc_id"),
-        round(graft.functions.VectorOps.cosine(col("e"), col("qe")), 4)
-          .as("cos"))
-      .orderBy(desc("cos"), asc("doc_id")).limit(RrfK)
-      .withColumn("srank", row_number().over(wSem).cast("long"))
-      .select(col("doc_id"), col("srank"))
-    lex.join(sem, Seq("doc_id"), "full_outer")
-      .select(col("doc_id"), col("lrank"), col("srank"),
+    // each arm is a top-K cut ranked after the cut (Search.topKRanks)
+    val lex = topKRanks(Search.lexScores(spark, sfDir), RrfK, rank = "lrank")
+    val sem = topKRanks(Pipeline.queryCosines(spark, sfDir)
+      .withColumnRenamed("vec_id", "doc_id"), RrfK, "cos", "srank")
+    topK(lex.join(sem, Seq("doc_id"), "full_outer")
+      .select(col("doc_id"), col("lrank").cast("long").as("lrank"),
+        col("srank").cast("long").as("srank"),
         (coalesce(expr(s"1000000000 div ($RrfC + lrank)"), lit(0L)) +
           coalesce(expr(s"1000000000 div ($RrfC + srank)"), lit(0L)))
-          .as("rrf_e9"))
-      .orderBy(desc("rrf_e9"), asc("doc_id"))
-      .limit(10)
+          .as("rrf_e9")), 10, "rrf_e9")
   }
 
   val qSearchHybridSql: String =

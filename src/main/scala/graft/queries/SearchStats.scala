@@ -232,9 +232,7 @@ object SearchStats {
     * evaluation ops rank from, so this op is its top-10 cut.
     */
   def qVsmCosine(spark: SparkSession, sfDir: String): DataFrame =
-    SearchPlus.vsmScoredM(spark, sfDir)
-      .orderBy(desc("cos"), asc("doc_id"))
-      .limit(10)
+    Search.topK(SearchPlus.vsmScoredM(spark, sfDir), 10, "cos")
 
   val qVsmCosineSql: String =
     """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term

@@ -256,6 +256,34 @@ class ContractSpec extends SparkSpecBase {
       s"vocabulary re-derived from the postings outside Tables.lexicon: $found")
   }
 
+  test("the BM25 expression is spelled once, in Search.bm25ScoredOn (source-level)") {
+    // every BM25-family op scores through bm25ScoredOn (BM25F passes its
+    // weighted tf as `tf`), so a second copy of the saturation
+    // `tf * (k1 + 1)` = `* 2.2` can drift from the oracle alone. Oracle
+    // SQL lines (the `|` stripMargin lines) are skipped.
+    val main = new java.io.File(
+      sys.props.getOrElse("user.dir", "."), "src/main/scala/graft")
+    assume(main.isDirectory,
+      s"source tree not visible from ${sys.props.get("user.dir")}; " +
+        "skipping source-level BM25 scan")
+    val defRe = """\bdef (\w+)""".r
+    val sites = scalaFiles(main).flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.indices.filter(i => lines(i).contains("* 2.2")
+          && !lines(i).trim.startsWith("|"))
+        .map { i =>
+          val owner = (i to 0 by -1).iterator
+            .flatMap(j => defRe.findFirstMatchIn(lines(j)).map(_.group(1)))
+            .nextOption().getOrElse("")
+          s"${main.toPath.relativize(f.toPath)}:${i + 1} (def $owner)"
+        }
+    }
+    assert(sites.size == 1 && sites.head.matches(
+        """queries/Search\.scala:\d+ \(def bm25ScoredOn\)"""),
+      s"BM25 saturation spelled outside Search.bm25ScoredOn: $sites")
+  }
+
   test("session setup lives in graft.Session (source-level)") {
     // Session.local is the one benched session config; a hand-copied
     // builder drifts from it (core count, coalescing, extensions). Smoke

@@ -559,14 +559,26 @@ class PlanAuditSpec extends SparkSpecBase {
   }
 
   test("q_search_qld stays term-filtered: no corpus-wide posting join") {
-    // one doc-keyed conditional aggregate over the two terms' postings;
-    // ctf comes from the term dictionary as a literal
+    // each posting of the two terms is scored in-row, then one doc-keyed
+    // aggregate; ctf comes from the term dictionary as a literal
     val p = ownPlan("q_search_qld")
     assert(p.linesIterator.exists(l => l.contains("InMemoryTableScan")
         && l.contains("IN (spark,join)")),
       s"the postings scan lost its term predicate:\n$p")
     assert(!p.contains("Join"), s"q_search_qld joins the postings:\n$p")
     assert(!p.contains("Window"), s"q_search_qld windows the postings:\n$p")
+  }
+
+  test("the per-doc combine counts matched terms without a distinct aggregate") {
+    // (term, doc_id) is unique in the postings, so count(1) is the
+    // number of matched terms; a distinct count plans an extra
+    // (doc_id, term) aggregation level, or an Expand beside other
+    // distinct aggregates
+    Seq("q_search_and", "q_search_prefix", "q_bm25_prf").foreach { q =>
+      val p = ownPlan(q)
+      assert(!p.contains("Expand") && !p.contains("count(distinct"),
+        s"$q counts matched terms with a distinct aggregate:\n$p")
+    }
   }
 
   test("q_search_wand and q_vsm_cosine make one pass: no join, no rescan") {
