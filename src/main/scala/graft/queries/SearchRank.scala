@@ -30,8 +30,7 @@ object SearchRank {
     * ceil(sqrt(int)) is correctly-rounded IEEE on both engines.
     */
   def qIdxSkiplist(spark: SparkSession, sfDir: String): DataFrame = {
-    val top = Tables.lexicon(spark, sfDir)
-      .orderBy(desc("df"), asc("term")).limit(10)
+    val top = topK(Tables.lexicon(spark, sfDir), 10, "df", "term")
     val wT = Window.partitionBy("term").orderBy("doc_id")
     Tables.postings(spark, sfDir).join(broadcast(top.select("term")), "term")
       .withColumn("pos", row_number().over(wT))
@@ -72,8 +71,7 @@ object SearchRank {
     * are ≤8 rows; everything else is posting-bounded aggregation.
     */
   def qIdxImpact(spark: SparkSession, sfDir: String): DataFrame = {
-    val top = Tables.lexicon(spark, sfDir)
-      .orderBy(desc("df"), asc("term")).limit(5)
+    val top = topK(Tables.lexicon(spark, sfDir), 5, "df", "term")
     val tiers = Tables.postings(spark, sfDir)
       .join(broadcast(top.select("term")), "term")
       .withColumn("impact", least(col("tf"), lit(8L)))
@@ -232,7 +230,6 @@ object SearchRank {
     * fusion never touches the corpus again.
     */
   def qSearchHybrid(spark: SparkSession, sfDir: String): DataFrame = {
-    // each arm is a top-K cut ranked after the cut (Search.topKRanks)
     val lex = topKRanks(Search.lexScores(spark, sfDir), RrfK, rank = "lrank")
     val sem = topKRanks(Pipeline.queryCosines(spark, sfDir)
       .withColumnRenamed("vec_id", "doc_id"), RrfK, "cos", "srank")
