@@ -17,10 +17,17 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *    a query that throws prints `ERROR: …` and the run moves on.
   *  - time: 3 timed count() runs, one line per query.
   *  - prof: a warm run, then a profiled one: total, task count and the
-  *    number of classes the warm run compiled (its codegen footprint),
-  *    one line per Spark job (ms, stages) and, for s_* ids, one per
-  *    micro-batch (rows, durationMs), so loop and stream costs can be
-  *    attributed instead of guessed.
+  *    number of classes the warm run compiled, one line per Spark job
+  *    (ms, stages) and, for s_* ids, one per micro-batch (rows,
+  *    durationMs), so loop and stream costs can be attributed instead of
+  *    guessed.
+  *    `compiles=` is the op's codegen footprint: classes already in
+  *    Spark's JVM-wide generated-class cache are not compiled again, so
+  *    over a list of ids each class counts once, for the first id that
+  *    needs it. That holds while the list fits the cache cap the JVM's
+  *    first [[GraftExtensions.install]] set; past it the count also holds
+  *    evicted classes compiled again. A class compiled under a new class
+  *    loader (each streaming query's executor-side loader) counts again.
   * Caches are not cleared between runs, so `time` and `prof` time only
   * the memo lookup for an op whose whole result is memoized
   * (q_dedup_cluster), once its first run is done.

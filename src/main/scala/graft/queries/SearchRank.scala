@@ -21,18 +21,28 @@ object SearchRank {
 
   // ───────────────────── skip-pointer layout ─────────────────────
 
+  /** The postings of the k highest-df terms: the top-k cut (a
+    * TakeOrdered over the term dictionary) is collected and filters the
+    * postings as a literal `term IN (…)`, so the in-memory scan prunes
+    * every batch outside those terms and no join is planned. */
+  private def topDfPostings(spark: SparkSession, sfDir: String,
+      k: Int): DataFrame = {
+    val terms = topK(Tables.lexicon(spark, sfDir), k, "df", "term")
+      .select("term").collect().map(_.getString(0))
+    Tables.postings(spark, sfDir).filter(col("term").isin(terms.toSeq: _*))
+  }
+
   /** Skip pointers for the 10 highest-df posting lists: every ⌈√df⌉-th
     * doc_id in the sorted posting list becomes a skip entry (the classic
     * √df spacing that balances skip hops against linear scans). The
     * positions window partitions on the TERM — one posting list per
-    * partition, the standard index-build partition — and the top-10 cut
-    * is a TakeOrdered over the term dictionary.
+    * partition, the standard index-build partition — over
+    * [[topDfPostings]].
     * ceil(sqrt(int)) is correctly-rounded IEEE on both engines.
     */
   def qIdxSkiplist(spark: SparkSession, sfDir: String): DataFrame = {
-    val top = topK(Tables.lexicon(spark, sfDir), 10, "df", "term")
     val wT = Window.partitionBy("term").orderBy("doc_id")
-    Tables.postings(spark, sfDir).join(broadcast(top.select("term")), "term")
+    topDfPostings(spark, sfDir, 10)
       .withColumn("pos", row_number().over(wT))
       .withColumn("skip_len",
         ceil(sqrt(col("df").cast("double"))).cast("long"))
@@ -68,12 +78,11 @@ object SearchRank {
     * cumulative doc count down the impact tiers. A WAND/MaxScore
     * traversal reads tiers top-down and stops when the cumulative bound
     * is met; this op emits exactly that layout. Per-term tier windows
-    * are ≤8 rows; everything else is posting-bounded aggregation.
+    * are ≤8 rows; everything else is aggregation over
+    * [[topDfPostings]].
     */
   def qIdxImpact(spark: SparkSession, sfDir: String): DataFrame = {
-    val top = topK(Tables.lexicon(spark, sfDir), 5, "df", "term")
-    val tiers = Tables.postings(spark, sfDir)
-      .join(broadcast(top.select("term")), "term")
+    val tiers = topDfPostings(spark, sfDir, 5)
       .withColumn("impact", least(col("tf"), lit(8L)))
       .groupBy("term", "impact")
       .agg(count(lit(1)).as("n_docs"),

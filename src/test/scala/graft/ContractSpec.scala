@@ -305,6 +305,22 @@ class ContractSpec extends SparkSpecBase {
     }
   }
 
+  test("the codegen cache is sized only by GraftExtensions (source-level)") {
+    // the cache is JVM-wide and built once; GraftExtensions.install sizes
+    // it for every session factory, so a second owner (a builder conf in
+    // Session.local, a scoped conf in Tables) would fork that decision
+    val main = new java.io.File(
+      sys.props.getOrElse("user.dir", "."), "src/main/scala")
+    assume(main.isDirectory,
+      s"source tree not visible from ${sys.props.get("user.dir")}; " +
+        "skipping source-level codegen-cache scan")
+    val re =
+      """codegen\.cache\.maxEntries|CODEGEN_CACHE_MAX_ENTRIES|withExistingConf""".r
+    val found = hits(main, scalaFiles(main), re)
+      .filterNot(_.startsWith("graft/GraftExtensions.scala:"))
+    assert(found.isEmpty, s"codegen cache sized outside GraftExtensions: $found")
+  }
+
   test("search stats come from the corpus-scalar memo (source-level)") {
     // n_docs and avgdl are memoized once per sfDir by
     // Tables.corpusStats and inlined as literals; a query that derives

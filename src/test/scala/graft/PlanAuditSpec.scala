@@ -1157,14 +1157,32 @@ class PlanAuditSpec extends SparkSpecBase {
 
   // ── round-8 wave pins ──
 
-  test("q_idx_skiplist: positions window partitions per term, top cut is TakeOrdered") {
+  /** The top-df term list is collected from the term dictionary and
+    * filters the postings as literals: the in-memory scan carries the
+    * `term IN (…)` predicate and no join is planned. */
+  private def assertTermFiltered(q: String, p: String): Unit = {
+    assert(p.linesIterator.exists(l => l.contains("InMemoryTableScan")
+        && l.contains(" IN (")),
+      s"$q's postings scan lost its term predicate:\n$p")
+    assert(!p.contains("Join"), s"$q joins the postings:\n$p")
+  }
+
+  test("q_idx_skiplist: term-filtered postings, positions window partitions per term") {
     val p = ownPlan("q_idx_skiplist")
+    assertTermFiltered("q_idx_skiplist", p)
     val posLine = p.linesIterator
       .find(l => l.contains("row_number()")).getOrElse("")
     assert(posLine.contains("term"),
       s"positions window lost its term partition:\n$p")
-    assert(p.contains("TakeOrderedAndProject"),
-      s"top-10 df cut is a full sort:\n$p")
+  }
+
+  test("q_idx_impact: term-filtered postings, tier window partitions per term") {
+    val p = ownPlan("q_idx_impact")
+    assertTermFiltered("q_idx_impact", p)
+    val cumLine = p.linesIterator
+      .find(l => l.contains("Window") && l.contains("n_docs")).getOrElse("")
+    assert(cumLine.contains("term"),
+      s"cumulative tier window lost its term partition:\n$p")
   }
 
   test("q_kmv_distinct: the rn<=64 filter compiles to WindowGroupLimit") {
