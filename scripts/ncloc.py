@@ -41,8 +41,12 @@ def code_lines(text):
                 rest = s[2:]
                 continue
             code = True
-            # a block opened after code on the same line still runs on
+            # a block opened after code on the same line still runs on,
+            # unless a `//` comment starts first
             start = s.find("/*")
+            line_comment = s.find("//")
+            if 0 <= line_comment < start:
+                start = -1
             rest = s[start + 2:] if start >= 0 else ""
             in_block = start >= 0
         n += code
@@ -75,4 +79,10 @@ def main(argv):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    try:
+        main(sys.argv[1:])
+        sys.stdout.flush()
+    except BrokenPipeError:
+        # the reader closed stdout (`| head`); point stdout at devnull so
+        # the interpreter's own flush at exit does not raise again
+        os.dup2(os.open(os.devnull, os.O_WRONLY), sys.stdout.fileno())

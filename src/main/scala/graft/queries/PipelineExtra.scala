@@ -47,17 +47,12 @@ object PipelineExtra {
   }
 
   // The capped sample feeds q_dedup_ngram AND q_dedup_contain (and each
-  // bench run re-executes its df aggregate + join) — persist once per
-  // (session, sfDir), the Tables.tokens discipline. Registered with the
-  // round-11 cache lifecycle so clearCaches() releases it.
-  private val sampleShingleCache = Tables.registerCache()
-
-  private def sampleShingles(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.memo(sampleShingleCache, spark, sfDir)(
-      cappedShingles(
-        Tables.shingles(spark, sfDir)
-          .filter(col("doc_id") % 10 === 0).select("doc_id", "sh"),
-        ShingleDfCap).persist())
+  // bench run re-executes its df aggregate + join) — persisted once.
+  private val sampleShingles = Tables.memo { (spark, sfDir) =>
+    cappedShingles(
+      Tables.shingles(spark, sfDir)
+        .filter(col("doc_id") % 10 === 0).select("doc_id", "sh"),
+      ShingleDfCap).persist()
   }
 
   /** DuckDB mirror of [[sampleShingles]] — `shf(doc_id, sh)` after the

@@ -128,19 +128,13 @@ object PipelineGraph {
 
   // The (doc_id, cluster) relation feeds TWO operators (duplicate
   // clustering, priority canonical selection) — run the propagation loop
-  // once per (session, sfDir), like the pairs cache it consumes.
-  private val clusterCache =
-    graft.Tables.registerCache()
-
+  // once, like the pairs memo it consumes.
   /** Connected-component labels over the verified near-dup graph (edges =
     * candidate pairs at ≥ [[EdgeThreshold]] signature agreement, nodes =
-    * the §2.10 shared sample). Memoized per (session, sfDir). */
-  private[graft] def dedupClusters(
-      spark: SparkSession, sfDir: String): DataFrame = {
-    graft.Tables.memo(clusterCache, spark, sfDir) {
-      connectedComponents(sampleNodes(spark, sfDir), nearDupEdges(spark, sfDir))
-        .persist()
-    }
+    * the §2.10 shared sample). */
+  private[graft] val dedupClusters = Tables.memo { (spark, sfDir) =>
+    connectedComponents(sampleNodes(spark, sfDir), nearDupEdges(spark, sfDir))
+      .persist()
   }
 
   /** Near-dup clusters over the §2.10 shared sample: minhash-LSH candidate

@@ -124,31 +124,36 @@ object PipelineSketch {
   // the query function inside every timed run — unmemoized, one bench
   // row = 6 corpus shingle passes (round-11 verdict #1: the row read a
   // 212.5 s median under load with a 1.97 s idle floor, the same
-  // recompute-amplification shape as round-8's q_boilerplate). Persist
-  // once per (session, sfDir) like Tables.shingles.
-  private val shingle5Cache = Tables.registerCache()
-
+  // recompute-amplification shape as round-8's q_boilerplate). Persisted
+  // like Tables.shingles.
   /** Benchmark side: 5-gram shingle hashes of the `src0` documents —
     * the eval-set proxy whose content must not leak into training. */
-  private def shingles(spark: SparkSession, sfDir: String): DataFrame = {
-    Tables.memo(shingle5Cache, spark, sfDir) {
-      val words = split(col("text"), " ")
-      Tables.t(spark, sfDir, "documents")
-        // sequence(0, n) flips to a DESCENDING range when n < 0 — guard
-        // out sub-5-word docs instead of generating bogus slice starts
-        .filter(size(words) >= 5)
-        .select(col("doc_id"), col("source"), explode(
-          transform(sequence(lit(0), size(words) - 5),
-            i => xxhash64(concat_ws(" ", slice(words, i + 1, lit(5))))))
-          .as("sh"))
-        .persist()
-    }
+  private val shingles = Tables.memo { (spark, sfDir) =>
+    val words = split(col("text"), " ")
+    Tables.t(spark, sfDir, "documents")
+      // sequence(0, n) flips to a DESCENDING range when n < 0 — guard
+      // out sub-5-word docs instead of generating bogus slice starts
+      .filter(size(words) >= 5)
+      .select(col("doc_id"), col("source"), explode(
+        transform(sequence(lit(0), size(words) - 5),
+          i => xxhash64(concat_ws(" ", slice(words, i + 1, lit(5))))))
+        .as("sh"))
+      .persist()
   }
 
-  // The built bloom bytes are immutable per-(session, sfDir) model state
-  // — the langProfCache discipline: the ~100 KB sketch builds ONCE and
-  // every re-invocation (3 bench runs + verify) reuses it.
-  private val bloomCache = Tables.registerAuxCache[Array[Byte]]()
+  // The built bloom bytes are immutable model state — like the language
+  // profile, the ~100 KB sketch builds ONCE and every re-invocation
+  // (3 bench runs + verify) reuses it. `might_contain` requires a
+  // CONSTANT filter (Spark's runtime-filter contract): materialize the
+  // sketch driver-side and embed it as a literal — the same bounded
+  // collect-and-broadcast a scalar subquery performs, independent of
+  // corpus size by construction.
+  private val bloomBytes = Tables.memo { (spark, sfDir) =>
+    shingles(spark, sfDir).filter(col("source") === "src0")
+      .agg(graft.functions.BloomOps
+        .bloomFilterAgg(col("sh"), 100000L, 800000L).as("bf"))
+      .head().getAs[Array[Byte]](0)
+  }
 
   /** Bloom-filter contamination screen: benchmark (src0) shingle hashes
     * aggregate into one bloom filter (mergeable bit-OR — order-free and
@@ -160,16 +165,7 @@ object PipelineSketch {
     */
   def qContaminationBloom(spark: SparkSession, sfDir: String): DataFrame = {
     val sh = shingles(spark, sfDir)
-    // `might_contain` requires a CONSTANT filter (Spark's runtime-filter
-    // contract): materialize the ~100 KB sketch driver-side and embed it
-    // as a literal — the same bounded collect-and-broadcast a scalar
-    // subquery performs, independent of corpus size by construction.
-    val bf = Tables.memo(bloomCache, spark, sfDir) {
-      sh.filter(col("source") === "src0")
-        .agg(graft.functions.BloomOps
-          .bloomFilterAgg(col("sh"), 100000L, 800000L).as("bf"))
-        .head().getAs[Array[Byte]](0)
-    }
+    val bf = bloomBytes(spark, sfDir)
     sh.filter(col("source") =!= "src0")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_shingles"),

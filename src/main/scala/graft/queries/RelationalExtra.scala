@@ -384,6 +384,25 @@ object RelationalExtra {
       |  count(DISTINCT doc_id // 64) AS n_words
       |FROM documents GROUP BY lang ORDER BY lang""".stripMargin
 
+  // One fact-table pass: per-order sorted distinct brand sets via a
+  // partial-aggregable collect_set (ONE shuffle, map-side combined).
+  // Margins, the order total, and the pair expansion all derive from
+  // this TINY table (|orders| rows × ≤25 brands), persisted so the
+  // three branches don't rescan the fact side — pairs expand IN-ROW
+  // (sorted array, i<j) instead of through an ok-keyed self-join, so
+  // no corpus-sized join exists anywhere in the plan. The oracle keeps
+  // the self-join formulation: two algorithms, one answer.
+  private val brandBaskets = graft.Tables.memo { (spark, sfDir) =>
+    t(spark, sfDir, "lineitem")
+      .select(col("l_orderkey").as("ok"), col("l_partkey"))
+      .join(t(spark, sfDir, "part")
+        .select(col("p_partkey"), col("p_brand").as("brand")),
+        col("l_partkey") === col("p_partkey"))
+      .groupBy("ok")
+      .agg(sort_array(collect_set(col("brand"))).as("brands"))
+      .persist()
+  }
+
   /** Market-basket brand affinity: top-20 brand pairs by lift (observed
     * co-basket frequency over the independence expectation, integer
     * ppm). The self-join pairs only WITHIN an order — per-order pair
@@ -392,30 +411,8 @@ object RelationalExtra {
     * margin counts and order total are brand-bounded broadcasts. Lift is
     * exact integer arithmetic: (c12 · N · 10⁶) div (c1 · c2).
     */
-  // Persisted per (session, sfDir) like PipelinePlus.pairsCache: a fresh
-  // .persist() per invocation would leak one cached copy into storage
-  // memory on every bench/test run of this query (round-3 ADVICE).
-  private val basketsCache =
-    graft.Tables.registerCache()
-
   def qBasketLift(spark: SparkSession, sfDir: String): DataFrame = {
-    // One fact-table pass: per-order sorted distinct brand sets via a
-    // partial-aggregable collect_set (ONE shuffle, map-side combined).
-    // Margins, the order total, and the pair expansion all derive from
-    // this TINY table (|orders| rows × ≤25 brands), persisted so the
-    // three branches don't rescan the fact side — pairs expand IN-ROW
-    // (sorted array, i<j) instead of through an ok-keyed self-join, so
-    // no corpus-sized join exists anywhere in the plan. The oracle keeps
-    // the self-join formulation: two algorithms, one answer.
-    val baskets = graft.Tables.memo(basketsCache, spark, sfDir)(
-      t(spark, sfDir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey"))
-        .join(t(spark, sfDir, "part")
-          .select(col("p_partkey"), col("p_brand").as("brand")),
-          col("l_partkey") === col("p_partkey"))
-        .groupBy("ok")
-        .agg(sort_array(collect_set(col("brand"))).as("brands"))
-        .persist())
+    val baskets = brandBaskets(spark, sfDir)
     val n = baskets.select(count(lit(1)).as("n_orders"))
     val cb = baskets.select(explode(col("brands")).as("brand"))
       .groupBy("brand").agg(count(lit(1)).as("c"))

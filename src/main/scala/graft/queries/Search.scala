@@ -268,14 +268,10 @@ object Search {
     * aggregate + stat joins) and Catalyst does not reuse aggregates
     * across aliased copies (round-7 verdict item: the eval family
     * rebuilt this list per query). */
-  private val lexScoresCache =
-    graft.Tables.registerCache()
-
-  private[queries] def lexScores(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memo(lexScoresCache, spark, sfDir) {
-      Tables.localCheckpoint(
-        allTerms(bm25Scored(spark, sfDir, Seq("spark", "join")), 2))
-    }
+  private[queries] val lexScores = Tables.memo { (spark, sfDir) =>
+    Tables.localCheckpoint(
+      allTerms(bm25Scored(spark, sfDir, Seq("spark", "join")), 2))
+  }
 
   /** BM25-ranked conjunctive-ish query (k1=1.2, b=0.75) over the same
     * terms as q_search_and — the standard upgrade over raw TF-IDF: term
@@ -345,20 +341,9 @@ object Search {
        |SELECT doc_id, count(DISTINCT term) AS nt, round(sum(s), 4) AS score
        |FROM fin GROUP BY doc_id ORDER BY score DESC, doc_id LIMIT 10""".stripMargin
 
-  /** Document-document similarity: EXACT cosine over TF-IDF term vectors,
-    * re-scored on the memoized minhash-LSH candidate pairs
-    * ([[PipelinePlus.minhashPairs]]) of the shared doc_id%10 sample.
-    * Round 3 judged the previous term-keyed self-join `weak` — hot-term
-    * posting lists skew |docs-with-term|² at 100× — so pair generation is
-    * now bucket-bounded (O(Σ bucket²) by construction) and the dot
-    * product runs only over candidate pairs' shared terms. Norms stay
-    * over each doc's FULL sampled term vector, so the score is the true
-    * cosine of the TF-IDF vectors, computed for candidate pairs only.
-    */
   // The per-doc TF-IDF vector table (m: term → score map, nrm: l2 norm;
   // one row per sampled doc) is a BUILD-ONCE index artifact like
-  // Tables.tokens and PipelinePlus.minhashPairs: memoize per (session,
-  // sfDir) under the same lock discipline. Checkpoint eagerly (the
+  // Tables.tokens and PipelinePlus.minhashPairs. Checkpoint eagerly (the
   // minhashSig precedent): the d1/d2 pair joins are two aliased copies
   // of this subtree and Catalyst does not reuse the exchange across
   // them — un-materialized, the ENTIRE tf-idf DAG (tf agg + df agg +
@@ -370,19 +355,25 @@ object Search {
   // interpreted higher-order fold PER PAIR (|cand| ≫ |docs|: 92k vs 500
   // on this corpus) — which is also exactly where the oracle SQL
   // computes them (its nrm CTE).
-  private val docVecCache =
-    graft.Tables.registerCache()
+  private val docVectors = Tables.memo { (spark, sfDir) =>
+    Tables.localCheckpoint(tfidfRaw(spark, sfDir)
+      .filter(col("doc_id") % 10 === 0)
+      .groupBy("doc_id")
+      .agg(map_from_entries(collect_list(struct(col("term"), col("score"))))
+        .as("m"),
+        sqrt(sum(col("score") * col("score"))).as("nrm")))
+  }
 
-  private def docVectors(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memo(docVecCache, spark, sfDir) {
-      Tables.localCheckpoint(tfidfRaw(spark, sfDir)
-        .filter(col("doc_id") % 10 === 0)
-        .groupBy("doc_id")
-        .agg(map_from_entries(collect_list(struct(col("term"), col("score"))))
-          .as("m"),
-          sqrt(sum(col("score") * col("score"))).as("nrm")))
-    }
-
+  /** Document-document similarity: EXACT cosine over TF-IDF term vectors,
+    * re-scored on the memoized minhash-LSH candidate pairs
+    * ([[PipelinePlus.minhashPairs]]) of the shared doc_id%10 sample.
+    * Round 3 judged the previous term-keyed self-join `weak` — hot-term
+    * posting lists skew |docs-with-term|² at 100× — so pair generation is
+    * now bucket-bounded (O(Σ bucket²) by construction) and the dot
+    * product runs only over candidate pairs' shared terms. Norms stay
+    * over each doc's FULL sampled term vector, so the score is the true
+    * cosine of the TF-IDF vectors, computed for candidate pairs only.
+    */
   def qDocSim(spark: SparkSession, sfDir: String): DataFrame = {
     // Gather each doc's sparse TF-IDF vector ONCE (the memoized
     // docVectors index), then join the candidate pairs twice on doc id

@@ -189,13 +189,9 @@ object SearchPlus {
     * consumers (q_vsm_cosine, RRF, interleave, RBO) each re-derived it
     * per execution. Output is |docs matching either term|-sized —
     * posting-bounded. */
-  private val vsmCache =
-    graft.Tables.registerCache()
-
-  private[queries] def vsmScoredM(spark: SparkSession, sfDir: String): DataFrame =
-    graft.Tables.memo(vsmCache, spark, sfDir) {
-      Tables.localCheckpoint(vsmScored(spark, sfDir))
-    }
+  private[queries] val vsmScoredM = Tables.memo { (spark, sfDir) =>
+    Tables.localCheckpoint(vsmScored(spark, sfDir))
+  }
 
   private def vsmScored(spark: SparkSession, sfDir: String): DataFrame = {
     val w = Search.tfidfRaw(spark, sfDir).select("doc_id", "term", "score")

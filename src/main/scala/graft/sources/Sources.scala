@@ -175,23 +175,14 @@ object Sources {
       .orderBy("o_orderpriority")
   }
 
-  private val bucketedCache =
-    graft.Tables.registerCache()
-
   /** The bucketed join itself, exposed so the spec can assert its plan is
-    * Exchange-free below the join. Memoized per (session, sfDir) under
-    * the Tables.memo lock: the build drops/creates FIXED catalog table
-    * names, so un-memoized concurrent callers (suites share the forked
-    * test JVM) could interleave one caller's DROP with the other's
-    * saveAsTable — and repeated callers would re-pay both bucketed
-    * writes per invocation.
+    * Exchange-free below the join. Memoized under the memo's build lock:
+    * the build drops/creates FIXED catalog table names, so un-memoized
+    * concurrent callers (suites share the forked test JVM) could
+    * interleave one caller's DROP with the other's saveAsTable — and
+    * repeated callers would re-pay both bucketed writes per invocation.
     */
-  def bucketedJoin(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.memo(bucketedCache, spark, sfDir) {
-      bucketedJoinUncached(spark, sfDir)
-    }
-
-  private def bucketedJoinUncached(spark: SparkSession, sfDir: String): DataFrame = {
+  val bucketedJoin = Tables.memo { (spark, sfDir) =>
     val dir = tmpDir("graft_bucket_")
     Seq("graft_li_b", "graft_od_b").foreach { tbl =>
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
@@ -227,6 +218,18 @@ object Sources {
       .orderBy("p_brand")
   }
 
+  // The 32-file fragmented directory is harness SETUP for the
+  // compaction under test, not the operator itself (the s_stream_file
+  // source-dir argument) — written once; every run still performs the
+  // full read→coalesce→write→verify compaction against a fresh output
+  // dir. (round 12)
+  private val fragmentedDir = Tables.memo { (spark, sfDir) =>
+    val d = tmpDir("graft_frag_")
+    Tables.t(spark, sfDir, "documents")
+      .repartition(32).write.mode("overwrite").parquet(d)
+    d
+  }
+
   /** Small-file compaction (round 3): the table-maintenance op every
     * long-lived warehouse needs — a fragmented table (here: 32 tiny
     * part files from a round-robin write) is rewritten into
@@ -238,23 +241,11 @@ object Sources {
     * concatenates a run of input files. Row fidelity is re-proved by
     * count + a content checksum on the re-read copy.
     */
-  // The 32-file fragmented directory is harness SETUP for the
-  // compaction under test, not the operator itself (the s_stream_file
-  // source-dir argument) — write it once per (session, sfDir); every
-  // run still performs the full read→coalesce→write→verify compaction
-  // against a fresh output dir. (round 12)
-  private val fragDirCache = Tables.registerAuxCache[String]()
-
   def qCompactFiles(spark: SparkSession, sfDir: String): DataFrame = {
     def nFiles(d: String): Long =
       new java.io.File(d).listFiles()
         .count(f => f.getName.startsWith("part-")).toLong
-    val fragmented = Tables.memo(fragDirCache, spark, sfDir) {
-      val d = tmpDir("graft_frag_")
-      Tables.t(spark, sfDir, "documents")
-        .repartition(32).write.mode("overwrite").parquet(d)
-      d
-    }
+    val fragmented = fragmentedDir(spark, sfDir)
     val compacted = tmpDir("graft_compact_")
     val small = spark.read.parquet(fragmented)
     val rows = small.count()

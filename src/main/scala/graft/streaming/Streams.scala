@@ -28,20 +28,18 @@ object Streams {
   // The whole s_* family feeds from the same immutable sorted array;
   // without memoization every operator (×3 bench runs each) re-pays the
   // parquet scan + driver collect + sort.
-  private val eventRowsCache = Tables.registerAuxCache[Array[Ev]]()
-
+  //
   // HARNESS-ONLY collect: MemoryStream is the driver contract's feed (the
   // streaming rows must flow through an in-memory source/sink), so the
   // test table is materialized on the driver BY DESIGN. A production
   // deployment swaps this scaffold for readStream on Kafka/files — the
   // query plans downstream are identical and never collect.
-  private def eventRows(spark: SparkSession, sfDir: String): Array[Ev] =
-    Tables.memo(eventRowsCache, spark, sfDir) {
-      import spark.implicits._
-      Tables.events(spark, sfDir)
-        .select("event_id", "ts", "user_id", "event_type", "value")
-        .as[Ev].collect().sortBy(_.event_id)
-    }
+  private val eventRows = Tables.memo { (spark, sfDir) =>
+    import spark.implicits._
+    Tables.events(spark, sfDir)
+      .select("event_id", "ts", "user_id", "event_type", "value")
+      .as[Ev].collect().sortBy(_.event_id)
+  }
 
   private def newStream(spark: SparkSession): MemoryStream[Ev] =
     MemoryStream[Ev](Encoders.product[Ev], spark)
@@ -423,24 +421,25 @@ object Streams {
       .orderBy("event_type")
   }
 
+  // The 3-part source directory is harness SETUP for the drain under
+  // test, not part of the streaming op — written once, like eventRows;
+  // every run still drains it through 3 fresh micro-batches with a fresh
+  // checkpoint.
+  private val fileSrcDir = Tables.memo { (spark, sfDir) =>
+    val d = graft.TmpDirs.create("graft_filestream_")
+    Tables.events(spark, sfDir).repartition(3).write.mode("overwrite")
+      .parquet(d)
+    d
+  }
+
   /** File-source streaming: readStream over a parquet directory with
     * Trigger.AvailableNow — the backfill-then-stop pattern for draining
     * a warehouse directory through a streaming topology. maxFilesPerTrigger
     * forces multiple micro-batches over the 3 part files.
     */
-  // The 3-part source directory is harness SETUP for the drain under
-  // test, not part of the streaming op — write it once per (session,
-  // sfDir) like eventRows; every run still drains it through 3 fresh
-  // micro-batches with a fresh checkpoint.
-  private val fileSrcCache = Tables.registerAuxCache[String]()
-
   def sStreamFile(spark: SparkSession, sfDir: String): DataFrame = {
     val ev = graft.Tables.events(spark, sfDir)
-    val dir = Tables.memo(fileSrcCache, spark, sfDir) {
-      val d = graft.TmpDirs.create("graft_filestream_")
-      ev.repartition(3).write.mode("overwrite").parquet(d)
-      d
-    }
+    val dir = fileSrcDir(spark, sfDir)
     run(spark, spark.readStream
       .schema(ev.schema)
       .option("maxFilesPerTrigger", "1")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Dataset
 import org.apache.spark.storage.StorageLevel
 
 import graft.queries.SearchStats
@@ -13,11 +14,11 @@ import graft.queries.SearchStats
   * loop-internal localCheckpoint RDDs that DataFrame.unpersist cannot
   * reach — whichever owner holds them: the session owner (memo builds,
   * direct calls that bypass SparkEntry) or an invocation owner on any
-  * thread — plus the postings memo, the term dictionary built on it and
-  * the corpus-scalar aux cache,
-  * and must NOT touch anything the HOST application pinned
-  * itself (a blanket sweep would permanently break a host-owned
-  * localCheckpointed RDD: its blocks cannot be recomputed).
+  * thread — plus every memo (the postings, the term dictionary built on
+  * them, the corpus scalars and the rest), and must NOT touch anything
+  * the HOST application pinned itself (a blanket sweep would
+  * permanently break a host-owned localCheckpointed RDD: its blocks
+  * cannot be recomputed).
   */
 class CacheLifecycleSpec extends SparkSpecBase {
 
@@ -105,5 +106,26 @@ class CacheLifecycleSpec extends SparkSpecBase {
       "post-clear rebuild diverged from the pre-clear answer")
     hostRdd.unpersist(true)
     hostCkpt.unpersist(true)
+  }
+
+  test("clearCaches empties every memo and unpersists every relation it held") {
+    // one id per memo reaches all 20; the registry count makes a memo
+    // that no listed id reaches fail here instead of slipping past
+    Seq("q_search_bm25", "q_search_pl2", "q_vsm_cosine", "q_doc_sim",
+      "q_basket_lift", "q_text_lang_id", "q_dedup_minhash_w",
+      "q_dedup_ngram", "q_contamination_bloom", "q_compact_files",
+      "q_sink_bucketed", "s_stream_tumbling", "s_stream_file",
+      "q_dedup_cluster").foreach(q =>
+        SparkEntry.queries(q)(spark, sf).collect())
+    val memos = Tables.registry
+    assert(memos.size == 20, s"expected 20 memos, found ${memos.size}")
+    assert(memos.forall(_.values.nonEmpty),
+      s"${memos.count(_.values.isEmpty)} memos hold no entry")
+    val held = memos.flatMap(_.values).collect { case ds: Dataset[_] => ds }
+    assert(held.exists(_.storageLevel != StorageLevel.NONE))
+    Tables.clearCaches(spark)
+    assert(memos.forall(_.values.isEmpty), "a memo kept its entry")
+    assert(held.forall(_.storageLevel == StorageLevel.NONE),
+      "a memoized relation is still cached after clearCaches")
   }
 }

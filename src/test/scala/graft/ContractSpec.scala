@@ -153,6 +153,51 @@ class ContractSpec extends SparkSpecBase {
           s"${root.toPath.relativize(f.toPath)}:${i + 1}" }
     }
 
+  /** `text` with its comments blanked to spaces (line breaks kept), so
+    * offsets and line numbers still match the file. */
+  private def stripComments(text: String): String =
+    """(?s)\"{3}.*?\"{3}|"(?:\\.|[^"\\\n])*"|'(?:\\.|[^'\\])'|//[^\n]*|/\*.*?\*/""".r
+      .replaceAllIn(text, m =>
+        if (m.matched.startsWith("/")) m.matched.replaceAll("[^\n]", " ")
+        else "$0")
+
+  test("session state is declared only through Tables.memo (source-level)") {
+    // A memo owns its key, its build lock, its owner and its release in
+    // clearCaches. A hand-rolled map in query code has none of them, and
+    // a .persist() outside a memo build pins a fresh copy on every
+    // invocation that nothing ever unpersists.
+    val main = new java.io.File(
+      sys.props.getOrElse("user.dir", "."), "src/main/scala/graft")
+    assume(main.isDirectory,
+      s"source tree not visible from ${sys.props.get("user.dir")}; " +
+        "skipping source-level memo scan")
+    val queryCode = Seq("queries", "streaming", "sources")
+      .flatMap(d => scalaFiles(new java.io.File(main, d)))
+    val maps = hits(main, queryCode, ("""\b(?:TrieMap|ConcurrentHashMap|""" +
+      """getOrElseUpdate|registerCache|registerAuxCache)\b""").r)
+    assert(maps.isEmpty, s"session state outside Tables.memo: $maps")
+    val persists = (queryCode :+ new java.io.File(main, "Tables.scala"))
+      .flatMap { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        val code = stripComments(try src.mkString finally src.close())
+        // the brace-matched body of each `memo {` build
+        val builds = """\bmemo \{""".r.findAllMatchIn(code).map { m =>
+          var depth = 0
+          val close = (m.end - 1 until code.length).find { i =>
+            if (code(i) == '{') depth += 1
+            else if (code(i) == '}') depth -= 1
+            depth == 0
+          }.getOrElse(code.length)
+          (m.end, close)
+        }.toSeq
+        """\.persist\(""".r.findAllMatchIn(code)
+          .filterNot(p => builds.exists { case (a, b) => a <= p.start && p.start < b })
+          .map(p => s"${main.toPath.relativize(f.toPath)}:" +
+            s"${code.take(p.start).count(_ == '\n') + 1}")
+      }
+    assert(persists.isEmpty, s".persist() outside a Tables.memo build: $persists")
+  }
+
   test("checkpoints and conf toggles go through Tables (source-level)") {
     // Tables.localCheckpoint records each pin in its owner and
     // Tables.withConf serializes session-conf toggles; a direct call in
